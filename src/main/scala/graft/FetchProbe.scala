@@ -75,12 +75,6 @@ object FetchProbe {
       // committed record would mislabel the evidence
       val path = s"$in/pairs_radj${ScalingBench.codecSuffix}"
       val adj = spark.read.parquet(path)
-      // prepared dirs written by pre-sidecar round-6 code carry no
-      // clustering sidecar; the table is ScalingBench's own (layout =
-      // ScalingBench.clustering by construction), so repair it rather than
-      // trip openClustered's fail-loud
-      AdjacencyFetcher.ensureSidecar(spark.sessionState.newHadoopConf(),
-        path, ScalingBench.clustering)
       val clustered = AdjacencyFetcher.openClustered(spark, path, ScalingBench.clustering)
       val plain = new AdjacencyFetcher(spark.read.parquet(path))
       hostCounts.foreach { hosts =>

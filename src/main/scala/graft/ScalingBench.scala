@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.frontier.{Frontier, CorpusFetcher, TableFetcher, UrlSeen}
+import graft.frontier.{Frontier, CorpusFetcher, UrlSeen}
 import graft.functions.gf
 import graft.sources.SynthDocs
 
@@ -67,9 +67,9 @@ object ScalingBench {
     def warmPairsAdj: String = warmPairs + "_adj"
     /** KEY-CLUSTERED adjacency layout (VERDICT r5 item 1) — the layout the
       * timed runs scan: RANGE-partitioned, globally key-sorted, 16 MB row
-      * groups, written by `AdjacencyFetcher.writeClustered` (range mode:
-      * SURT keys keep each host's rows contiguous, so budget-bounded
-      * batches push narrow per-interval predicates).
+      * groups, written by `AdjacencyFetcher.writeClustered` (SURT keys
+      * keep each host's rows contiguous, so budget-bounded batches push
+      * narrow per-interval predicates).
       */
     def pairsCAdj: String = pairs + "_radj" + codecSuffix
     def warmPairsCAdj: String = warmPairs + "_radj" + codecSuffix
@@ -84,12 +84,12 @@ object ScalingBench {
   val adjCodec: String = sys.env.getOrElse("SPARK_GRAFT_ADJ_CODEC", "zstd")
   def codecSuffix: String = if (adjCodec == "zstd") "" else "_" + adjCodec
 
-  /** The clustering the bench's link tables are written AND opened with —
-    * partition count must agree or the pushed envelopes prune nothing
-    * (still exact).
+  /** The clustering the bench's link tables are written AND opened with:
+    * 64 range partitions. Opening reads only the pruning thresholds from
+    * it; the pushed key intervals never reference the partition count.
     */
   val clustering: graft.frontier.AdjacencyFetcher.Clustering =
-    graft.frontier.AdjacencyFetcher.Clustering(buckets = 64, byRange = true)
+    graft.frontier.AdjacencyFetcher.Clustering(buckets = 64)
 
   /** A Hadoop conf carrying the session-independent spark.hadoop.* settings
     * (what SparkHadoopUtil appends for a real session) — lets the layout
@@ -126,14 +126,6 @@ object ScalingBench {
     def missing(p: String) = {
       val path = new Path(p, "_SUCCESS")
       !path.getFileSystem(hc).exists(path)
-    }
-    // clustered tables written by pre-sidecar round-6 code: _SUCCESS exists
-    // but the clustering sidecar is missing. This main IS their writer (the
-    // layout is `clustering` by construction), so repair the sidecar in
-    // place — a pure FS op, no session — instead of tripping openClustered's
-    // fail-loud contract or rewriting gigabytes of parquet
-    Seq(in.pairsCAdj, in.warmPairsCAdj).foreach { p =>
-      if (!missing(p)) AdjacencyFetcher.ensureSidecar(hc, p, clustering)
     }
     val needed = Seq(in.pairsAdj, in.warmPairsAdj, in.pairsCAdj, in.warmPairsCAdj)
       .exists(missing)

@@ -475,20 +475,20 @@ object SparkEntry {
     // A7 adjacency layout INSIDE the hash-checked crawl (VERDICT r4 item
     // 2, upgraded r6 per VERDICT r5 item 1): the identical 3-round crawl
     // routed through a KEY-CLUSTERED AdjacencyFetcher — the link table is
-    // WRITTEN range-clustered (`writeClustered` range mode: globally
-    // key-sorted row groups) and every round's fetch collects the
+    // WRITTEN range-clustered (`writeClustered`: globally key-sorted row
+    // groups) and every round's fetch collects the
     // budget-bounded batch, chunks it into key intervals and pushes them
     // into the parquet scan (the batches here are small, so the pruning
     // predicate is ACTIVE every round). Same oracle output as
     // q_frontier_log: a pruned row group that actually held a batch key, a
     // mis-ordered interval, or any row AdjacencyFetcher drops/duplicates
     // breaks this hash. FrontierSpec additionally pins byte-identical logs
-    // + seen sets across all five fetcher layouts.
+    // + seen sets across all four fetcher layouts.
     "q_frontier_adj" -> ((s, dir) => {
       import graft.frontier.{AdjacencyFetcher, CorpusFetcher}
       val path = java.nio.file.Files.createTempDirectory("graft_cadj").toString
       val log = frontierCrawl(s, dir, docs => {
-        val cl = AdjacencyFetcher.Clustering(buckets = 8, byRange = true)
+        val cl = AdjacencyFetcher.Clustering(buckets = 8)
         AdjacencyFetcher.writeClustered(
           AdjacencyFetcher.groupPairs(CorpusFetcher.pairsOf(docs)), path, cl)
         AdjacencyFetcher.openClustered(s, path, cl)

@@ -5,6 +5,10 @@ import java.nio.charset.StandardCharsets
 import java.util.Properties
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnPath
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,13 +35,11 @@ trait Fetcher extends Serializable {
   def fetch(selected: DataFrame, nSelected: Long): DataFrame = fetch(selected)
 }
 
-/** Closed-world fetcher over the interleaved-docs table. */
-class CorpusFetcher(docs: DataFrame) extends Fetcher {
-  /** (key = surt(doc url), outlink) pairs, precomputed once. */
-  val pairs: DataFrame = CorpusFetcher.pairsOf(docs).persist()
-  override def fetch(selected: DataFrame): DataFrame =
-    pairs.join(selected.select("key").distinct(), Seq("key"), "left_semi")
-}
+/** Closed-world fetcher over the interleaved-docs table: a [[TableFetcher]]
+  * over its (key = surt(doc url), outlink) pairs, precomputed once.
+  */
+class CorpusFetcher(docs: DataFrame)
+    extends TableFetcher(CorpusFetcher.pairsOf(docs).persist())
 
 object CorpusFetcher {
   /** The (key = surt(doc url), outlink) link-pair plan over the interleaved
@@ -61,7 +63,7 @@ object CorpusFetcher {
   * on disk) — the 100 TB shape: the link table is a scanned source, never an
   * executor-cached DataFrame, so no cluster size has to hold it on-heap.
   */
-class TableFetcher(pairs: DataFrame) extends Fetcher {
+class TableFetcher(val pairs: DataFrame) extends Fetcher {
   override def fetch(selected: DataFrame): DataFrame =
     pairs.join(selected.select("key").distinct(), Seq("key"), "left_semi")
 }
@@ -75,11 +77,9 @@ class TableFetcher(pairs: DataFrame) extends Fetcher {
   * batch. This is the same layout as the reference's BVGraph successor
   * lists (`Graph.java:160-166`) and our A8 adjacency table.
   *
-  * With `clustering` set (VERDICT r5 item 1), `adj` must be a KEY-CLUSTERED
-  * table written by [[AdjacencyFetcher.writeClustered]] — the same physical
-  * shape [[UrlSeen.append]] gives the seen-set key table (hash-bucket data
-  * column, `repartition(bucket).sortWithinPartitions(bucket, key)`) — and
-  * `fetch` derives the batch's per-bucket key envelopes and PUSHES them into
+  * With `clustering` set (VERDICT r5 item 1), `adj` should be the
+  * globally key-sorted table [[AdjacencyFetcher.writeClustered]] writes, and
+  * `fetch` derives the batch's per-host key intervals and PUSHES them into
   * the scan as a parquet min/max predicate, so row groups holding no batch
   * key are never read. This is the Spark analog of the reference's
   * offset-indexed point reads (`Graph.java:67-70,160-166`: `successors(id)`
@@ -97,16 +97,16 @@ class AdjacencyFetcher(adj: DataFrame,
 
   override def fetch(selected: DataFrame, nSelected: Long): DataFrame = {
     // a null key can never match the equality semi-join below — drop it up
-    // front so the driver-side interval/envelope derivations (getString,
+    // front so the driver-side interval derivation (getString,
     // host split) never see one
     val sel = selected.select("key").where(col("key").isNotNull).distinct()
     val pruned = clustering match {
       case None => adj
       case Some(cl) if nSelected >= 0 && nSelected > cl.maxPruneKeys =>
         // batch known dense up front — no static layout can prune it, so
-        // skip even the envelope derivation
+        // skip even the interval derivation
         adj
-      case Some(cl) if cl.byRange =>
+      case Some(cl) =>
         // collect the (budget-bounded) batch keys and push ONE interval per
         // SURT host — a host's keys are contiguous in the range layout, so
         // each interval is narrow. Superset proof: every batch key lies
@@ -145,8 +145,8 @@ class AdjacencyFetcher(adj: DataFrame,
             // e.g. two keys at opposite ends of one giant host cluster —
             // pass the count cap yet cover ~the whole key span: nothing
             // skips and every surviving row pays the OR evaluation. The
-            // span comes from the write-time sidecar; a legacy sidecar
-            // without it keeps the count-only guard.
+            // span comes from the table's parquet footers (openClustered);
+            // without it the count-only guard applies.
             val wide = cl.keySpan.exists(sp =>
               AdjacencyFetcher.intervalCoverage(intervals, sp)
                 .exists(_ > cl.maxCoverage))
@@ -156,24 +156,6 @@ class AdjacencyFetcher(adj: DataFrame,
             }.reduce(_ || _))
           }
         }
-      case Some(cl) =>
-        // hash-bucket mode: one driver-visible agg over the batch
-        // (≤ buckets rows cross to the driver) — the per-bucket key
-        // envelope of the keys the round actually needs
-        val stats = sel
-          .groupBy(UrlSeen.bucketOf(col("key"), cl.buckets).as("bucket"))
-          .agg(min("key").as("lo"), max("key").as("hi"), count(lit(1)).as("n"))
-          .collect()
-        val nKeys = stats.iterator.map(_.getAs[Long]("n")).sum
-        if (stats.isEmpty) adj.filter(lit(false))
-        else if (nKeys > cl.maxPruneKeys || stats.length > cl.maxPredicateBuckets) adj
-        else adj.filter(stats.iterator.map { r =>
-          // provably a superset of the batch: every batch key k satisfies
-          // its own bucket's term (lo ≤ k ≤ hi by construction), so the
-          // exact semi-join below sees every matching adjacency row
-          col("bucket") === r.getAs[Int]("bucket") &&
-            col("key") >= r.getAs[String]("lo") && col("key") <= r.getAs[String]("hi")
-        }.reduce(_ || _))
     }
     pruned.join(sel, Seq("key"), "left_semi")
       .select(col("key"), explode(col("outlinks")).as("outlink"))
@@ -185,42 +167,23 @@ object AdjacencyFetcher {
   /** Clustering contract + adaptive-pruning thresholds of a key-clustered
     * adjacency table.
     *
-    * Two layouts:
-    *  - `byRange = true` (the crawl's PRIMARY layout): the table is
-    *    range-partitioned and sorted by `key` alone — globally key-sorted.
-    *    SURT keys sort host-first, so a host's rows are CONTIGUOUS, and a
-    *    politeness-bounded fetch batch (k URLs from each of H hosts) covers
-    *    H narrow key intervals. `fetch` collects the batch's keys (bounded
-    *    by `maxPruneKeys`), builds ONE interval per SURT host in
-    *    UTF8-binary order (the ordering Spark and parquet stats use — Java
-    *    String ordering differs beyond ASCII and would break the superset
-    *    guarantee) and pushes the OR of `key BETWEEN lo AND hi` terms —
-    *    row groups outside every interval are skipped. Applied only while
-    *    the batch touches ≤ `maxPredicateBuckets` host clusters: beyond
-    *    that the intervals rival the table's row-group count, so nothing
-    *    skips and the retained per-row OR evaluation only adds cost.
-    *  - `byRange = false`: hash-bucket layout, the seen-set's physical
-    *    shape (`UrlSeen.append`) — bucket data column,
-    *    `repartition(bucket).sortWithinPartitions(bucket, key)`, per-bucket
-    *    envelopes pushed as `(bucket = b AND key BETWEEN lo AND hi)`.
-    *    Useful when the adjacency table must co-partition with the
-    *    seen-set's bucketing; for FETCH pruning it is strictly weaker —
-    *    hashing scatters a host-clustered batch across every bucket, so
-    *    each bucket's envelope goes wide exactly when the batch is
-    *    host-local. Kept for layout parity, tested equally.
+    * The layout is range-partitioned (`buckets` partitions) and sorted by
+    * `key` alone — globally key-sorted. SURT keys sort host-first, so a
+    * host's rows are CONTIGUOUS, and a politeness-bounded fetch batch (k
+    * URLs from each of H hosts) covers H narrow key intervals. `fetch`
+    * collects the batch's keys (bounded by `maxPruneKeys`), builds ONE
+    * interval per SURT host in UTF8-binary order (the ordering Spark and
+    * parquet stats use — Java String ordering differs beyond ASCII and would
+    * break the superset guarantee) and pushes the OR of `key BETWEEN lo AND
+    * hi` terms — row groups outside every interval are skipped. Applied
+    * only while the batch touches ≤ `maxPredicateBuckets` host clusters:
+    * beyond that the intervals rival the table's row-group count, so nothing
+    * skips and the retained per-row OR evaluation only adds cost.
     *
-    * `buckets`/`byRange` must match the values the table was written with
-    * ([[writeClustered]]). In RANGE mode a mismatch only loses pruning (the
-    * interval predicate never references the write-time partitioning). In
-    * HASH mode a bucket-count mismatch is NOT safe: the pushed
-    * `bucket === pmod(xxhash64(key), B)` terms use the reader's B against
-    * the writer's stored column, so rows silently fall outside every term
-    * and the fetch DROPS them. [[writeClustered]] therefore persists the
-    * clustering in a `_graft_clustering.json` sidecar and [[openClustered]]
-    * trusts the sidecar over the caller for `buckets`/`byRange` (caller
-    * thresholds kept) — and fails loudly when the sidecar is missing;
-    * tables written by other pipelines must be opened by constructing the
-    * fetcher directly with their known layout.
+    * The pushed predicate references only `key`, so it is a superset filter
+    * ahead of the exact semi-join on ANY physical layout: a reader whose
+    * `buckets` differs from the writer's, or a table that is not key-sorted
+    * at all, loses pruning, never rows.
     *
     * The thresholds encode when pruning can possibly pay: a batch of m
     * uniformly-spread keys over G row groups touches ~G·(1−e^(−m/G)) of
@@ -228,27 +191,33 @@ object AdjacencyFetcher {
     * and only adds a per-row OR evaluation above the scan — skip it.
     * `maxPruneKeys` bounds m (default 64k: far above any interactive batch,
     * below the corpus-dense bench batches; also the cap on the driver-side
-    * key collect in range mode, ~3 MB); `maxPredicateBuckets` bounds the
-    * pushed OR tree — both the number of intervals that must stay well
-    * under the table's row-group count for skipping to win, and the
-    * per-surviving-row cost of the retained filter re-evaluation.
+    * key collect, ~3 MB); `maxPredicateBuckets` bounds the pushed OR tree —
+    * both the number of intervals that must stay well under the table's
+    * row-group count for skipping to win, and the per-surviving-row cost of
+    * the retained filter re-evaluation.
     *
     * `maxCoverage` guards the OTHER degenerate shape (VERDICT r6 item 6): a
     * batch touching FEW host clusters whose intervals are individually WIDE
     * — together covering most of the key space — prunes nothing while still
     * paying the per-row OR evaluation on every surviving row. Interval
-    * coverage is estimated against the table's key span (`keySpan`, recorded
-    * in the sidecar at write time) via an 8-byte UTF8 prefix proxy; above
-    * the fraction the fetch takes the plain scan. Heuristic only — the
-    * pushed predicate is a superset of the batch either way, so a mis-
-    * estimate costs performance, never rows.
+    * coverage is estimated against the table's key span (`keySpan`, read
+    * from the parquet footers by [[openClustered]]) via an 8-byte UTF8
+    * prefix proxy; above the fraction the fetch takes the plain scan.
+    * Heuristic only — the pushed predicate is a superset of the batch either
+    * way, so a mis-estimate costs performance, never rows.
+    *
+    * `byRange` is kept only so existing callers that pass `byRange = true`
+    * still compile; range is the only layout and `false` is rejected. The
+    * parameter goes away with the next change to the benchmark sources.
     */
   final case class Clustering(buckets: Int = 64,
                               maxPruneKeys: Long = 1L << 16,
                               maxPredicateBuckets: Int = 64,
-                              byRange: Boolean = false,
+                              byRange: Boolean = true,
                               maxCoverage: Double = 0.5,
-                              keySpan: Option[(String, String)] = None)
+                              keySpan: Option[(String, String)] = None) {
+    require(byRange, "byRange = false is not supported: range is the only adjacency layout")
+  }
 
   /** Group a flat (key, outlink) pairs table into adjacency layout. */
   def groupPairs(pairs: DataFrame): DataFrame =
@@ -303,31 +272,16 @@ object AdjacencyFetcher {
       math.max(0.0, v(hi) - v(lo)) }.sum / den)
   }
 
-  /** The key-clustered physical plan of an adjacency table.
-    *
-    * Range mode (primary): range-partition + sort by `key` — a globally
-    * key-sorted table whose row-group min/max stats on `key` line up with
-    * the per-interval predicates [[AdjacencyFetcher.fetch]] pushes, and
-    * whose host-contiguous rows compress better (shared SURT prefixes).
-    *
-    * Hash mode: bucket data column, one shuffle partition per bucket, rows
-    * sorted by (bucket, key) within files — exactly the seen-set's layout
-    * (`UrlSeen.append`). `bucket` stays a DATA column (not a directory
-    * partition) for the same reason as UrlSeen's: row-group stats give the
-    * same skipping without directory explosion, and the pushed predicate
-    * mixes bucket and key in one OR tree that only data-column pushdown can
-    * evaluate.
+  /** The key-clustered physical plan of an adjacency table: range-partition
+    * + sort by `key` — a globally key-sorted table whose row-group min/max
+    * stats on `key` line up with the per-interval predicates
+    * [[AdjacencyFetcher.fetch]] pushes, and whose host-contiguous rows
+    * compress better (shared SURT prefixes).
     */
   def clusterAdjacency(adj: DataFrame, clustering: Clustering): DataFrame =
-    if (clustering.byRange)
-      adj.select(col("key"), col("outlinks"))
-        .repartitionByRange(clustering.buckets, col("key"))
-        .sortWithinPartitions("key")
-    else
-      adj.select(UrlSeen.bucketOf(col("key"), clustering.buckets).as("bucket"),
-          col("key"), col("outlinks"))
-        .repartition(col("bucket"))
-        .sortWithinPartitions("bucket", "key")
+    adj.select(col("key"), col("outlinks"))
+      .repartitionByRange(clustering.buckets, col("key"))
+      .sortWithinPartitions("key")
 
   /** Write `adj` (any (key, outlinks) table) key-clustered at `path`.
     * `rowGroupBytes` (parquet block size) is the skip granularity: smaller
@@ -342,135 +296,53 @@ object AdjacencyFetcher {
   def writeClustered(adj: DataFrame, path: String,
                      clustering: Clustering = Clustering(),
                      rowGroupBytes: Long = 16L << 20,
-                     codec: String = "zstd"): Unit = {
+                     codec: String = "zstd"): Unit =
     clusterAdjacency(adj, clustering)
       .write.mode("overwrite")
       .option("parquet.block.size", rowGroupBytes.toString)
       .option("compression", codec)
       .parquet(path)
-    // record the table's key span for the fetch-side coverage guard (Spark's
-    // min/max on strings use UTF8 binary order — the same order the pushed
-    // intervals and utf8Lt use). Read back from the just-written table: one
-    // scan of the clustered output instead of a second pass over the input
-    // plan, and trivially consistent with what was committed.
-    val mm = adj.sparkSession.read.parquet(path)
-      .agg(min(col("key")), max(col("key"))).head
-    val span = if (mm.isNullAt(0)) None else Some((mm.getString(0), mm.getString(1)))
-    // self-describing layout: persist the clustering beside the data (the
-    // underscore prefix keeps it invisible to parquet listings) so open
-    // cannot silently mis-bucket (hash mode drops rows on a mismatch)
-    writeSidecar(adj.sparkSession.sessionState.newHadoopConf(), path,
-      clustering.copy(keySpan = span))
-  }
 
-  /** Write (or repair) the clustering sidecar of a table at `path` whose
-    * physical layout is KNOWN to be `clustering` — called by
-    * [[writeClustered]] itself, and by table owners backfilling tables they
-    * wrote before the sidecar existed (asserting a wrong layout here
-    * re-opens the hash-mode row-drop hole, so only the writer may call it).
-    * Written tmp-then-rename: a crash mid-write leaves NO sidecar
-    * ([[openClustered]] then fails loudly), never a torn one that parses to
-    * the wrong layout.
-    */
-  def writeSidecar(hc: org.apache.hadoop.conf.Configuration, path: String,
-                   clustering: Clustering): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, sidecarName)
-    val fs = p.getFileSystem(hc)
-    val tmp = new org.apache.hadoop.fs.Path(path, sidecarName + ".tmp")
-    val out = fs.create(tmp, true)
-    // key span carried base64-encoded: SURT keys are arbitrary bytes and the
-    // sidecar parser is a regex — base64 needs no JSON string escaping
-    val spanJson = clustering.keySpan.map { case (lo, hi) =>
-      val e = java.util.Base64.getEncoder
-      s""","keyMinB64":"${e.encodeToString(lo.getBytes("UTF-8"))}"""" +
-        s""","keyMaxB64":"${e.encodeToString(hi.getBytes("UTF-8"))}""""
-    }.getOrElse("")
-    try out.write(
-      s"""{"buckets":${clustering.buckets},"byRange":${clustering.byRange}$spanJson}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-    // many Hadoop FileSystems signal delete/rename failure by RETURNING
-    // false, not throwing — a swallowed false here would leave the table
-    // sidecar-less and shift the blame to a later openClustered (ADVICE r6)
-    if (fs.exists(p) && !fs.delete(p, false))
-      throw new java.io.IOException(s"could not delete stale sidecar $p")
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"could not rename $tmp to $p")
-  }
-
-  /** Whether the table at `path` carries a clustering sidecar. */
-  def hasSidecar(hc: org.apache.hadoop.conf.Configuration, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path, sidecarName)
-    p.getFileSystem(hc).exists(p)
-  }
-
-  /** Backfill a missing sidecar on a table whose layout the CALLER wrote
-    * (pre-sidecar prepared dirs): writer-only, same contract as
-    * [[writeSidecar]] — asserting a layout the caller did not write
-    * re-opens the hash-mode row-drop hole.
-    */
-  def ensureSidecar(hc: org.apache.hadoop.conf.Configuration, path: String,
-                    clustering: Clustering): Unit =
-    if (!hasSidecar(hc, path)) writeSidecar(hc, path, clustering)
-
-  private val sidecarName = "_graft_clustering.json"
-
-  /** Open a table written by [[writeClustered]] as a pruning fetcher. The
-    * `_graft_clustering.json` sidecar overrides the caller's
-    * `buckets`/`byRange` (it records what the table IS); the caller's
-    * pruning thresholds are kept. A MISSING sidecar fails loudly: trusting
-    * the caller instead would re-open the silent hash-mode row-drop hole
-    * the sidecar exists to close (a bucket-count mismatch prunes rows the
-    * semi-join needs). A table that genuinely has no sidecar (written by
-    * some other pipeline) must be opened explicitly with
-    * `new AdjacencyFetcher(spark.read.parquet(path), Some(clustering))`,
-    * asserting its layout at the call site.
+  /** Open a table written by [[writeClustered]] as a pruning fetcher, with
+    * the caller's thresholds and the table's key span taken from its
+    * parquet footers. Any other (key, outlinks) parquet table opens too: the
+    * pushed intervals are a superset filter on every layout, so an unsorted
+    * table fetches exactly, only without skipping.
     */
   def openClustered(spark: SparkSession, path: String,
                     clustering: Clustering = Clustering()): AdjacencyFetcher = {
-    val hc = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path, sidecarName)
-    val fs = p.getFileSystem(hc)
-    val cl =
-      if (!fs.exists(p))
-        throw new IllegalStateException(
-          s"$path has no $sidecarName sidecar — not written by " +
-            "AdjacencyFetcher.writeClustered (or its write was interrupted " +
-            "after the parquet commit). Rewrite it, or open it with an " +
-            "explicit `new AdjacencyFetcher(df, Some(clustering))` if the " +
-            "layout is known out-of-band.")
-      else {
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                  finally in.close()
-        // a present-but-unparsable sidecar is treated like a MISSING one
-        // (fail loudly): getOrElse-defaulting to the caller's layout would
-        // re-open the silent hash-mode bucket-mismatch row-drop hole the
-        // sidecar exists to close (ADVICE r6)
-        def field(name: String): String =
-          ("\"" + name + "\"\\s*:\\s*([0-9a-z]+)").r
-            .findFirstMatchIn(txt).map(_.group(1))
-            .getOrElse(throw new IllegalStateException(
-              s"$p is unparsable (no `$name` field): $txt — rewrite the " +
-                "table, or open it with an explicit " +
-                "`new AdjacencyFetcher(df, Some(clustering))` if the layout " +
-                "is known out-of-band."))
-        // key span is OPTIONAL (pre-coverage-guard sidecars lack it): its
-        // absence only disables the coverage heuristic, never correctness
-        def optB64(name: String): Option[String] =
-          ("\"" + name + "\"\\s*:\\s*\"([A-Za-z0-9+/=]*)\"").r
-            .findFirstMatchIn(txt).map(m => new String(
-              java.util.Base64.getDecoder.decode(m.group(1)), "UTF-8"))
-        try clustering.copy(
-          buckets = field("buckets").toInt,
-          byRange = field("byRange").toBoolean,
-          keySpan = for (a <- optB64("keyMinB64"); b <- optB64("keyMaxB64"))
-            yield (a, b))
-        catch { case e: IllegalArgumentException => // toInt / toBoolean / base64
-          throw new IllegalStateException(s"$p carries a malformed value: $txt", e)
-        }
-      }
-    new AdjacencyFetcher(spark.read.parquet(path), Some(cl))
+    val adj = spark.read.parquet(path)
+    new AdjacencyFetcher(adj, Some(clustering.copy(keySpan = footerKeySpan(adj))))
+  }
+
+  /** The [min, max] of `key` over every row group of `adj`'s files, from the
+    * footer statistics (one footer read per file, no data scan), compared in
+    * UTF8-binary order — the order parquet writes string stats in. None when
+    * a row group holding non-null keys carries no `key` min/max: the
+    * coverage guard is then off, which costs speed, never rows.
+    */
+  def footerKeySpan(adj: DataFrame): Option[(String, String)] = {
+    val hc = adj.sparkSession.sessionState.newHadoopConf()
+    // explicit options: the default ones build a fresh Hadoop Configuration
+    // per file (~10 ms each on a local disk)
+    val opts = HadoopReadOptions.builder(hc).build()
+    val key = ColumnPath.get("key")
+    val groups = adj.inputFiles.toSeq.flatMap { f =>
+      val in = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(new java.net.URI(f)), hc), opts)
+      try in.getFooter.getBlocks.asScala.toSeq.map(b => (b.getRowCount,
+        b.getColumns.asScala.find(_.getPath == key).map(_.getStatistics).orNull))
+      finally in.close()
+    }
+    def utf8(b: Array[Byte]) = new String(b, StandardCharsets.UTF_8)
+    // a row group of only null keys legitimately has no min/max
+    val known = groups.forall { case (rows, st) => st != null &&
+      (st.hasNonNullValue || st.isNumNullsSet && st.getNumNulls == rows) }
+    if (!known) None
+    else groups.collect { case (_, st) if st.hasNonNullValue =>
+        (utf8(st.getMinBytes), utf8(st.getMaxBytes)) }
+      .reduceOption((a, b) => (if (utf8Lt(b._1, a._1)) b._1 else a._1,
+                               if (utf8Lt(a._2, b._2)) b._2 else a._2))
   }
 }
 
@@ -599,6 +471,9 @@ object Frontier {
     props.setProperty("removed", st.removed.toString)
     props.setProperty("log", st.log.toString)
     props.setProperty("logRows", st.logRows.toString)
+    // the seen-set bucket count the state tables are laid out with — `run`
+    // refuses a config that disagrees (see checkBuckets)
+    props.setProperty("buckets", c.seenCfg.buckets.toString)
     counters.foreach { case (k, v) => props.setProperty(s"counter.$k", v.toString) }
     val p = markerPath(c, st.round)
     val tmp = new Path(p.toString + ".tmp")
@@ -609,40 +484,48 @@ object Frontier {
     f.rename(tmp, p) // atomic commit of the round
   }
 
-  private def readMarker(spark: SparkSession, c: Config, round: Int): Option[State] = {
+  private def readProps(spark: SparkSession, c: Config, round: Int): Option[Properties] = {
     val f = fs(spark, c)
     val p = markerPath(c, round)
     if (!f.exists(p)) return None
     val in = new BufferedReader(new InputStreamReader(f.open(p), StandardCharsets.UTF_8))
-    try {
-      val props = new Properties()
-      props.load(in)
-      Some(State(props.getProperty("round").toInt, props.getProperty("seen").toLong,
+    val props = new Properties()
+    try props.load(in) finally in.close()
+    Some(props)
+  }
+
+  private def readMarker(spark: SparkSession, c: Config, round: Int): Option[State] =
+    readProps(spark, c, round).map(props =>
+      State(props.getProperty("round").toInt, props.getProperty("seen").toLong,
         props.getProperty("pending").toLong,
         props.getProperty("removed", "0").toLong,
         props.getProperty("log").toLong,
         props.getProperty("logRows").toLong))
-    } finally in.close()
-  }
 
   /** State pinned by a specific round's marker (round -1 = init). */
   def lastCommittedAt(spark: SparkSession, c: Config, round: Int): Option[State] =
     readMarker(spark, c, round)
 
   /** The counters a round's marker recorded (selected, candidates, new_urls). */
-  def markerCounters(spark: SparkSession, c: Config, round: Int): Map[String, Long] = {
-    val f = fs(spark, c)
-    val p = markerPath(c, round)
-    if (!f.exists(p)) return Map.empty
-    val in = new BufferedReader(new InputStreamReader(f.open(p), StandardCharsets.UTF_8))
-    try {
-      val props = new Properties()
-      props.load(in)
+  def markerCounters(spark: SparkSession, c: Config, round: Int): Map[String, Long] =
+    readProps(spark, c, round).fold(Map.empty[String, Long])(props =>
       props.stringPropertyNames().asScala
         .filter(_.startsWith("counter."))
-        .map(k => k.stripPrefix("counter.") -> props.getProperty(k).toLong).toMap
-    } finally in.close()
-  }
+        .map(k => k.stripPrefix("counter.") -> props.getProperty(k).toLong).toMap)
+
+  /** Fail loudly when `c.seenCfg.buckets` differs from the bucket count the
+    * state was initialized with: the seen set, `pending` and
+    * `pending_removed` store `bucket = pmod(xxhash64(key), P)`, and the
+    * `(bucket, key)` anti-joins under another P would silently resurrect
+    * already-selected URLs. An init marker without the property (written
+    * before it was recorded) is accepted.
+    */
+  private def checkBuckets(spark: SparkSession, c: Config): Unit =
+    readProps(spark, c, -1).flatMap(p => Option(p.getProperty("buckets"))).foreach { b =>
+      if (b.toInt != c.seenCfg.buckets)
+        throw new IllegalStateException(s"frontier at ${c.rootDir} was initialized " +
+          s"with seenCfg.buckets = $b, this run uses ${c.seenCfg.buckets}")
+    }
 
   /** Highest committed round marker (-1 = just initialized). One directory
     * listing, not a per-round existence probe — a long crawl's resume would
@@ -954,6 +837,7 @@ object Frontier {
           budgets: DataFrame, robots: DataFrame, priorities: DataFrame): State = {
     var st = lastCommitted(spark, c)
       .getOrElse(throw new IllegalStateException("frontier not initialized"))
+    checkBuckets(spark, c)
     // budgets/robots/priorities are referenced by EVERY round's selection
     // windows, robots filter and canonicalize joins — and when the caller
     // hands in derived plans (e.g. budgetsWithRobots over parsed bodies),

@@ -6,12 +6,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.frontier.AdjacencyFetcher
+import graft.frontier.{AdjacencyFetcher, UrlSeen}
 
-/** The key-clustered adjacency layouts (VERDICT r5 item 1): the fetcher must
-  * stay EXACT under pruning (superset predicate + semi-join) in BOTH modes
-  * (range = globally key-sorted intervals; hash = seen-set-shaped bucket
-  * envelopes), and the pushed predicates must physically SKIP row groups —
+/** The key-clustered adjacency layout (VERDICT r5 item 1): the fetcher must
+  * stay EXACT under pruning (superset predicate + semi-join) on the range
+  * layout AND on tables that are not range-clustered at all, and the pushed
+  * predicates must physically SKIP row groups —
   * the Spark analog of the reference's offset-indexed successor point reads
   * (`Graph.java:160-166`), proven here by the scan node's output-row metric,
   * not by plan text.
@@ -29,15 +29,13 @@ class ClusteredAdjSpec extends AnyFunSuite {
     array(concat(lit("https://t.example/a"), col("id")),
           concat(lit("https://t.example/b"), col("id"))).as("outlinks"))
 
-  private def clusteringOf(byRange: Boolean) =
-    AdjacencyFetcher.Clustering(buckets = 16, byRange = byRange)
+  private val cl = AdjacencyFetcher.Clustering(buckets = 16)
 
-  private lazy val paths: Map[Boolean, String] = Seq(true, false).map { m =>
+  private lazy val path: String = {
     val p = Files.createTempDirectory("graft_cadj_spec").toString + "/adj"
-    AdjacencyFetcher.writeClustered(adjFlat, p, clusteringOf(m),
-      rowGroupBytes = 64L << 10)
-    m -> p
-  }.toMap
+    AdjacencyFetcher.writeClustered(adjFlat, p, cl, rowGroupBytes = 64L << 10)
+    p
+  }
 
   private def batchOf(ids: Long*): DataFrame =
     ids.toDF("id").select(
@@ -65,54 +63,35 @@ class ClusteredAdjSpec extends AnyFunSuite {
     rows.sum
   }
 
-  test("sidecar (r6): open with a WRONG bucket count is corrected — hash mode would drop rows") {
-    // the hash-mode predicate compares the stored bucket column against
-    // pmod(xxhash64(key), reader's B): with a mismatched B most keys match
-    // no OR term and the fetch silently loses their adjacency rows — the
-    // sidecar written by writeClustered must override the caller
-    val written = clusteringOf(byRange = false) // buckets = 16
-    val p = Files.createTempDirectory("graft_cadj_side").toString + "/adj"
-    AdjacencyFetcher.writeClustered(adjFlat, p, written, rowGroupBytes = 64L << 10)
-    val wrong = written.copy(buckets = 7)
-    val f = AdjacencyFetcher.openClustered(spark, p, wrong)
-    val batch = batchOf(5L, 77777L, 123456L)
-    assert(fetched(f, batch) == fetched(new AdjacencyFetcher(adjFlat), batch))
-    // and a null key in the batch is ignored, not an NPE (range mode
-    // collects keys driver-side)
-    val range = AdjacencyFetcher.openClustered(spark, paths(true), clusteringOf(true))
-    val withNull = batchOf(5L).unionByName(
-      Seq((null: String, "u")).toDF("key", "url"))
-    assert(fetched(range, withNull) ==
-      Set(("https://example.org/k00000005", "https://t.example/a5"),
-          ("https://example.org/k00000005", "https://t.example/b5")))
+  test("openClustered on a table that is not range-clustered fetches exactly the unpruned rows") {
+    // the pushed intervals reference only `key`, so on any physical layout
+    // they are a superset filter ahead of the exact semi-join: an unsorted
+    // table, or a legacy hash-bucket table carrying a stale clustering
+    // sidecar, loses pruning, never rows
+    val unsorted = Files.createTempDirectory("graft_cadj_plain").toString + "/adj"
+    adjFlat.orderBy(xxhash64(col("key"))).write.parquet(unsorted)
+    val legacy = Files.createTempDirectory("graft_cadj_hash").toString + "/adj"
+    adjFlat.select(UrlSeen.bucketOf(col("key"), 16).as("bucket"),
+        col("key"), col("outlinks"))
+      .repartition(col("bucket")).sortWithinPartitions("bucket", "key")
+      .write.option("parquet.block.size", (64L << 10).toString).parquet(legacy)
+    Files.writeString(new java.io.File(legacy, "_graft_clustering.json").toPath,
+      """{"buckets":7,"byRange":false}""")
+    val plain = new AdjacencyFetcher(adjFlat)
+    for (p <- Seq(unsorted, legacy)) {
+      val f = AdjacencyFetcher.openClustered(spark, p, cl)
+      for (batch <- Seq(batchOf(5L, 77777L, 123456L, n + 50),
+                        batchOf(100000L to 100004L: _*), batchOf()))
+        assert(fetched(f, batch) == fetched(plain, batch), s"$p diverged")
+    }
   }
 
-  test("a missing sidecar fails open loudly; a huge maxPruneKeys clamps instead of overflowing") {
-    // an interrupted writeClustered (parquet committed, sidecar never
-    // renamed in) must NOT fall back to trusting the caller's layout — in
-    // hash mode a mismatched bucket count silently drops adjacency rows
-    val p = Files.createTempDirectory("graft_cadj_nosc").toString + "/adj"
-    AdjacencyFetcher.writeClustered(adjFlat, p, clusteringOf(byRange = true),
-      rowGroupBytes = 64L << 10)
-    assert(new java.io.File(p, "_graft_clustering.json").delete())
-    val err = intercept[IllegalStateException] {
-      AdjacencyFetcher.openClustered(spark, p, clusteringOf(byRange = true))
-    }
-    assert(err.getMessage.contains("_graft_clustering.json"))
-    // the documented escape hatch for layouts known out-of-band still works
-    val explicit = new AdjacencyFetcher(spark.read.parquet(p),
-      Some(clusteringOf(byRange = true)))
-    val batch = batchOf(5L, 77777L)
-    assert(fetched(explicit, batch) == fetched(new AdjacencyFetcher(adjFlat), batch))
-    // "disable the cap" the natural way: a Long threshold past Int range
-    // must degrade to unlimited-collect semantics, not limit(negative)
-    val uncapped = AdjacencyFetcher.openClustered(spark, paths(true),
-      clusteringOf(byRange = true).copy(maxPruneKeys = Long.MaxValue))
-    assert(fetched(uncapped, batch) == fetched(new AdjacencyFetcher(adjFlat), batch))
+  test("Clustering(byRange = false) is rejected: range is the only layout") {
+    intercept[IllegalArgumentException](AdjacencyFetcher.Clustering(byRange = false))
+    intercept[IllegalArgumentException](cl.copy(byRange = false))
   }
 
   test("codec arm (r6): a snappy-written layout is really snappy, stays exact, still prunes") {
-    val cl = clusteringOf(byRange = true)
     val p = Files.createTempDirectory("graft_cadj_codec").toString + "/adj"
     AdjacencyFetcher.writeClustered(adjFlat, p, cl, rowGroupBytes = 64L << 10,
       codec = "snappy")
@@ -139,17 +118,16 @@ class ClusteredAdjSpec extends AnyFunSuite {
   test("coverage guard (r7): few-but-WIDE intervals choose the plain scan; narrow ones still prune") {
     // a batch passing the interval-COUNT cap can still cover ~the whole key
     // span (two keys at opposite ends of one giant host cluster): pushing
-    // that interval skips nothing and pays the per-row OR — the write-time
-    // keySpan in the sidecar lets fetch estimate coverage and skip the
-    // predicate (VERDICT r6 item 6)
+    // that interval skips nothing and pays the per-row OR — the keySpan
+    // openClustered reads from the parquet footers lets fetch estimate
+    // coverage and skip the predicate (VERDICT r6 item 6)
     val m = 50000L
     val oneHost = spark.range(m).select(
       format_string("com,widehost)/page/%08d", col("id")).as("key"),
       array(concat(lit("https://t.example/x"), col("id"))).as("outlinks"))
     val p = Files.createTempDirectory("graft_cadj_cov").toString + "/adj"
-    AdjacencyFetcher.writeClustered(oneHost, p,
-      clusteringOf(byRange = true), rowGroupBytes = 64L << 10)
-    val f = AdjacencyFetcher.openClustered(spark, p, clusteringOf(byRange = true))
+    AdjacencyFetcher.writeClustered(oneHost, p, cl, rowGroupBytes = 64L << 10)
+    val f = AdjacencyFetcher.openClustered(spark, p, cl)
     def keysOf(ids: Long*): DataFrame = ids.toDF("id").select(
       format_string("com,widehost)/page/%08d", col("id")).as("key"))
     def pushedIntervalFilters(batch: DataFrame): Boolean = {
@@ -175,50 +153,68 @@ class ClusteredAdjSpec extends AnyFunSuite {
       "wide interval was pushed — the coverage guard did not fire")
     assert(fetched(f, wide.withColumn("url", lit("u"))) ==
       fetched(new AdjacencyFetcher(oneHost), wide.withColumn("url", lit("u"))))
-    // the write-time sidecar actually carries the span the guard consumed
-    val sidecar = Files.readString(
-      new java.io.File(p, "_graft_clustering.json").toPath)
-    assert(sidecar.contains("keyMinB64") && sidecar.contains("keyMaxB64"),
-      s"sidecar lacks the key span: $sidecar")
+    // the span the guard consumed is the table's exact key span: the
+    // footer min/max equals a full scan's min/max(key)
+    val table = spark.read.parquet(p)
+    val mm = table.agg(min("key"), max("key")).head
+    assert(AdjacencyFetcher.footerKeySpan(table) ==
+      Some((mm.getString(0), mm.getString(1))))
+    // without key statistics the span is unknown: the guard is off, the
+    // wide interval is pushed, and the fetch stays exact
+    val noStats = Files.createTempDirectory("graft_cadj_nostats").toString + "/adj"
+    AdjacencyFetcher.clusterAdjacency(oneHost, cl)
+      .write.option("parquet.column.statistics.enabled", "false").parquet(noStats)
+    assert(AdjacencyFetcher.footerKeySpan(spark.read.parquet(noStats)).isEmpty)
+    assert(fetched(AdjacencyFetcher.openClustered(spark, noStats, cl),
+        wide.withColumn("url", lit("u"))) ==
+      fetched(new AdjacencyFetcher(oneHost), wide.withColumn("url", lit("u"))))
   }
 
-  for (byRange <- Seq(true, false)) {
-    val mode = if (byRange) "range" else "hash"
-    val cl = clusteringOf(byRange)
+  test("[range] pruned fetch is exact: parity with unclustered, missing keys, dups, empty") {
+    val plain = new AdjacencyFetcher(adjFlat)
+    val clustered = AdjacencyFetcher.openClustered(spark, path, cl)
+    // scattered keys + one key absent from adj + a duplicate selected key
+    val batch = batchOf(5L, 77777L, 123456L, 123456L, n + 50)
+    val exp = fetched(plain, batch)
+    assert(exp.map(_._1) == Set(
+      "https://example.org/k00000005", "https://example.org/k00077777",
+      "https://example.org/k00123456"))
+    assert(fetched(clustered, batch) == exp)
+    // dense fallback (hint above maxPruneKeys) and forced-skip config: same rows
+    assert(fetched(clustered, batch, hint = cl.maxPruneKeys + 1) == exp)
+    val noPrune = AdjacencyFetcher.openClustered(spark, path,
+      cl.copy(maxPruneKeys = 0))
+    assert(fetched(noPrune, batch) == exp)
+    // "disable the cap" the natural way: a Long threshold past Int range
+    // must degrade to unlimited-collect semantics, not limit(negative)
+    val uncapped = AdjacencyFetcher.openClustered(spark, path,
+      cl.copy(maxPruneKeys = Long.MaxValue))
+    assert(fetched(uncapped, batch) == exp)
+    // a fetcher constructed directly over the table (no footer key span)
+    val explicit = new AdjacencyFetcher(spark.read.parquet(path), Some(cl))
+    assert(fetched(explicit, batch) == exp)
+    // a null key in the batch is ignored, not an NPE (the keys are
+    // collected driver-side)
+    val withNull = batchOf(5L).unionByName(
+      Seq((null: String, "u")).toDF("key", "url"))
+    assert(fetched(clustered, withNull) ==
+      Set(("https://example.org/k00000005", "https://t.example/a5"),
+          ("https://example.org/k00000005", "https://t.example/b5")))
+    // empty batch
+    assert(fetched(clustered, batchOf()) == Set.empty)
+  }
 
-    test(s"[$mode] pruned fetch is exact: parity with unclustered, missing keys, dups, empty") {
-      val plain = new AdjacencyFetcher(adjFlat)
-      val clustered = AdjacencyFetcher.openClustered(spark, paths(byRange), cl)
-      // scattered keys + one key absent from adj + a duplicate selected key
-      val batch = batchOf(5L, 77777L, 123456L, 123456L, n + 50)
-      val exp = fetched(plain, batch)
-      assert(exp.map(_._1) == Set(
-        "https://example.org/k00000005", "https://example.org/k00077777",
-        "https://example.org/k00123456"))
-      assert(fetched(clustered, batch) == exp)
-      // dense fallback (hint above maxPruneKeys) and forced-skip config: same rows
-      assert(fetched(clustered, batch, hint = cl.maxPruneKeys + 1) == exp)
-      val noPrune = AdjacencyFetcher.openClustered(spark, paths(byRange),
-        cl.copy(maxPruneKeys = 0))
-      assert(fetched(noPrune, batch) == exp)
-      // empty batch
-      assert(fetched(clustered, batchOf()) == Set.empty)
-    }
-
-    test(s"[$mode] pushed predicate physically skips row groups") {
-      val clustered = AdjacencyFetcher.openClustered(spark, paths(byRange), cl)
-      val full = scanOutputRows(
-        new AdjacencyFetcher(spark.read.parquet(paths(byRange))).fetch(batchOf(1L)))
-      assert(full == n) // unpruned semi-join scans every row
-      // adjacent keys: range mode collapses them to ONE pushed interval
-      // (~1-2 surviving row groups); hash mode still reaches ≤5 buckets'
-      // narrow envelopes (~5 groups, ~2k rows each at this block size)
-      val tight = scanOutputRows(clustered.fetch(batchOf(100000L to 100004L: _*)))
-      val bound = if (byRange) n / 40 else n / 10
-      assert(tight < bound, s"[$mode] tight scan emitted $tight of $n rows")
-      // scattered keys across the key space: still a clear skip vs full
-      val scattered = scanOutputRows(clustered.fetch(batchOf(3L, 50000L, 199999L)))
-      assert(scattered < n / 2, s"[$mode] scattered scan emitted $scattered of $n rows")
-    }
+  test("[range] pushed predicate physically skips row groups") {
+    val clustered = AdjacencyFetcher.openClustered(spark, path, cl)
+    val full = scanOutputRows(
+      new AdjacencyFetcher(spark.read.parquet(path)).fetch(batchOf(1L)))
+    assert(full == n) // unpruned semi-join scans every row
+    // adjacent keys collapse to ONE pushed interval (~1-2 surviving row
+    // groups)
+    val tight = scanOutputRows(clustered.fetch(batchOf(100000L to 100004L: _*)))
+    assert(tight < n / 40, s"tight scan emitted $tight of $n rows")
+    // scattered keys across the key space: still a clear skip vs full
+    val scattered = scanOutputRows(clustered.fetch(batchOf(3L, 50000L, 199999L)))
+    assert(scattered < n / 2, s"scattered scan emitted $scattered of $n rows")
   }
 }
