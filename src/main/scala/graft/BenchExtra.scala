@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -8,7 +9,11 @@ import org.apache.spark.sql.SparkSession
   * as Bench, and reports per query the wall time plus the number of Spark
   * jobs / stages / tasks the query ran — the direct evidence for
   * "fixed scheduling overhead dominates at sf0.1" and for before/after
-  * job-count comparisons in OPTIMIZATION_r07.md.
+  * job-count comparisons in OPTIMIZATION_r07.md. `compiles` counts the
+  * generated classes the query compiled (Spark's JVM-wide `CodegenMetrics`).
+  * Like Bench, this session keeps Spark's 100-entry codegen cache, so the
+  * count splits a query's fixed cost between job scheduling and
+  * recompilation.
   *
   * `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` as in Bench;
   * `sbt "runMain graft.BenchExtra q_scc q_frontier_log"` (default: the
@@ -67,11 +72,13 @@ object BenchExtra {
         case Some(fn) =>
           jobs.reset(); stages.reset(); tasks.reset()
           spark.sparkContext.setJobDescription(s"benchx:$name")
+          val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           val t0 = System.nanoTime()
           val n = try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
           val wall = (System.nanoTime() - t0) / 1e9
+          val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
           Thread.sleep(200) // listener drain
-          val line = f""""$name%s":{"wall":$wall%.2f,"jobs":${jobs.sum()},"stages":${stages.sum()},"tasks":${tasks.sum()},"rows":$n}"""
+          val line = f""""$name%s":{"wall":$wall%.2f,"jobs":${jobs.sum()},"stages":${stages.sum()},"tasks":${tasks.sum()},"compiles":$compiles,"rows":$n}"""
           System.err.println(s"[benchx] $line")
           if (!first) out.append(",")
           out.append(line); first = false

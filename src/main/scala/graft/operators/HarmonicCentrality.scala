@@ -70,8 +70,11 @@ object HarmonicCentrality {
     val mkRegs = F.udf((id: Long) => Hll.singleton(id, log2m))
     val est = F.udf((regs: Array[Byte]) => Hll.estimate(regs))
 
+    // `hop` counts the hops done so far. It is a column, not `lit(r)`: Spark
+    // inlines primitive literals into generated code, so a literal would make
+    // every hop compile classes of its own.
     var state = vertices.select(col("id"), mkRegs(col("id")).as("regs"),
-        lit(1.0).as("ball"), lit(0.0).as("hc_val"))
+        lit(1.0).as("ball"), lit(0.0).as("hc_val"), lit(0.0).as("hop"))
       .localCheckpoint(false)
 
     var r = 0
@@ -87,11 +90,12 @@ object HarmonicCentrality {
         .join(state.select(col("id"), col("regs")),
               edges("from_id") === col("id"))
         .select(col("to_id").as("id"), col("regs"),
-          lit(null).cast("double").as("ball"), lit(null).cast("double").as("hc_val"))
-      val merged = state.select(col("id"), col("regs"), col("ball"), col("hc_val"))
+          lit(null).cast("double").as("ball"), lit(null).cast("double").as("hc_val"),
+          lit(null).cast("double").as("hop"))
+      val merged = state.select(col("id"), col("regs"), col("ball"), col("hc_val"), col("hop"))
         .unionByName(pulled)
         .groupBy("id").agg(mergeHll(col("regs")).as("regs"),
-          max("ball").as("ball"), max("hc_val").as("hc_val"))
+          max("ball").as("ball"), max("hc_val").as("hc_val"), max("hop").as("hop"))
       // convergence FUSED into the hop (same |ball − old_ball| > 1e-9 test):
       // the old ball is already in this plan, so `__chg` rides along and the
       // changed-count is one aggregate over the hop's own checkpoint — no
@@ -99,10 +103,12 @@ object HarmonicCentrality {
       // that aggregate materializes the hop in a single job.
       val newState = merged
         .select(col("id"), col("regs"),
-          est(col("regs")).as("new_ball"), col("ball"), col("hc_val"))
+          est(col("regs")).as("new_ball"), col("ball"), col("hc_val"),
+          (col("hop") + 1.0).as("hop"))
         .select(col("id"), col("regs"), col("new_ball").as("ball"),
           (col("hc_val") +
-            greatest(col("new_ball") - col("ball"), lit(0.0)) / lit(r.toDouble)).as("hc_val"),
+            greatest(col("new_ball") - col("ball"), lit(0.0)) / col("hop")).as("hc_val"),
+          col("hop"),
           (abs(col("new_ball") - col("ball")) > 1e-9).cast("long").as("__chg"))
         .localCheckpoint(false)
       changed = newState.agg(coalesce(sum("__chg"), lit(0L))).first().getLong(0)
