@@ -12,6 +12,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.gf
 import graft.operators.{HarmonicCentrality, HostGraph, Ranks}
@@ -64,8 +65,9 @@ object CorpusFetcher {
   * executor-cached DataFrame, so no cluster size has to hold it on-heap.
   */
 class TableFetcher(val pairs: DataFrame) extends Fetcher {
+  // no distinct(): a left-semi join is duplicate-insensitive on its right side
   override def fetch(selected: DataFrame): DataFrame =
-    pairs.join(selected.select("key").distinct(), Seq("key"), "left_semi")
+    pairs.join(selected.select("key"), Seq("key"), "left_semi")
 }
 
 /** Fetcher over a pre-grouped ADJACENCY-layout link table
@@ -98,8 +100,9 @@ class AdjacencyFetcher(adj: DataFrame,
   override def fetch(selected: DataFrame, nSelected: Long): DataFrame = {
     // a null key can never match the equality semi-join below — drop it up
     // front so the driver-side interval derivation (getString,
-    // host split) never see one
-    val sel = selected.select("key").where(col("key").isNotNull).distinct()
+    // host split) never see one. No distinct(): the semi-join is
+    // duplicate-insensitive, and a frontier batch has unique keys anyway.
+    val sel = selected.select("key").where(col("key").isNotNull)
     val pruned = clustering match {
       case None => adj
       case Some(cl) if nSelected >= 0 && nSelected > cl.maxPruneKeys =>
@@ -123,10 +126,13 @@ class AdjacencyFetcher(adj: DataFrame,
         // (e.g. Long.MaxValue) must degrade to no-limit semantics, not
         // overflow into limit(negative) and fail every fetch
         val cap = math.min(cl.maxPruneKeys, (Int.MaxValue - 1).toLong).toInt
-        val keys = sel.limit(cap + 1).collect().map(_.getString(0))
-        if (keys.isEmpty) adj.filter(lit(false))
-        else if (keys.length > cap) adj
+        // the cap counts rows, not distinct keys: a duplicate can only
+        // tip the fetch into the unpruned scan, never drop a key
+        val rows = sel.limit(cap + 1).collect()
+        if (rows.isEmpty) adj.filter(lit(false))
+        else if (rows.length > cap) adj
         else {
+          val keys = rows.map(_.getString(0)).distinct
           val byHost = keys.groupBy { k =>
             val i = k.indexOf(')'); if (i < 0) k else k.substring(0, i)
           }
@@ -439,16 +445,23 @@ object Frontier {
   /** Append a delta in the table's OWN layout: bucketed when the table was
     * written bucketed, legacy (no bucket column) otherwise — one snapshot
     * chain must never mix schemas (a multi-dir read would surface nulls in
-    * the missing column and silently break the anti-join). A legacy table
-    * upgrades wholesale at its next compaction (full rewrite).
+    * the missing column and silently break the anti-join; TableIO.append
+    * rejects such a delta). The layout is read from the pinned manifest's
+    * schema. A legacy table upgrades wholesale at its next compaction (full
+    * rewrite).
     */
   private def appendInLayout(spark: SparkSession, c: Config, df: DataFrame,
                              dir: String, atSnapshot: Long, lineage: String,
                              counters: Map[String, Long] = Map.empty): TableIO.Snapshot = {
-    val bucketed = TableIO.readAt(spark, dir, atSnapshot).columns.contains("bucket")
+    val pinned = TableIO.snapshotAt(spark, dir, atSnapshot)
+      .getOrElse(throw new IllegalStateException(s"no snapshot $atSnapshot in $dir"))
+    val bucketed = TableIO.schema(spark, pinned).fieldNames.contains("bucket")
     TableIO.append(if (bucketed) clusterByKey(df, c) else df, dir, lineage,
       counters, parentId = Some(atSnapshot))
   }
+
+  /** Schema of the fetch log: the stored crawl-order sort keys + url. */
+  private val logSchema = StructType.fromDDL("round INT, priority DOUBLE, rev_host STRING, url STRING")
 
   private def seenDir(c: Config) = s"${c.rootDir}/seen"
   private def pendingDir(c: Config) = s"${c.rootDir}/pending"
@@ -655,6 +668,13 @@ object Frontier {
            priorities: DataFrame, robots: DataFrame,
            sitemaps: Option[DataFrame] = None): Unit = {
     if (readMarker(spark, c, -1).isDefined) return
+    JobLabel.during(spark, "frontier:init:seeds")(
+      initTables(spark, c, seeds, priorities, robots, sitemaps))
+  }
+
+  private def initTables(spark: SparkSession, c: Config, seeds: DataFrame,
+                         priorities: DataFrame, robots: DataFrame,
+                         sitemaps: Option[DataFrame]): Unit = {
     val seedUrls = sitemaps match {
       case Some(sm) => seeds.select(col("url")).unionByName(sm.select(col("url")))
       case None => seeds.select(col("url"))
@@ -668,35 +688,26 @@ object Frontier {
     val nSeeds = pend.count()
     // no separate empty-table create commit: the seed append below creates
     // the seen table as snapshot 0 itself (append with no current snapshot
-    // commits a delta-only manifest) — one write+manifest fewer at init
-    // the four init tables are independent outputs — write them
+    // commits a delta-only manifest) — one write+manifest fewer at init.
+    // The two seeded tables are independent outputs — write them
     // concurrently (same discipline as the per-round commit futures; the
-    // init marker below remains the only serialization point)
-    import scala.concurrent.{Await, Future}
+    // init marker below remains the only serialization point); the two
+    // empty tables are manifest-only commits and start no job
+    val rSnap = TableIO.create(spark, UrlSeen.schema, removedDir(c), "init")
+    val lSnap = TableIO.create(spark, logSchema, logDir(c), "init")
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    import spark.implicits._
-    val fSeen = Future {
+    val fSeen = JobLabel.future(spark, "frontier:init:seen") {
       UrlSeen.append(spark, seenDir(c), pend.select("key"), c.seenCfg, "init:seeds")
     }
-    val fPend = Future {
+    val fPend = JobLabel.future(spark, "frontier:init:pending") {
       TableIO.write(clusterByKey(pend, c), pendingDir(c), "init:seeds",
         Map("rows" -> nSeeds))
     }
-    val fRem = Future {
-      TableIO.write(Seq.empty[(Int, String)].toDF("bucket", "key"), removedDir(c), "init")
-    }
-    val fLog = Future {
-      val emptyLog = Seq.empty[(Int, Double, String, String)]
-        .toDF("round", "priority", "rev_host", "url")
-      TableIO.write(emptyLog, logDir(c), "init")
-    }
     try {
-      Await.result(fSeen, Duration.Inf)
+      val (seenSnap, _) = Await.result(fSeen, Duration.Inf)
       val pSnap = Await.result(fPend, Duration.Inf)
-      val rSnap = Await.result(fRem, Duration.Inf)
-      val lSnap = Await.result(fLog, Duration.Inf)
-      val seenSnap = TableIO.currentSnapshot(spark, seenDir(c)).get
       writeMarker(spark, c, State(-1, seenSnap.id, pSnap.id, rSnap.id, lSnap.id, 0L),
         Map("seeds" -> nSeeds))
     } finally pend.unpersist(blocking = false)
@@ -940,7 +951,7 @@ object Frontier {
     val round = st.round + 1
     // label this thread's jobs for the round (restored on the success path;
     // a leaked label after a failed round is cosmetic only)
-    val prevDesc = spark.sparkContext.getLocalProperty("spark.job.description")
+    val prevDesc = JobLabel.current(spark)
     spark.sparkContext.setJobDescription(s"frontier:r$round:select+dedup")
     // live pending = add ∖ removed over the two pinned delta snapshots; the
     // anti-join feeds straight into the selection shuffle below (no extra
@@ -981,13 +992,8 @@ object Frontier {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    // label the concurrent commit jobs (guide §1.5): descriptions are
-    // thread-local and the shared execution context reuses threads, so each
-    // future sets its own instead of inheriting a stale one
-    def labeled[T](what: String)(body: => T): Future[T] = Future {
-      spark.sparkContext.setJobDescription(s"frontier:r$round:$what")
-      body
-    }
+    def labeled[T](what: String)(body: => T): Future[T] =
+      JobLabel.future(spark, s"frontier:r$round:$what")(body)
     val fLog = labeled("log") {
       TableIO.append(logRows, logDir(c), s"round:$round:log",
         Map("rows" -> nSelected), parentId = Some(st.log))
@@ -1003,13 +1009,20 @@ object Frontier {
       case None => extractCandidates(c, fetcher, selected, nSelected, priorities, robots)
     }
     lap("extract")
+    // the bloom sidecar as a driver map, read at most once per run: the
+    // first round (or a resume) loads it here for both the probe and the
+    // seen append; later rounds reuse the map the previous append merged
+    val blooms0 =
+      if (bloomCache.isEmpty && UrlSeen.sidecarFitsDriver(c.seenCfg))
+        Some(UrlSeen.readBloomMap(spark, seenDir(c)))
+      else bloomCache
     // no count action here: nNew is recovered from the seen-append's
     // per-bucket counters (computed in the same pass that builds the delta
     // blooms) — one fewer blocking job per round; the post-cache work the
     // commit futures race on (bloom probe + anti-join over the warm
     // candidates cache) is cheap
     val newRows = UrlSeen.unseen(spark, seenDir(c), candidates, c.seenCfg, c.useBloom,
-        atSnapshot = Some(st.seen), blooms = bloomCache,
+        atSnapshot = Some(st.seen), blooms = blooms0,
         broadcastBloom = UrlSeen.sidecarFitsDriver(c.seenCfg))
       .select("key", "url", "rev_host", "priority")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
@@ -1027,20 +1040,15 @@ object Frontier {
     // compaction round instead rewrites the live set as a fresh base
     // snapshot and resets the removed table (amortized O(|pending|/k))
     val compact = c.compactPendingEvery > 0 && (round + 1) % c.compactPendingEvery == 0
-    val fPending = labeled("pending") {
+    val fPending = labeled(if (compact) "pending:compact" else "pending") {
       if (compact) {
         // full rewrite: always lands the bucket layout (upgrades a legacy
-        // table wholesale — see appendInLayout)
+        // table wholesale — see appendInLayout); the removed table resets
+        // to an empty, manifest-only snapshot
         val live = pending.join(selected.select("key"), Seq("key"), "left_anti")
           .unionByName(newRows)
-        import spark.implicits._
-        val fp = labeled("pending:compact") { TableIO.write(
-          clusterByKey(live, c), pendingDir(c),
-          s"round:$round:pending:compact") }
-        val fr = labeled("removed:compact") { TableIO.write(
-          Seq.empty[(Int, String)].toDF("bucket", "key"), removedDir(c),
-          s"round:$round:removed:compact") }
-        (Await.result(fp, Duration.Inf), Await.result(fr, Duration.Inf))
+        (TableIO.write(clusterByKey(live, c), pendingDir(c), s"round:$round:pending:compact"),
+          TableIO.create(spark, UrlSeen.schema, removedDir(c), s"round:$round:removed:compact"))
       } else {
         // two independent tables — overlap the writes (the round marker is
         // still the only serialization point), so the pending chain's wall
@@ -1055,7 +1063,7 @@ object Frontier {
     }
     val fSeen = labeled("seen") {
       UrlSeen.append(spark, seenDir(c), newRows.select("key"), c.seenCfg,
-        s"round:$round:seen", parentId = Some(st.seen), prevBlooms = bloomCache)
+        s"round:$round:seen", parentId = Some(st.seen), prevBlooms = blooms0)
     }
     // PIPELINE the next round's politeness selection AND its corpus scan:
     // the next live pending set (this pending ∖ selected ∪ newRows — the
@@ -1189,4 +1197,33 @@ object Frontier {
       throw new IllegalStateException("frontier not initialized"))
     TableIO.readAt(spark, seenDir(c), st.seen).select("key")
   }
+}
+
+/** Job descriptions for jobs started from pooled threads. Spark keeps the
+  * description in an inheritable thread-local, so a pooled thread carries
+  * whatever label its creator or its previous task left behind; a future
+  * that does not set its own charges its jobs to a stale phase.
+  */
+private[frontier] object JobLabel {
+  private val Key = "spark.job.description"
+
+  /** The description this thread's jobs carry now (null when unset). */
+  def current(spark: SparkSession): String = spark.sparkContext.getLocalProperty(Key)
+
+  /** `body` on this thread with its jobs labeled `desc`; the thread's
+    * previous label is restored when the body ends, however it ends.
+    */
+  def during[T](spark: SparkSession, desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(Key)
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
+  }
+
+  /** `body` in a future whose jobs run under `desc` (pass [[current]] to
+    * keep the creating thread's label).
+    */
+  def future[T](spark: SparkSession, desc: String)(body: => T)
+               (implicit ec: scala.concurrent.ExecutionContext): scala.concurrent.Future[T] =
+    scala.concurrent.Future(during(spark, desc)(body))
 }

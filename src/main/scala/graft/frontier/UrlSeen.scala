@@ -3,6 +3,7 @@ package graft.frontier
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession, functions => F}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.Hll
 import graft.sources.TableIO
@@ -90,13 +91,35 @@ object UrlSeen {
     override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  /** Create an empty seen table. Schema: (bucket int, key string). */
-  def create(spark: SparkSession, dir: String, cfg: Config = Config()): Unit = {
-    import spark.implicits._
-    val empty = Seq.empty[(Int, String)].toDF("bucket", "key")
-    TableIO.write(empty, dir, lineage = "urlseen:create",
-      counters = Map("buckets" -> cfg.buckets.toLong))
-  }
+  /** The seen table's schema. */
+  val schema: StructType = StructType.fromDDL("bucket INT, key STRING")
+
+  /** Snapshot property recording the bucket count P the keys are laid out with. */
+  private val BucketsProperty = "buckets"
+
+  /** Create an empty seen table: a manifest-only commit, no write job. */
+  def create(spark: SparkSession, dir: String, cfg: Config = Config()): Unit =
+    TableIO.create(spark, schema, dir, "urlseen:create",
+      Map(BucketsProperty -> cfg.buckets.toString))
+
+  /** Fail loudly when `cfg.buckets` differs from the bucket count the seen
+    * snapshot was written with: the `(bucket, key)` anti-join under another
+    * P would miss every seen key and resurrect it as new. A snapshot written
+    * before the count was recorded is accepted.
+    */
+  private def checkBuckets(dir: String, s: TableIO.Snapshot, cfg: Config): Unit =
+    s.properties.get(BucketsProperty).foreach { p =>
+      if (p.toInt != cfg.buckets) throw new IllegalStateException(
+        s"seen set $dir (snapshot ${s.id}) is laid out with buckets = $p, " +
+          s"but the config has buckets = ${cfg.buckets}")
+    }
+
+  private def snapshot(spark: SparkSession, dir: String, id: Option[Long]): Option[TableIO.Snapshot] =
+    id match {
+      case Some(i) => Some(TableIO.snapshotAt(spark, dir, i)
+        .getOrElse(throw new IllegalStateException(s"no snapshot $i in $dir")))
+      case None => TableIO.currentSnapshot(spark, dir)
+    }
 
   /** OR-merge of bloom bit arrays (incremental sidecar refresh). */
   class OrAgg(bytes: Int) extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
@@ -137,6 +160,8 @@ object UrlSeen {
              parentId: Option[Long] = None,
              prevBlooms: Option[Map[Int, Array[Byte]]] = None)
       : (TableIO.Snapshot, Option[Map[Int, Array[Byte]]]) = {
+    snapshot(spark, dir, parentId).foreach(checkBuckets(dir, _, cfg))
+    val props = Map(BucketsProperty -> cfg.buckets.toString)
     // bucket kept as a DATA column clustered within files (repartition +
     // sort) — parquet min/max stats then prune row groups per bucket.
     // Directory partitioning would break multi-snapshot reads (the initial
@@ -153,15 +178,19 @@ object UrlSeen {
     val deltaAgg = bucketed
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"), bloomAgg(xxhash64(col("key"))).as("bits"))
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
+    // the concurrent outputs' jobs carry the caller's label
+    def labeled[T](body: => T) = JobLabel.future(spark, JobLabel.current(spark))(body)
+    def appendKeys(perBucket: Map[String, Long]) =
+      labeled { TableIO.append(bucketed, dir, lineage, perBucket, parentId, properties = props) }
     if (sidecarFitsDriver(cfg)) {
       val deltaStats = deltaAgg.collect()
       val perBucket = deltaStats.map(r => s"bucket.${r.getInt(0)}" -> r.getLong(1)).toMap
       // the table append and the sidecar write are independent outputs — run
       // the append concurrently with the driver-side bloom merge + write
-      val fAppend = Future { TableIO.append(bucketed, dir, lineage, perBucket, parentId) }
+      val fAppend = appendKeys(perBucket)
       val prev = prevBlooms.getOrElse(readBloomMap(spark, dir))
       val merged = scala.collection.mutable.Map[Int, Array[Byte]](prev.toSeq: _*)
       deltaStats.foreach { r =>
@@ -183,7 +212,7 @@ object UrlSeen {
         .toDF("bucket", "bits")
       // sidecar write and key-table append are independent outputs — overlap
       // them too (the round marker remains the only commit point)
-      val fBloom = Future {
+      val fBloom = labeled {
         TableIO.write(mergedDf, s"$dir-bloom", lineage = "urlseen:bloom")
       }
       val snap = Await.result(fAppend, Duration.Inf)
@@ -197,7 +226,7 @@ object UrlSeen {
       val stats = deltaAgg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       val perBucket = stats.select(col("bucket"), col("n")).collect()
         .map(r => s"bucket.${r.getInt(0)}" -> r.getLong(1)).toMap
-      val fAppend = Future { TableIO.append(bucketed, dir, lineage, perBucket, parentId) }
+      val fAppend = appendKeys(perBucket)
       import spark.implicits._
       val prev = TableIO.currentSnapshot(spark, s"$dir-bloom") match {
         case Some(_) => TableIO.read(spark, s"$dir-bloom")
@@ -247,10 +276,10 @@ object UrlSeen {
     // exact layer pinned to the marker's snapshot (crash-replay correctness);
     // the bloom sidecar may be ahead of it — false "maybe seen" answers fall
     // through to the pinned exact anti-join, so staleness cannot corrupt.
-    val seen = atSnapshot match {
-      case Some(id) => TableIO.readAt(spark, dir, id)
-      case None => TableIO.read(spark, dir)
-    }
+    val seenSnap = snapshot(spark, dir, atSnapshot)
+      .getOrElse(throw new IllegalStateException(s"no snapshot in $dir"))
+    checkBuckets(dir, seenSnap, cfg)
+    val seen = TableIO.read(spark, seenSnap)
     val withBucket = candidates
       .withColumn("bucket", bucketOf(col("key"), cfg.buckets))
       .withColumn("__h", xxhash64(col("key")))

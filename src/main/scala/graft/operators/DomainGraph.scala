@@ -92,6 +92,9 @@ object DomainGraph {
       .select(col("dfrom").as("from_id"), col("dto").as("to_id"))
       .filter(col("from_id") =!= col("to_id"))
       .distinct()
+      // the distinct's output order follows shuffle-block arrival; sorting
+      // within partitions makes the written bytes repeatable run to run
+      .sortWithinPartitions("from_id", "to_id")
 
     val outVerts =
       if (opts.countHosts) domainVerts

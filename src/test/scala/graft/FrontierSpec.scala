@@ -154,23 +154,67 @@ class FrontierSpec extends AnyFunSuite {
     runAll(killed, rounds = 2) // "killed" after round 1 committed
 
     // simulate a crash mid-round-2: orphan appends landed but no marker —
-    // in EVERY state table, including both pending delta tables
+    // in EVERY state table, including both pending delta tables (each in
+    // its table's own schema: TableIO.append rejects any other)
     val c = cfg(killed)
+    def bucketed(df: DataFrame) =
+      df.select(UrlSeen.bucketOf(col("key"), c.seenCfg.buckets).as("bucket") +:
+        df.columns.map(col).toSeq: _*)
     val orphanKeys = Seq("com,orphan)/x", "com,orphan)/y").toDF("key")
     UrlSeen.append(spark, s"$killed/seen", orphanKeys, c.seenCfg, "orphan")
-    TableIO.append(Seq((2, 999L, "https://orphan.com/")).toDF("round", "seq", "url"),
+    TableIO.append(Seq((2, 0.5, "com.orphan", "https://orphan.com/"))
+        .toDF("round", "priority", "rev_host", "url"),
       s"$killed/fetch_log", "orphan")
-    TableIO.append(
+    TableIO.append(bucketed(
       Seq(("com,orphan)/p", "https://orphan.com/p", "com.orphan", 0.5))
-        .toDF("key", "url", "rev_host", "priority"),
+        .toDF("key", "url", "rev_host", "priority")),
       s"$killed/pending", "orphan")
-    TableIO.append(Seq("com,orphan)/r").toDF("key"),
+    TableIO.append(bucketed(Seq("com,orphan)/r").toDF("key")),
       s"$killed/pending_removed", "orphan")
 
     // resume to 4 rounds — replay must pin to markers, ignoring orphans
     runAll(killed, rounds = 4)
     assert(logOf(killed) == logOf(full))
     assert(seenOf(killed) == seenOf(full))
+  }
+
+  test("a crawl resumed from manifests without recorded schemas matches the uninterrupted run") {
+    val full = Files.createTempDirectory("f_legacy_full").toString
+    runAll(full, rounds = 4)
+    val killed = Files.createTempDirectory("f_legacy_kill").toString
+    runAll(killed, rounds = 2)
+    // make every data-bearing manifest look like one written before schemas
+    // were recorded; the resumed rounds infer those schemas from the files
+    // (an empty, manifest-only snapshot cannot exist without its schema)
+    val manifests = for {
+      t <- new java.io.File(killed).listFiles().toSeq if t.isDirectory
+      m <- t.listFiles().toSeq if m.getName.startsWith("_snapshot")
+      if Files.readAllLines(m.toPath).asScala.exists(l => l.startsWith("paths=") && l != "paths=")
+    } yield m
+    assert(manifests.nonEmpty)
+    manifests.foreach(TestFiles.dropLines(_, "schema="))
+    val st = Frontier.lastCommitted(spark, cfg(killed)).get
+    assert(TableIO.snapshotAt(spark, s"$killed/pending", st.pending).get.schema.isEmpty)
+    runAll(killed, rounds = 4)
+    assert(logOf(killed) == logOf(full))
+    assert(seenOf(killed) == seenOf(full))
+  }
+
+  test("jobs carry the label of the init table or round that started them") {
+    // a first crawl leaves its round labels on the pooled threads' inherited
+    // properties; a second crawl's jobs must not pick them up
+    runAll(Files.createTempDirectory("f_labels_a").toString, rounds = 3)
+    val c = cfg(Files.createTempDirectory("f_labels_b").toString)
+    val initJobs = JobRecorder.during(spark) {
+      Frontier.init(spark, c, seeds, priorities, robots)
+    }
+    val runJobs = JobRecorder.during(spark) {
+      Frontier.run(spark, c, fetcher, 2, budgets, robots, priorities)
+    }
+    assert(initJobs.nonEmpty && initJobs.forall(_.startsWith("frontier:init:")), initJobs)
+    assert(runJobs.nonEmpty &&
+      runJobs.forall(d => d.startsWith("frontier:r0:") || d.startsWith("frontier:r1:")), runJobs)
+    assert(runJobs.exists(_.startsWith("frontier:r1:")))
   }
 
   test("a mid-crawl commit failure surfaces, drains all caches, resumes byte-identically") {
@@ -248,6 +292,23 @@ class FrontierSpec extends AnyFunSuite {
       .filterNot(_.startsWith("buckets=")).asJava)
     new java.io.File(s"$dir/markers/.round--1.crc").delete()
     assert(Frontier.run(spark, c16, fetcher, 1, budgets, robots, priorities).round == 0)
+  }
+
+  test("the seen set refuses a bucket count other than the one it was written with") {
+    val dir = Files.createTempDirectory("f_seen_buckets").toString + "/seen"
+    val four = cfg(dir).seenCfg
+    val eight = four.copy(buckets = 8)
+    UrlSeen.create(spark, dir, four)
+    val keys = Seq("com,example)/a").toDF("key")
+    val probe = intercept[IllegalStateException](UrlSeen.unseen(spark, dir, keys, eight))
+    assert(probe.getMessage.contains("buckets = 4"), probe.getMessage)
+    intercept[IllegalStateException](UrlSeen.append(spark, dir, keys, eight))
+    // the matching count works, and a snapshot without the property is accepted
+    val (snap, _) = UrlSeen.append(spark, dir, keys, four)
+    assert(snap.properties.get("buckets").contains("4"))
+    assert(snap.counters.keySet.forall(_.startsWith("bucket.")))
+    TestFiles.dropLines(new java.io.File(s"$dir/_snapshot-${snap.id}"), "property.buckets=")
+    assert(UrlSeen.unseen(spark, dir, keys, eight, atSnapshot = Some(snap.id)).count() == 1)
   }
 
   test("physical-path configs (candidate barrier, broadcast fetch) don't change results") {

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.TableIO
@@ -20,6 +22,15 @@ class TableIOSpec extends AnyFunSuite {
   private def rows(dir: String, id: Option[Long] = None): Set[Long] = {
     val df = id.map(TableIO.readAt(spark, dir, _)).getOrElse(TableIO.read(spark, dir))
     df.collect().map(_.getLong(0)).toSet
+  }
+
+  /** Drop the recorded schema from a snapshot's manifests, as a manifest
+    * written before schemas were recorded looks.
+    */
+  private def stripSchema(dir: String, id: Long): Unit = {
+    TestFiles.dropLines(new java.io.File(s"$dir/_snapshot-$id"), "schema=")
+    if (TableIO.currentSnapshot(spark, dir).exists(_.id == id))
+      TestFiles.dropLines(new java.io.File(s"$dir/_snapshot"), "schema=")
   }
 
   test("write/read roundtrip records id, parent, counters and lineage") {
@@ -116,5 +127,98 @@ class TableIOSpec extends AnyFunSuite {
     val got = TableIO.read(spark, dir).collect()
       .map(r => (r.getAs[Long]("v"), r.getAs[Int]("bucket"))).toSet
     assert(got == Set((1L, 0), (2L, 1), (3L, 0)))
+  }
+
+  test("the manifest records the read schema, partition columns included") {
+    val dir = Files.createTempDirectory("tio_schema").toString + "/t"
+    val df = Seq((0, 1L, Seq(("a", 1.5))), (1, 2L, Seq.empty[(String, Double)]))
+      .toDF("bucket", "v", "pairs")
+    val s0 = TableIO.write(df, dir, partitionBy = Seq("bucket"))
+    val inferred = spark.read.parquet(s0.paths: _*).schema
+    // partition column last and every level nullable, as a parquet read reports it
+    assert(s0.schema.contains(inferred), s0.schema)
+    assert(TableIO.snapshotAt(spark, dir, s0.id).get.schema.contains(inferred))
+    assert(TableIO.read(spark, dir).schema == inferred)
+    assert(rows(dir) == Set(1L, 2L))
+    // an append carries the schema on
+    val plain = Files.createTempDirectory("tio_schema_ap").toString + "/t"
+    TableIO.write(df, plain)
+    val s1 = TableIO.append(Seq((1, 3L, Seq(("b", 2.0)))).toDF("bucket", "v", "pairs"), plain)
+    assert(s1.schema.contains(spark.read.parquet(s1.paths: _*).schema))
+    assert(TableIO.read(spark, plain).select("v").as[Long].collect().toSet == Set(1L, 2L, 3L))
+  }
+
+  test("reads and empty commits plan from the manifest and start no job") {
+    val dir = Files.createTempDirectory("tio_nojob").toString + "/t"
+    val s0 = TableIO.write(Seq((1L, "a")).toDF("v", "s"), dir)
+    val jobs = JobRecorder.during(spark) {
+      TableIO.read(spark, dir).schema
+      TableIO.readAt(spark, dir, s0.id).columns
+      TableIO.create(spark, StructType.fromDDL("v BIGINT, s STRING"),
+        Files.createTempDirectory("tio_nojob_c").toString + "/t")
+    }
+    assert(jobs.isEmpty, jobs)
+    // the recorder does see the schema-inference job of a manifest without a schema
+    stripSchema(dir, s0.id)
+    assert(JobRecorder.during(spark)(TableIO.read(spark, dir).schema).nonEmpty)
+  }
+
+  test("an empty snapshot is a manifest only, reads back typed, and takes appends") {
+    val dir = Files.createTempDirectory("tio_empty").toString + "/t"
+    val schema = StructType.fromDDL("bucket INT, key STRING")
+    val s0 = TableIO.create(spark, schema, dir, "init", Map("buckets" -> "4"))
+    assert(s0.id == 0L && s0.paths.isEmpty)
+    assert(!new java.io.File(s"$dir/snap-0").exists())
+    val snap = TableIO.snapshotAt(spark, dir, 0L).get
+    assert(snap.properties == Map("buckets" -> "4") && snap.lineage == "init")
+    val empty = TableIO.read(spark, dir)
+    assert(empty.schema == schema && empty.count() == 0)
+    assert(empty.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    val s1 = TableIO.append(Seq((1, "k")).toDF("bucket", "key"), dir, parentId = Some(s0.id))
+    assert(s1.paths.size == 1)
+    assert(TableIO.read(spark, dir).collect().map(r => (r.getInt(0), r.getString(1))).toSeq ==
+      Seq((1, "k")))
+    // create over an existing table replaces it, like write
+    val s2 = TableIO.create(spark, schema, dir)
+    assert(s2.parentId == s1.id && TableIO.read(spark, dir).count() == 0)
+  }
+
+  test("a manifest without a recorded schema still reads, and its next append records one") {
+    val dir = Files.createTempDirectory("tio_legacy").toString + "/t"
+    val s0 = TableIO.write(Seq(1L, 2L).toDF("v"), dir)
+    stripSchema(dir, s0.id)
+    val legacy = TableIO.snapshotAt(spark, dir, s0.id).get
+    assert(legacy.schema.isEmpty)
+    assert(rows(dir) == Set(1L, 2L))
+    val s1 = TableIO.append(Seq(3L).toDF("v"), dir, parentId = Some(s0.id))
+    assert(s1.schema.exists(_.fieldNames.toSeq == Seq("v")))
+    assert(rows(dir, Some(s1.id)) == Set(1L, 2L, 3L))
+    // with neither data nor schema there is nothing to read: fail loudly
+    val e0 = Files.createTempDirectory("tio_legacy_e").toString + "/t"
+    TableIO.create(spark, StructType.fromDDL("v BIGINT"), e0)
+    stripSchema(e0, 0L)
+    intercept[IllegalStateException](TableIO.read(spark, e0))
+  }
+
+  test("an append whose columns differ from the parent's schema throws") {
+    val dir = Files.createTempDirectory("tio_mismatch").toString + "/t"
+    val s0 = TableIO.write(Seq((1, "a")).toDF("bucket", "key"), dir)
+    val renamed = intercept[IllegalArgumentException] {
+      TableIO.append(Seq((2, "b")).toDF("bucket", "url"), dir, parentId = Some(s0.id))
+    }
+    assert(renamed.getMessage.contains("key STRING"), renamed.getMessage)
+    intercept[IllegalArgumentException] {   // a type change
+      TableIO.append(Seq((2L, "b")).toDF("bucket", "key"), dir, parentId = Some(s0.id))
+    }
+    intercept[IllegalArgumentException] {   // a dropped column
+      TableIO.append(Seq("b").toDF("key"), dir, parentId = Some(s0.id))
+    }
+    // nothing was committed by the rejected appends
+    assert(TableIO.currentSnapshot(spark, dir).get.id == s0.id)
+    // column order and nullability are not part of the check
+    val s1 = TableIO.append(Seq(("c", Option(3))).toDF("key", "bucket"), dir,
+      parentId = Some(s0.id))
+    assert(TableIO.readAt(spark, dir, s1.id).collect()
+      .map(r => (r.getAs[Int]("bucket"), r.getAs[String]("key"))).toSet == Set((1, "a"), (3, "c")))
   }
 }
