@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Weak/strong connected components as iterative DataFrame label propagation —
@@ -20,8 +21,32 @@ object ConnectedComponents {
     * symmetrized graph — typically <20 for web graphs; large-star/small-star
     * would cut that further but min-propagation matches the reference's
     * output contract and stays simple.
+    *
+    * One row per vertex; an arc with an endpoint outside `vertices` is
+    * ignored. A graph that fits the driver's budget runs in driver memory
+    * ([[DriverGraph]]), a larger one as [[weakSpark]]'s loop; both give the
+    * same labels and fail the same way past `maxIter`.
     */
   def weak(vertices: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame = {
+    val spark = vertices.sparkSession
+    DriverGraph.load(vertices, edges, None, DriverGraph.WeakStateBytes,
+        DriverGraph.budget(spark)) match {
+      case Some(g) =>
+        // the Spark loop's schema: messages to either endpoint join `id`,
+        // and `component` is an aggregate
+        val e = edges.schema
+        val schema = StructType(Seq(
+          StructField("id", LongType, vertices.schema("id").nullable ||
+            e("from_id").nullable || e("to_id").nullable),
+          StructField("component", LongType, nullable = true)))
+        DriverGraph.frame(spark, schema, g.ids, DriverGraph.weak(g, maxIter).map(g.ids(_)))
+      case None => weakSpark(vertices, edges, maxIter)
+    }
+  }
+
+  /** [[weak]] as a Spark loop: one union+aggregate per iteration. */
+  private[graft] def weakSpark(vertices: DataFrame, edges: DataFrame,
+                               maxIter: Int = 50): DataFrame = {
     val sym = edges.select(col("from_id"), col("to_id"))
       .union(edges.select(col("to_id").as("from_id"), col("from_id").as("to_id")))
       .distinct()
@@ -61,6 +86,9 @@ object ConnectedComponents {
         .unionByName(msgs)
         .groupBy("id")
         .agg(min("component").as("component"), max("__old").as("__old"))
+        // only a vertex has a self-row: drop the ids arcs name but
+        // `vertices` does not
+        .filter(col("__old").isNotNull)
         .select(col("id"), col("component"),
           (col("component") < col("__old")).cast("long").as("__chg"))
         .localCheckpoint(false)
@@ -69,16 +97,20 @@ object ConnectedComponents {
       iter += 1
     }
     sym.unpersist()
-    // propagation distance is the component diameter: a graph deeper than
-    // maxIter would otherwise return plausible-looking but WRONG labels —
-    // fail like [[star]] does (which converges in O(log n) rounds and is
-    // the right variant for deep graphs) rather than hand them back
+    requireConverged(changed, maxIter)
+    labels
+  }
+
+  /** Propagation distance is the component diameter: a graph deeper than
+    * maxIter would otherwise return plausible-looking but WRONG labels —
+    * fail like [[star]] does (which converges in O(log n) rounds and is the
+    * right variant for deep graphs) rather than hand them back.
+    */
+  private[operators] def requireConverged(changed: Long, maxIter: Int): Unit =
     require(changed == 0,
       s"min-label WCC did not converge in $maxIter iterations " +
         "(component diameter exceeds maxIter) — raise maxIter or use " +
         "ConnectedComponents.star")
-    labels
-  }
 
   /** Weakly connected components via the ALTERNATING LARGE-STAR/SMALL-STAR
     * algorithm (Kiveris et al., "Connected Components in MapReduce and

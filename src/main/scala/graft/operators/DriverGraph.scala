@@ -1,0 +1,310 @@
+package graft.operators
+
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructType}
+
+import graft.functions.Hll
+
+/** The in-driver path of HyperBall, WCC and PageRank. The reference runs
+  * these steps inside one JVM over in-memory arrays (WebGraph/LAW,
+  * `process_webgraph.sh:255-272`); a Spark loop pays 4 to 16 jobs per
+  * iteration for the same rounds. So when the graph fits a byte budget of
+  * the driver, one job collects it and the operator iterates here; when it
+  * does not, [[load]] declines and the operator runs its Spark loop.
+  * Whether the graph fits is decided from the input's size alone, as "To
+  * Partition, or Not to Partition" (SIGMOD 2021) chooses a join strategy.
+  *
+  * The kernels run the Spark loops' synchronous rounds with their exact
+  * semantics. Arcs count as a multiset, and an arc with an endpoint that is
+  * not a vertex (or is null) is ignored.
+  */
+private[graft] object DriverGraph {
+
+  /** The loaded graph may take 1/16 of the driver's max heap. */
+  val HeapShare = 16L
+  /** ... and 1/4 of `spark.driver.maxResultSize` (0 = unlimited). The load's
+    * results can reach [[PartitionSkew]] budgets in the worst case, which
+    * then still stays below the limit Spark aborts a job at.
+    */
+  val ResultShare = 4L
+  /** Driver bytes per arc: two packed longs while loading, then two int
+    * vertex indices.
+    */
+  val ArcBytes = 24L
+  /** Driver bytes per vertex besides its kernel state: the packed id and
+    * its output row.
+    */
+  val VertexBytes = 16L
+  /** Driver bytes per preference row: its packed id and value. */
+  val PrefBytes = 16L
+  /** One partition may return up to this many even shares of the budget,
+    * so an uneven split does not decline a graph that fits, while the
+    * results of one load stay within this many budgets.
+    */
+  val PartitionSkew = 4L
+  /** Rows per slice of an operator's output RDD. */
+  val RowsPerSlice = 1 << 20
+
+  /** Bytes the loaded graph may take, from the driver's max heap and
+    * `spark.driver.maxResultSize`.
+    */
+  def budget(spark: SparkSession): Long = {
+    val heap = Runtime.getRuntime.maxMemory / HeapShare
+    val results = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (results > 0) math.min(heap, results / ResultShare) else heap
+  }
+
+  /** A graph in driver memory. `ids` are the vertex ids, ascending; arc k
+    * runs from `ids(src(k))` to `ids(dst(k))`. `pref(i)` is vertex i's
+    * preference, NaN where the preference has no row for it; `pref` is
+    * null when no preference was given.
+    */
+  final class Graph(val ids: Array[Long], val src: Array[Int], val dst: Array[Int],
+                    val pref: Array[Double]) {
+    def n: Int = ids.length
+  }
+
+  /** Loads `vertices` (id), `edges` (from_id, to_id) and the optional
+    * preference (id, pref) when they fit `budget`, counting `stateBytes` of
+    * kernel state per vertex. Declines (None) without starting a job when
+    * the optimized plans' size estimate is over the budget; otherwise one
+    * job collects every input as packed longs, at most the budget's
+    * [[PartitionSkew]]-fold share per partition, and declines when the rows
+    * it got cost more than the budget. Also declines ids or preference
+    * columns of another type than long/double, a null vertex id, a
+    * repeated vertex or preference id and a null or NaN preference: the
+    * Spark loop keeps whatever it does with those.
+    */
+  def load(vertices: DataFrame, edges: DataFrame, preference: Option[DataFrame],
+           stateBytes: Long, budget: Long): Option[Graph] = {
+    val v = vertices.select("id")
+    val e = edges.select("from_id", "to_id")
+    val p = preference.map(_.select("id", "pref"))
+    def typed(df: DataFrame, types: DataType*) = df.schema.fields.map(_.dataType).toSeq == types
+    if (!typed(v, LongType) || !typed(e, LongType, LongType) ||
+        !p.forall(typed(_, LongType, DoubleType))) return None
+    val inputs = Seq(v, e) ++ p
+    if (inputs.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum > budget) return None
+
+    val rdds = inputs.map(_.queryExecution.toRdd)
+    val parts = rdds.map(_.getNumPartitions)
+    val cap = math.min(budget, budget * PartitionSkew / math.max(1, parts.sum))
+    val packed = Seq(
+      pack(rdds(0), arcs = false, VertexBytes + stateBytes, cap),
+      pack(rdds(1), arcs = true, ArcBytes, cap)) ++
+      rdds.drop(2).map(pack(_, arcs = false, PrefBytes, cap))
+    val got = vertices.sparkSession.sparkContext.union(packed).collect()
+    if (got.contains(null)) return None
+    val (vs, rest) = got.splitAt(parts(0))
+    val (es, ps) = rest.splitAt(parts(1))
+    val (nIds, nArcs, nPrefs) =
+      (vs.map(_.length.toLong).sum, es.map(_.length / 2L).sum, ps.map(_.length / 2L).sum)
+    if (nIds * (VertexBytes + stateBytes) + nArcs * ArcBytes + nPrefs * PrefBytes > budget)
+      return None
+
+    val ids = vs.flatten
+    java.util.Arrays.sort(ids)
+    if ((1 until ids.length).exists(i => ids(i) == ids(i - 1))) return None
+    val index = indexOf(ids)
+    val src = new Array[Int](nArcs.toInt)
+    val dst = new Array[Int](nArcs.toInt)
+    var m = 0
+    for (a <- es; k <- 0 until a.length by 2) {
+      val (s, d) = (index(a(k)), index(a(k + 1)))
+      if (s >= 0 && d >= 0) { src(m) = s; dst(m) = d; m += 1 }
+    }
+    val pref = if (p.isEmpty) null else Array.fill(ids.length)(Double.NaN)
+    var bad = false
+    for (a <- ps; k <- 0 until a.length by 2) {
+      val i = index(a(k))
+      if (i >= 0) {
+        val value = java.lang.Double.longBitsToDouble(a(k + 1))
+        bad ||= !pref(i).isNaN || value.isNaN // repeated id, or NaN
+        pref(i) = value
+      }
+    }
+    if (bad) None
+    else Some(new Graph(ids, java.util.Arrays.copyOf(src, m), java.util.Arrays.copyOf(dst, m), pref))
+  }
+
+  /** One array per partition: its rows' columns as longs (a double as its
+    * bits), or null when a row has a null column or the rows cost more than
+    * `cap`. For `arcs`, a row with a null column is skipped instead.
+    */
+  private def pack(rows: RDD[InternalRow], arcs: Boolean, rowBytes: Long,
+                   cap: Long): RDD[Array[Long]] = rows.mapPartitions { it =>
+    val out = Array.newBuilder[Long]
+    var bytes = 0L
+    var ok = true
+    while (ok && it.hasNext) {
+      val r = it.next()
+      if ((0 until r.numFields).exists(r.isNullAt)) ok = arcs
+      else {
+        out += r.getLong(0)
+        // an arc's second column is a long, a preference row's a double
+        if (r.numFields == 2)
+          out += (if (arcs) r.getLong(1) else java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
+        bytes += rowBytes
+        ok = bytes <= cap
+      }
+    }
+    Iterator.single(if (ok) out.result() else null)
+  }
+
+  /** Id → index into the ascending `ids`, -1 for an id that is not there:
+    * arithmetic when the ids are one contiguous range, else binary search.
+    */
+  private def indexOf(ids: Array[Long]): Long => Int =
+    if (ids.isEmpty) _ => -1
+    else if (ids.last - ids.head == ids.length - 1L) { id =>
+      val k = id - ids.head
+      if (k >= 0 && k < ids.length) k.toInt else -1
+    } else { id =>
+      val k = java.util.Arrays.binarySearch(ids, id)
+      if (k >= 0) k else -1
+    }
+
+  /** Kernel state bytes per vertex of [[hyperball]]: two register arrays. */
+  def hyperballStateBytes(log2m: Int): Long = 2L * ((1L << log2m) + 16) + 16
+
+  /** HyperBall's rounds over `g`, as `HarmonicCentrality.hyperballSpark`
+    * runs them: each hop merges every in-neighbor's registers of the
+    * previous hop (register max), then `hc += max(Δball, 0) / hop`; it
+    * stops after `maxHops` or when no ball moved by more than 1e-9.
+    * Returns hc per vertex.
+    */
+  def hyperball(g: Graph, log2m: Int, maxHops: Int): Array[Double] = {
+    val m = 1 << log2m
+    var regs = g.ids.map(Hll.singleton(_, log2m))
+    var next = Array.fill(g.n)(new Array[Byte](m))
+    val ball = Array.fill(g.n)(1.0)
+    val hc = new Array[Double](g.n)
+    var hop = 0.0
+    var r = 0
+    var changed = 1L
+    while (r < maxHops && changed > 0) {
+      r += 1
+      hop += 1.0
+      var i = 0
+      while (i < g.n) { System.arraycopy(regs(i), 0, next(i), 0, m); i += 1 }
+      var k = 0
+      while (k < g.src.length) { Hll.merge(next(g.dst(k)), regs(g.src(k))); k += 1 }
+      changed = 0L
+      i = 0
+      while (i < g.n) {
+        val nb = Hll.estimate(next(i))
+        hc(i) = hc(i) + math.max(nb - ball(i), 0.0) / hop
+        if (math.abs(nb - ball(i)) > 1e-9) changed += 1
+        ball(i) = nb
+        i += 1
+      }
+      val t = regs; regs = next; next = t
+    }
+    hc
+  }
+
+  /** Kernel state bytes per vertex of [[weak]]: two int label arrays. */
+  val WeakStateBytes = 8L
+
+  /** Min-label WCC rounds over `g`, as `ConnectedComponents.weakSpark` runs
+    * them: each round a vertex takes the least label of itself and its
+    * neighbors in either direction from the previous round, for at most
+    * `maxIter` changing rounds plus the confirming one. Returns each
+    * vertex's component as an index into `g.ids` (the ids ascend, so the
+    * least index is the least id).
+    */
+  def weak(g: Graph, maxIter: Int): Array[Int] = {
+    var label = Array.tabulate(g.n)(identity)
+    var next = new Array[Int](g.n)
+    var iter = 0
+    var changed = 1L
+    while (iter <= maxIter && changed > 0) {
+      System.arraycopy(label, 0, next, 0, g.n)
+      var k = 0
+      while (k < g.src.length) {
+        val (u, v) = (g.src(k), g.dst(k))
+        if (label(u) < next(v)) next(v) = label(u)
+        if (label(v) < next(u)) next(u) = label(v)
+        k += 1
+      }
+      changed = (0 until g.n).count(i => next(i) < label(i)).toLong
+      val t = label; label = next; next = t
+      iter += 1
+    }
+    ConnectedComponents.requireConverged(changed, maxIter)
+    label
+  }
+
+  /** Kernel state bytes per vertex of [[pageRank]]: ranks, next ranks,
+    * in-mass and preference as doubles, out-degree and liveness.
+    */
+  val PageRankStateBytes = 40L
+
+  /** PageRank's power iteration over `g`, as `PageRank.runSpark` runs it:
+    * dangling mass is redistributed by the preference (uniform when
+    * `g.pref` is null), and it stops after `maxIter` steps or when the L1
+    * change is at most `tol`. As in the Spark loop, each step keeps only
+    * the vertices the preference has a row for, so the output holds the
+    * preference's vertices (all of them after zero steps). Returns the
+    * ranks and which vertices they hold; sums run in arc order, so ranks
+    * may differ from the Spark loop's in the last bits only.
+    */
+  def pageRank(g: Graph, alpha: Double, maxIter: Int, tol: Double): (Array[Double], Array[Boolean]) = {
+    val n = g.n
+    val pref = if (g.pref == null) Array.fill(n)(1.0 / n) else g.pref
+    val outdeg = new Array[Int](n)
+    g.src.foreach(u => outdeg(u) += 1)
+    var rank = Array.fill(n)(1.0 / n)
+    val live = Array.fill(n)(true)
+    val inMass = new Array[Double](n)
+    var iter = 0
+    var delta = Double.MaxValue
+    while (iter < maxIter && delta > tol) {
+      // a dropped vertex's rank is 0, so it sends no mass
+      java.util.Arrays.fill(inMass, 0.0)
+      var k = 0
+      while (k < g.src.length) {
+        val u = g.src(k)
+        inMass(g.dst(k)) += rank(u) / outdeg(u)
+        k += 1
+      }
+      var dangling = 0.0
+      var i = 0
+      while (i < n) { if (outdeg(i) == 0) dangling += rank(i); i += 1 }
+      val next = new Array[Double](n)
+      delta = 0.0
+      i = 0
+      while (i < n) {
+        if (live(i) && !pref(i).isNaN) {
+          next(i) = ((1.0 - alpha) + alpha * dangling) * pref(i) + alpha * inMass(i)
+          delta += math.abs(next(i) - rank(i))
+        } else live(i) = false
+        i += 1
+      }
+      rank = next
+      iter += 1
+    }
+    (rank, live)
+  }
+
+  /** An operator's result as (id, value) rows in `schema`, ids ascending.
+    * It is an RDD of a few slices of primitive arrays, so the plan does not
+    * embed the rows as a `LocalRelation` would.
+    */
+  def frame[V: ClassTag](spark: SparkSession, schema: StructType, ids: Array[Long],
+                         values: Array[V]): DataFrame = {
+    val slices = math.max(1, (ids.length + RowsPerSlice - 1) / RowsPerSlice)
+    val chunks = (0 until slices).map { s =>
+      val (a, b) = (s * RowsPerSlice, math.min(ids.length, (s + 1) * RowsPerSlice))
+      (ids.slice(a, b), values.slice(a, b))
+    }
+    val rows = spark.sparkContext.parallelize(chunks, slices).flatMap { case (is, vs) =>
+      is.indices.iterator.map(j => Row(is(j), vs(j)))
+    }
+    spark.createDataFrame(rows, schema)
+  }
+}

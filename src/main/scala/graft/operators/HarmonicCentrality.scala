@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{FloatType, LongType, StructField, StructType}
 
 import graft.functions.{Hll, HllMergeAgg}
 
@@ -59,11 +59,38 @@ object HarmonicCentrality {
   }
 
   /** HyperBall approximation: per-node HLL registers grown along REVERSED
-    * arcs (ball of nodes that can reach v), register-max merged each hop via
-    * a typed Aggregator; `hc += (|B(v,r)| − |B(v,r−1)|)/r`.
+    * arcs (ball of nodes that can reach v), register-max merged each hop;
+    * `hc += (|B(v,r)| − |B(v,r−1)|)/r`. Returns (id, hc_val: float), one row
+    * per vertex; an arc with an endpoint outside `vertices` is ignored.
+    *
+    * A graph that fits the driver's budget runs in driver memory
+    * ([[DriverGraph]]), a larger one as [[hyperballSpark]]'s loop; both give
+    * bit-identical `hc_val`.
     */
   def hyperball(vertices: DataFrame, edges: DataFrame, log2m: Int = 8,
                 maxHops: Int = 32): DataFrame = {
+    val spark = vertices.sparkSession
+    DriverGraph.load(vertices, edges, None, DriverGraph.hyperballStateBytes(log2m),
+        DriverGraph.budget(spark)) match {
+      case Some(g) =>
+        // the Spark loop's schema: its hops union the arcs' `to_id` into `id`
+        // and aggregate `hc_val`; without a hop both come from the start row
+        val hopped = maxHops > 0
+        val schema = StructType(Seq(
+          StructField("id", LongType,
+            vertices.schema("id").nullable || hopped && edges.schema("to_id").nullable),
+          StructField("hc_val", FloatType, hopped)))
+        DriverGraph.frame(spark, schema, g.ids,
+          DriverGraph.hyperball(g, log2m, maxHops).map(_.toFloat))
+      case None => hyperballSpark(vertices, edges, log2m, maxHops)
+    }
+  }
+
+  /** [[hyperball]] as a Spark loop: a typed Aggregator merges the registers,
+    * and each hop is one union+aggregate over the whole state.
+    */
+  private[graft] def hyperballSpark(vertices: DataFrame, edges: DataFrame, log2m: Int = 8,
+                                    maxHops: Int = 32): DataFrame = {
     val spark = vertices.sparkSession
     import spark.implicits._
     val mergeHll = F.udaf(new HllMergeAgg(log2m))
@@ -96,6 +123,9 @@ object HarmonicCentrality {
         .unionByName(pulled)
         .groupBy("id").agg(mergeHll(col("regs")).as("regs"),
           max("ball").as("ball"), max("hc_val").as("hc_val"), max("hop").as("hop"))
+        // only a vertex has a self-row: drop the ids arcs name but
+        // `vertices` does not
+        .filter(col("ball").isNotNull)
       // convergence FUSED into the hop (same |ball − old_ball| > 1e-9 test):
       // the old ball is already in this plan, so `__chg` rides along and the
       // changed-count is one aggregate over the hop's own checkpoint — no

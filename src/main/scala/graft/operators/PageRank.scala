@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** PageRank as an iterative DataFrame loop — the capability the reference
@@ -15,29 +16,70 @@ import org.apache.spark.storage.StorageLevel
   *
   * Dangling-node mass is redistributed according to the preference vector
   * (uniform when none), matching LAW's strongly-preferential semantics.
+  *
+  * [[run]] iterates a graph that fits the driver in driver memory
+  * ([[DriverGraph]]) with the same Jacobi steps.
   */
 object PageRank {
 
   /** @param vertices (id)           — all node ids
-    * @param edges    (from_id, to_id)
+    * @param edges    (from_id, to_id); an arc with an endpoint outside
+    *                 `vertices` is ignored
     * @param preference optional (id, pref) summing to 1; uniform when None
     * @param alpha    damping (reference default 0.85)
-    * @return (id, pr_val: double) — backed by the final iteration's
-    *         checkpoint blocks; they stay pinned while the caller holds the
-    *         DataFrame and are released by Spark's ContextCleaner once it is
-    *         dropped (every intermediate iteration is unpersisted eagerly
-    *         below, so a long session leaks nothing else)
+    * @param tol      stop once the L1 change of one step is at most this
+    * @return (id, pr_val: double), one row per id of the preference. A
+    *         graph that fits the driver's budget is iterated in driver
+    *         memory ([[DriverGraph]]) and the result is a small RDD of its
+    *         rows; a larger one runs [[runSpark]]'s loop, whose result is
+    *         backed by checkpoint blocks. The two agree to within summation
+    *         order.
     */
   def run(vertices: DataFrame, edges: DataFrame,
           preference: Option[DataFrame] = None,
           alpha: Double = 0.85, maxIter: Int = 30, tol: Double = 1e-9): DataFrame = {
     val spark = vertices.sparkSession
+    DriverGraph.load(vertices, edges, preference, DriverGraph.PageRankStateBytes,
+        DriverGraph.budget(spark)) match {
+      case Some(g) if g.n == 0 => vertices.select(col("id"), lit(0.0).as("pr_val"))
+      case Some(g) =>
+        // the Spark loop's schema: `id` and `pref` come from the preference
+        // (or the vertices with a literal 1/n); without a step the ranks are
+        // the literal start ranks
+        val pref = preference.getOrElse(vertices.select(col("id"), lit(1.0).as("pref")))
+        val schema = StructType(Seq(
+          StructField("id", LongType,
+            (if (maxIter > 0) pref else vertices).schema("id").nullable),
+          StructField("pr_val", DoubleType, maxIter > 0 && pref.schema("pref").nullable)))
+        val (rank, live) = DriverGraph.pageRank(g, alpha, maxIter, tol)
+        val keep = g.ids.indices.filter(live(_))
+        DriverGraph.frame(spark, schema, keep.map(g.ids(_)).toArray, keep.map(rank(_)).toArray)
+      case None => runSpark(vertices, edges, preference, alpha, maxIter, tol)
+    }
+  }
+
+  /** [[run]] as a Spark loop. Its result is backed by the final iteration's
+    * checkpoint blocks; they stay pinned while the caller holds the
+    * DataFrame and are released by Spark's ContextCleaner once it is
+    * dropped (every intermediate iteration is unpersisted eagerly below,
+    * so a long session leaks nothing else).
+    */
+  private[graft] def runSpark(vertices: DataFrame, edges: DataFrame,
+                              preference: Option[DataFrame] = None, alpha: Double = 0.85,
+                              maxIter: Int = 30, tol: Double = 1e-9): DataFrame = {
+    val spark = vertices.sparkSession
     val n = vertices.count()
     if (n == 0) return vertices.select(col("id"), lit(0.0).as("pr_val"))
 
-    // degree-annotated edges, reused every iteration: cache once
-    val outDeg = edges.groupBy("from_id").agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = edges.join(outDeg, "from_id")
+    // degree-annotated edges, reused every iteration: cache once. The
+    // semi-joins drop arcs with an endpoint outside `vertices` once, here:
+    // counted in `outdeg`, such an arc would send mass nowhere.
+    val ids = vertices.select(col("id"))
+    val arcs = edges
+      .join(ids.withColumnRenamed("id", "from_id"), Seq("from_id"), "left_semi")
+      .join(ids.withColumnRenamed("id", "to_id"), Seq("to_id"), "left_semi")
+    val outDeg = arcs.groupBy("from_id").agg(count(lit(1)).as("outdeg"))
+    val edgesDeg = arcs.join(outDeg, "from_id")
       .select(col("from_id"), col("to_id"), col("outdeg"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     edgesDeg.count()

@@ -147,15 +147,15 @@ object TableIO {
     * One snapshot chain never mixes schemas (a multi-dir read would surface
     * nulls in a missing column): a delta whose column names or types differ
     * from the parent's schema throws IllegalArgumentException before any
-    * data is written.
+    * data is written. A delta is never partitioned: a read of several
+    * `partitionBy` dirs fails with CONFLICTING_DIRECTORY_STRUCTURES.
     */
   def append(df: DataFrame, dir: String, lineage: String = "",
              counters: Map[String, Long] = Map.empty,
              parentId: Option[Long] = None,
-             partitionBy: Seq[String] = Seq.empty,
              properties: Map[String, String] = Map.empty): Snapshot =
-    commit(df, dir, lineage, counters, keepParentPaths = true, parentId, partitionBy,
-      properties)
+    commit(df, dir, lineage, counters, keepParentPaths = true, parentId,
+      properties = properties)
 
   /** Commit an EMPTY snapshot of `schema` as a manifest only — no write job,
     * no data file. Replaces the current snapshot like [[write]]; a later

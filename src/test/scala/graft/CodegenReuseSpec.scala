@@ -43,7 +43,9 @@ class CodegenReuseSpec extends AnyFunSuite {
 
   test("a repeated graph chain compiles no class twice") {
     val docs = SynthDocs.docs(spark, 400L, 40, seed = 5).toDF()
-    def chain(out: String): Unit = {
+    // at this size the public operators run in driver memory, so the chain
+    // also runs with their Spark loops
+    def chain(out: String, onSpark: Boolean): Unit = {
       def wr(df: DataFrame, step: String) = {
         df.write.parquet(s"$out/$step")
         spark.read.parquet(s"$out/$step")
@@ -54,13 +56,17 @@ class CodegenReuseSpec extends AnyFunSuite {
       val folded = DomainGraph.fold(v, e)
       wr(folded.vertices, "domain_vertices")
       wr(folded.edges, "domain_edges")
-      val hc = wr(HarmonicCentrality.hyperball(v, e), "harmonic")
-      val pr = wr(PageRank.run(v, e, maxIter = 3), "pagerank")
+      val hc = wr(if (onSpark) HarmonicCentrality.hyperballSpark(v, e)
+                  else HarmonicCentrality.hyperball(v, e), "harmonic")
+      val pr = wr(if (onSpark) PageRank.runSpark(v, e, maxIter = 3)
+                  else PageRank.run(v, e, maxIter = 3), "pagerank")
       wr(Ranking.joinRanks(v, hc.join(pr, "id")), "ranks")
-      wr(ConnectedComponents.weak(v, e), "wcc")
+      wr(if (onSpark) ConnectedComponents.weakSpark(v, e) else ConnectedComponents.weak(v, e), "wcc")
     }
-    chain(tmp("graft_codegen_chain1"))
-    assert(compiles(chain(tmp("graft_codegen_chain2"))) == 0L)
+    for (onSpark <- Seq(true, false)) {
+      chain(tmp("graft_codegen_chain1"), onSpark)
+      assert(compiles(chain(tmp("graft_codegen_chain2"), onSpark)) == 0L, s"spark loops: $onSpark")
+    }
   }
 
   test("a repeated 2-round crawl compiles no class twice") {
@@ -100,7 +106,7 @@ class CodegenReuseSpec extends AnyFunSuite {
     val v = spark.range(n).toDF("id")
     val fan = ((1L to 10L).map(i => (0L, i)) :+ (1L, 11L)).toDF("from_id", "to_id")
     val path = ((0L until n - 2).map(i => (i, i + 1)) :+ (0L, 11L)).toDF("from_id", "to_id")
-    def hc(e: DataFrame) = HarmonicCentrality.hyperball(v, e).collect()
+    def hc(e: DataFrame) = HarmonicCentrality.hyperballSpark(v, e).collect()
     hc(fan)
     assert(compiles(hc(path)) == 0L)
   }

@@ -89,10 +89,12 @@ class GraphOpsSpec extends AnyFunSuite {
       (0 until n).foreach(v => nr(v) += (0.15 + 0.85 * dangling) / n)
       r = nr
     }
-    val got = PageRank.run(vertsDf(n), edgesDf(edges: _*), maxIter = 40, tol = 0.0)
-      .orderBy("id").collect().map(_.getAs[Double]("pr_val"))
-    got.zip(r).foreach { case (g, e) => assert(math.abs(g - e) < 1e-9, s"$g vs $e") }
-    assert(math.abs(got.sum - 1.0) < 1e-9) // stochastic
+    for (run <- Seq(PageRank.run _, PageRank.runSpark _)) {
+      val got = run(vertsDf(n), edgesDf(edges: _*), None, 0.85, 40, 0.0)
+        .orderBy("id").collect().map(_.getAs[Double]("pr_val"))
+      got.zip(r).foreach { case (g, e) => assert(math.abs(g - e) < 1e-9, s"$g vs $e") }
+      assert(math.abs(got.sum - 1.0) < 1e-9) // stochastic
+    }
   }
 
   test("harmonic centrality: exact BFS matches brute-force Floyd-Warshall") {
@@ -120,21 +122,24 @@ class GraphOpsSpec extends AnyFunSuite {
     val v = vertsDf(n)
     val e = edgesDf(edges: _*)
     val exact = HarmonicCentrality.exact(v, e).orderBy("id").collect().map(_.getAs[Double]("hc_val"))
-    val approx = HarmonicCentrality.hyperball(v, e, log2m = 10).orderBy("id").collect().map(_.getAs[Float]("hc_val").toDouble)
-    val relErr = math.abs(approx.sum - exact.sum) / exact.sum
-    assert(relErr < 0.1, s"relative error $relErr")
+    for (hyperball <- Seq(HarmonicCentrality.hyperball _, HarmonicCentrality.hyperballSpark _)) {
+      val approx = hyperball(v, e, 10, 32).orderBy("id").collect().map(_.getAs[Float]("hc_val").toDouble)
+      val relErr = math.abs(approx.sum - exact.sum) / exact.sum
+      assert(relErr < 0.1, s"relative error $relErr")
+    }
   }
 
   test("connected components: min-label fixpoint + sizes") {
     // components {0,1,2}, {3,4}, {5}
     val e = edgesDf((1, 0), (1, 2), (4, 3))
-    val cc = ConnectedComponents.weak(vertsDf(6), e).orderBy("id").collect()
-      .map(_.getAs[Long]("component"))
-    assert(cc.toSeq == Seq(0L, 0L, 0L, 3L, 3L, 5L))
-    val sizes = ConnectedComponents.sizes(
-      ConnectedComponents.weak(vertsDf(6), e)).collect()
-      .map(r => (r.getAs[Long]("component_rank"), r.getAs[Long]("size")))
-    assert(sizes.toSeq == Seq((0L, 3L), (1L, 2L), (2L, 1L)))
+    for (weak <- Seq(ConnectedComponents.weak _, ConnectedComponents.weakSpark _)) {
+      val cc = weak(vertsDf(6), e, 50).orderBy("id").collect()
+        .map(_.getAs[Long]("component"))
+      assert(cc.toSeq == Seq(0L, 0L, 0L, 3L, 3L, 5L))
+      val sizes = ConnectedComponents.sizes(weak(vertsDf(6), e, 50)).collect()
+        .map(r => (r.getAs[Long]("component_rank"), r.getAs[Long]("size")))
+      assert(sizes.toSeq == Seq((0L, 3L), (1L, 2L), (2L, 1L)))
+    }
   }
 
   test("preference vector: 1/n for members, 0 otherwise, stochastic (CreatePreferenceVector.java)") {

@@ -32,9 +32,11 @@ class StarWccSpec extends AnyFunSuite {
       val edges = es.toDF("from_id", "to_id")
       val a = ConnectedComponents.star(nodes, edges)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val b = ConnectedComponents.weak(nodes, edges)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(a == b, s"n=$n m=$m seed=$seed")
+      for (weak <- Seq(ConnectedComponents.weak _, ConnectedComponents.weakSpark _)) {
+        val b = weak(nodes, edges, 50)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(a == b, s"n=$n m=$m seed=$seed")
+      }
     }
   }
 
@@ -53,17 +55,19 @@ class StarWccSpec extends AnyFunSuite {
     val n = 30
     val nodes = (0L until n.toLong).toDF("id")
     val chain = (1L until n.toLong).map(i => (i, i - 1)).toDF("from_id", "to_id")
-    val e = intercept[IllegalArgumentException] {
-      ConnectedComponents.weak(nodes, chain, maxIter = 5)
-    }
-    assert(e.getMessage.contains("ConnectedComponents.star"))
-    // boundary: diameter == maxIter converges on the final permitted
-    // propagation pass and must RETURN (the confirming pass is extra)
     val six = (0L until 6L).toDF("id")
     val chain6 = (1L until 6L).map(i => (i, i - 1)).toDF("from_id", "to_id")
-    val got = ConnectedComponents.weak(six, chain6, maxIter = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.length == 6 && got.forall(_._2 == 0L))
+    for (weak <- Seq(ConnectedComponents.weak _, ConnectedComponents.weakSpark _)) {
+      val e = intercept[IllegalArgumentException] {
+        weak(nodes, chain, 5)
+      }
+      assert(e.getMessage.contains("ConnectedComponents.star"))
+      // boundary: diameter == maxIter converges on the final permitted
+      // propagation pass and must RETURN (the confirming pass is extra)
+      val got = weak(six, chain6, 5)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(got.length == 6 && got.forall(_._2 == 0L))
+    }
   }
 
   test("isolated vertices are their own component; empty edge set") {
