@@ -442,24 +442,6 @@ object Frontier {
       .sortWithinPartitions("bucket", "key")
   }
 
-  /** Append a delta in the table's OWN layout: bucketed when the table was
-    * written bucketed, legacy (no bucket column) otherwise — one snapshot
-    * chain must never mix schemas (a multi-dir read would surface nulls in
-    * the missing column and silently break the anti-join; TableIO.append
-    * rejects such a delta). The layout is read from the pinned manifest's
-    * schema. A legacy table upgrades wholesale at its next compaction (full
-    * rewrite).
-    */
-  private def appendInLayout(spark: SparkSession, c: Config, df: DataFrame,
-                             dir: String, atSnapshot: Long, lineage: String,
-                             counters: Map[String, Long] = Map.empty): TableIO.Snapshot = {
-    val pinned = TableIO.snapshotAt(spark, dir, atSnapshot)
-      .getOrElse(throw new IllegalStateException(s"no snapshot $atSnapshot in $dir"))
-    val bucketed = TableIO.schema(spark, pinned).fieldNames.contains("bucket")
-    TableIO.append(if (bucketed) clusterByKey(df, c) else df, dir, lineage,
-      counters, parentId = Some(atSnapshot))
-  }
-
   /** Schema of the fetch log: the stored crawl-order sort keys + url. */
   private val logSchema = StructType.fromDDL("round INT, priority DOUBLE, rev_host STRING, url STRING")
 
@@ -507,13 +489,17 @@ object Frontier {
     Some(props)
   }
 
+  /** A property every marker records; a marker without it throws. */
+  private def required(c: Config, round: Int, props: Properties, key: String): String =
+    Option(props.getProperty(key)).getOrElse(throw new IllegalStateException(
+      s"marker ${markerPath(c, round)} records no $key"))
+
   private def readMarker(spark: SparkSession, c: Config, round: Int): Option[State] =
-    readProps(spark, c, round).map(props =>
-      State(props.getProperty("round").toInt, props.getProperty("seen").toLong,
-        props.getProperty("pending").toLong,
-        props.getProperty("removed", "0").toLong,
-        props.getProperty("log").toLong,
-        props.getProperty("logRows").toLong))
+    readProps(spark, c, round).map { props =>
+      def field(key: String) = required(c, round, props, key).toLong
+      State(field("round").toInt, field("seen"), field("pending"), field("removed"),
+        field("log"), field("logRows"))
+    }
 
   /** State pinned by a specific round's marker (round -1 = init). */
   def lastCommittedAt(spark: SparkSession, c: Config, round: Int): Option[State] =
@@ -530,11 +516,12 @@ object Frontier {
     * state was initialized with: the seen set, `pending` and
     * `pending_removed` store `bucket = pmod(xxhash64(key), P)`, and the
     * `(bucket, key)` anti-joins under another P would silently resurrect
-    * already-selected URLs. An init marker without the property (written
-    * before it was recorded) is accepted.
+    * already-selected URLs. An init marker that records no count is
+    * refused too.
     */
   private def checkBuckets(spark: SparkSession, c: Config): Unit =
-    readProps(spark, c, -1).flatMap(p => Option(p.getProperty("buckets"))).foreach { b =>
+    readProps(spark, c, -1).foreach { p =>
+      val b = required(c, -1, p, "buckets")
       if (b.toInt != c.seenCfg.buckets)
         throw new IllegalStateException(s"frontier at ${c.rootDir} was initialized " +
           s"with seenCfg.buckets = $b, this run uses ${c.seenCfg.buckets}")
@@ -876,60 +863,6 @@ object Frontier {
     } finally cachedInputs.foreach(_.unpersist(blocking = false))
   }
 
-  /** Cumulative FILE-SCAN output rows + scan time across the app —
-    * registered once per SparkSession when GRAFT_TIMING is set, so the
-    * per-phase lap lines can report how much each phase's scans actually
-    * EMITTED (the direct evidence for the clustered-adjacency row-group
-    * pruning, VERDICT r5 item 1: a pruned fetch emits O(touched row groups)
-    * rows, an unpruned one emits the whole table).
-    *
-    * Sourced from the scan nodes' SQL metrics via a QueryExecutionListener
-    * — `TaskMetrics.inputMetrics.bytesRead` is NOT populated for parquet
-    * scans in this Spark build (measured 0 on a full 4 GB scan), so
-    * stage-level listeners cannot see scan volume at all. Each metric
-    * accumulator is counted once by id (reused exchanges revisit the same
-    * scan node). Listener-bus delivery is asynchronous, so attribution to a
-    * lap is approximate (±1 query) — fine for a diagnostic.
-    */
-  private object ScanMeter {
-    // counters are scoped PER APPLICATION id: two live SparkSessions from
-    // different applications in one JVM must not reset each other's totals
-    // (ADVICE r6) — sequential test sessions simply accumulate into separate
-    // entries (bounded: one small entry per application ever seen)
-    private final class Counters {
-      val rows = new java.util.concurrent.atomic.LongAdder
-      val ms = new java.util.concurrent.atomic.LongAdder
-      val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-    }
-    private val byApp =
-      new java.util.concurrent.ConcurrentHashMap[String, Counters]()
-    private val attached = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-    private def walk(c: Counters, p: org.apache.spark.sql.execution.SparkPlan): Unit =
-      graft.PlanScan.foreachFileScan(p) { f =>
-        f.metrics.get("numOutputRows").foreach(m => if (c.seen.add(m.id)) c.rows.add(m.value))
-        f.metrics.get("scanTime").foreach(m => if (c.seen.add(m.id)) c.ms.add(m.value))
-      }
-
-    def ensure(spark: SparkSession): Unit = {
-      val appId = spark.sparkContext.applicationId
-      val c = byApp.computeIfAbsent(appId, _ => new Counters)
-      if (attached.add(appId)) {
-        spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(fn: String,
-              qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-            try walk(c, qe.executedPlan) catch { case _: Throwable => () }
-          override def onFailure(fn: String,
-              qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-        })
-      }
-    }
-    def total(spark: SparkSession): (Long, Long) = {
-      val c = byApp.get(spark.sparkContext.applicationId)
-      if (c == null) (0L, 0L) else (c.rows.sum(), c.ms.sum())
-    }
-  }
-
   private def runRound(spark: SparkSession, c: Config, st: State, fetcher: Fetcher,
                        budgets: DataFrame, robots: DataFrame,
                        priorities: DataFrame,
@@ -937,17 +870,6 @@ object Frontier {
                        prep: Option[Prep] = None,
                        prepareNext: Boolean = false)
       : (State, Option[Map[Int, Array[Byte]]], Option[Prep]) = {
-    val timing = sys.env.contains("GRAFT_TIMING")
-    var tPrev = System.nanoTime()
-    var bPrev = if (timing) { ScanMeter.ensure(spark); ScanMeter.total(spark) } else (0L, 0L)
-    def lap(phase: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      val b = ScanMeter.total(spark)
-      System.err.println(f"[round-timing] $phase%-16s ${(now - tPrev) / 1e9}%.2fs " +
-        f"scanRows=${(b._1 - bPrev._1) / 1e6}%.1fM scanMs=${b._2 - bPrev._2}")
-      tPrev = now
-      bPrev = b
-    }
     val round = st.round + 1
     // label this thread's jobs for the round (restored on the success path;
     // a leaked label after a failed round is cosmetic only)
@@ -958,15 +880,10 @@ object Frontier {
     // materialization), and compaction bounds how many delta files it scans.
     // Both tables carry the seen set's bucket layout (see [[clusterByKey]]),
     // so the set difference joins on (bucket, key) — co-partitioned by
-    // construction; a legacy (pre-bucket) table joins on key alone until its
-    // next compaction rewrites it into the layout
-    val pendingAdd = TableIO.readAt(spark, pendingDir(c), st.pending)
-    val removedT = TableIO.readAt(spark, removedDir(c), st.removed)
-    val joinCols =
-      if (pendingAdd.columns.contains("bucket") && removedT.columns.contains("bucket"))
-        Seq("bucket", "key")
-      else Seq("key")
-    val pending = pendingAdd.join(removedT, joinCols, "left_anti").drop("bucket")
+    // construction
+    val pending = TableIO.readAt(spark, pendingDir(c), st.pending)
+      .join(TableIO.readAt(spark, removedDir(c), st.removed), Seq("bucket", "key"), "left_anti")
+      .drop("bucket")
 
     // ---- politeness selection: salted two-phase per-host token top-k ----
     // pipelined by the PREVIOUS round when available (computed over the
@@ -974,7 +891,6 @@ object Frontier {
     // resume pay the selection job here
     val Prep(selected, nSelected, selectedBlocks, candPrep, nCandPrep, ubPrep) =
       prep.getOrElse(selectBatch(c, pending, budgets))
-    lap("select")
 
     // ---- deterministic total crawl order ----
     // the total crawl order is a pure function of the stored sort keys —
@@ -983,7 +899,6 @@ object Frontier {
     // export (SURVEY §4: no per-round single-order barrier)
     val logRows = selected
       .select(lit(round).as("round"), col("priority"), col("rev_host"), col("url"))
-    lap("order")
 
     // the log append depends only on `selected` — start it now so the write
     // overlaps the fetch/extract pass (commit-safety is unchanged: the round
@@ -1008,7 +923,6 @@ object Frontier {
       case Some(cd) => (cd, nCandPrep, ubPrep)
       case None => extractCandidates(c, fetcher, selected, nSelected, priorities, robots)
     }
-    lap("extract")
     // the bloom sidecar as a driver map, read at most once per run: the
     // first round (or a resume) loads it here for both the probe and the
     // seen append; later rounds reuse the map the previous append merged
@@ -1022,13 +936,9 @@ object Frontier {
     // commit futures race on (bloom probe + anti-join over the warm
     // candidates cache) is cheap
     val newRows = UrlSeen.unseen(spark, seenDir(c), candidates, c.seenCfg, c.useBloom,
-        atSnapshot = Some(st.seen), blooms = blooms0,
-        broadcastBloom = UrlSeen.sidecarFitsDriver(c.seenCfg))
+        atSnapshot = Some(st.seen), blooms = blooms0)
       .select("key", "url", "rev_host", "priority")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    lap("fetch+dedup")
-    if (sys.env.contains("GRAFT_EXPLAIN"))
-      System.err.println(newRows.queryExecution.executedPlan.toString.take(8000))
 
     // ---- commit: the three state tables are independent — write them
     // concurrently (the reference runs independent steps in background too,
@@ -1042,9 +952,8 @@ object Frontier {
     val compact = c.compactPendingEvery > 0 && (round + 1) % c.compactPendingEvery == 0
     val fPending = labeled(if (compact) "pending:compact" else "pending") {
       if (compact) {
-        // full rewrite: always lands the bucket layout (upgrades a legacy
-        // table wholesale — see appendInLayout); the removed table resets
-        // to an empty, manifest-only snapshot
+        // full rewrite of the live set; the removed table resets to an
+        // empty, manifest-only snapshot
         val live = pending.join(selected.select("key"), Seq("key"), "left_anti")
           .unionByName(newRows)
         (TableIO.write(clusterByKey(live, c), pendingDir(c), s"round:$round:pending:compact"),
@@ -1053,11 +962,11 @@ object Frontier {
         // two independent tables — overlap the writes (the round marker is
         // still the only serialization point), so the pending chain's wall
         // is one append, not two back to back
-        val fp = labeled("pending") { appendInLayout(spark, c, newRows,
-          pendingDir(c), st.pending, s"round:$round:pending") }
-        val fr = labeled("removed") { appendInLayout(spark, c,
-          selected.select("key"), removedDir(c), st.removed,
-          s"round:$round:removed", Map("rows" -> nSelected)) }
+        val fp = labeled("pending") { TableIO.append(clusterByKey(newRows, c),
+          pendingDir(c), s"round:$round:pending", parentId = Some(st.pending)) }
+        val fr = labeled("removed") { TableIO.append(clusterByKey(selected.select("key"), c),
+          removedDir(c), s"round:$round:removed", Map("rows" -> nSelected),
+          parentId = Some(st.removed)) }
         (Await.result(fp, Duration.Inf), Await.result(fr, Duration.Inf))
       }
     }
@@ -1147,7 +1056,6 @@ object Frontier {
         releaseOwn()
         throw t
       }
-    lap("commit")
     val nNew = seenSnap.counters.valuesIterator.sum
     val newState = State(round, seenSnap.id, pSnap.id, rSnap.id, lSnap.id,
       st.logRows + nSelected)
@@ -1167,7 +1075,6 @@ object Frontier {
         releaseOwn()
         throw t
       }
-    lap("prep-next")
     // round is durably committed — release its intermediates (the
     // pipelined next selection is already checkpoint-materialized, so
     // releasing the caches its plan was built from cannot invalidate it)

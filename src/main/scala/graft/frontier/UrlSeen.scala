@@ -104,15 +104,16 @@ object UrlSeen {
 
   /** Fail loudly when `cfg.buckets` differs from the bucket count the seen
     * snapshot was written with: the `(bucket, key)` anti-join under another
-    * P would miss every seen key and resurrect it as new. A snapshot written
-    * before the count was recorded is accepted.
+    * P would miss every seen key and resurrect it as new. A snapshot that
+    * records no count is refused too.
     */
-  private def checkBuckets(dir: String, s: TableIO.Snapshot, cfg: Config): Unit =
-    s.properties.get(BucketsProperty).foreach { p =>
-      if (p.toInt != cfg.buckets) throw new IllegalStateException(
-        s"seen set $dir (snapshot ${s.id}) is laid out with buckets = $p, " +
-          s"but the config has buckets = ${cfg.buckets}")
-    }
+  private def checkBuckets(dir: String, s: TableIO.Snapshot, cfg: Config): Unit = {
+    val p = s.properties.getOrElse(BucketsProperty, throw new IllegalStateException(
+      s"seen set $dir (snapshot ${s.id}) records no bucket count"))
+    if (p.toInt != cfg.buckets) throw new IllegalStateException(
+      s"seen set $dir (snapshot ${s.id}) is laid out with buckets = $p, " +
+        s"but the config has buckets = ${cfg.buckets}")
+  }
 
   private def snapshot(spark: SparkSession, dir: String, id: Option[Long]): Option[TableIO.Snapshot] =
     id match {
@@ -153,7 +154,7 @@ object UrlSeen {
     *                   to skip the disk read; omitted on resume
     * @return (snapshot, merged sidecar map) — thread the map into the next
     *         round's [[unseen]]/append. None when the sidecar is
-    *         table-resident (probe with `broadcastBloom = false`).
+    *         table-resident ([[unseen]] then probes the sidecar table).
     */
   def append(spark: SparkSession, dir: String, keys: DataFrame,
              cfg: Config = Config(), lineage: String = "",
@@ -252,27 +253,19 @@ object UrlSeen {
       case None => Map.empty
     }
 
-  /** Full rebuild of the per-bucket bloom sidecar from the current table
-    * (compaction path; the per-round path is incremental).
-    */
-  def refreshBloom(spark: SparkSession, dir: String, cfg: Config = Config()): Unit = {
-    val bloomAgg = F.udaf(new BloomAgg(cfg.bitsPerBucket, cfg.numHashes))
-    val blooms = TableIO.read(spark, dir)
-      .select(col("bucket"), xxhash64(col("key")).as("h"))
-      .groupBy("bucket").agg(bloomAgg(col("h")).as("bits"))
-    TableIO.write(blooms, s"$dir-bloom", lineage = "urlseen:bloom")
-  }
-
   /** Candidates NOT in the seen set. Bloom-prunes the exact anti-join:
-    * definitely-unseen candidates bypass it entirely.
+    * definitely-unseen candidates bypass it entirely. While the sidecar fits
+    * the driver ([[sidecarFitsDriver]]) the probe broadcasts it as a map,
+    * else it joins the sidecar table on bucket.
     *
     * @param candidates any schema containing `key`
+    * @param blooms     the sidecar map from the previous [[append]]; read
+    *                   from disk when omitted (broadcast path only)
     */
   def unseen(spark: SparkSession, dir: String, candidates: DataFrame,
              cfg: Config = Config(), useBloom: Boolean = true,
              atSnapshot: Option[Long] = None,
-             blooms: Option[Map[Int, Array[Byte]]] = None,
-             broadcastBloom: Boolean = true): DataFrame = {
+             blooms: Option[Map[Int, Array[Byte]]] = None): DataFrame = {
     // exact layer pinned to the marker's snapshot (crash-replay correctness);
     // the bloom sidecar may be ahead of it — false "maybe seen" answers fall
     // through to the pinned exact anti-join, so staleness cannot corrupt.
@@ -286,7 +279,7 @@ object UrlSeen {
     val k = cfg.numHashes
     val pruned =
       if (!useBloom) withBucket.withColumn("__maybe", lit(true))
-      else if (broadcastBloom) {
+      else if (sidecarFitsDriver(cfg)) {
         val bloomMap: Map[Int, Array[Byte]] =
           blooms.getOrElse(readBloomMap(spark, dir))
         val bc = spark.sparkContext.broadcast(bloomMap)

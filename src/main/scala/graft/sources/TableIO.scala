@@ -35,14 +35,14 @@ object TableIO {
     * @param schema     the read schema (data columns, then partition
     *                   columns, all nullable) — kept in the manifest, as
     *                   Iceberg keeps it in table metadata, so planning a read
-    *                   never opens a data file. None only for a manifest
-    *                   written before schemas were recorded.
+    *                   never opens a data file. Every manifest records one:
+    *                   reading one without it throws.
     * @param properties table properties a caller pins to the snapshot (e.g.
     *                   a layout parameter), kept apart from the counters
     */
   final case class Snapshot(id: Long, parentId: Long, paths: Seq[String],
                             counters: Map[String, Long], lineage: String,
-                            schema: Option[StructType] = None,
+                            schema: StructType,
                             properties: Map[String, String] = Map.empty)
 
   private def fs(spark: SparkSession, dir: String): FileSystem =
@@ -77,7 +77,8 @@ object TableIO {
         paths = props.getProperty("paths", "").split(",").filter(_.nonEmpty).toSeq,
         counters = prefixed(props, "counter.").map { case (k, v) => k -> v.toLong },
         lineage = props.getProperty("lineage", ""),
-        schema = Option(props.getProperty("schema")).map(StructType.fromDDL),
+        schema = StructType.fromDDL(Option(props.getProperty("schema")).getOrElse(
+          throw new IllegalStateException(s"manifest $p records no schema"))),
         properties = prefixed(props, "property."))
     } finally in.close()
   }
@@ -88,7 +89,7 @@ object TableIO {
     props.setProperty("parent", s.parentId.toString)
     props.setProperty("paths", s.paths.mkString(","))
     props.setProperty("lineage", s.lineage)
-    s.schema.foreach(sc => props.setProperty("schema", sc.toDDL))
+    props.setProperty("schema", s.schema.toDDL)
     s.counters.foreach { case (k, v) => props.setProperty(s"counter.$k", v.toString) }
     s.properties.foreach { case (k, v) => props.setProperty(s"property.$k", v) }
     def dump(p: Path): Unit = {
@@ -165,7 +166,7 @@ object TableIO {
              properties: Map[String, String] = Map.empty): Snapshot = {
     val current = currentSnapshot(spark, dir)
     val snap = Snapshot(current.map(_.id + 1).getOrElse(0L), current.map(_.id).getOrElse(-1L),
-      Seq.empty, Map.empty, lineage, Some(nullable(schema)), properties)
+      Seq.empty, Map.empty, lineage, nullable(schema), properties)
     writeManifest(fs(spark, dir), dir, snap)
     snap
   }
@@ -185,11 +186,10 @@ object TableIO {
     val deltaSchema = readSchema(df, partitionCols)
     val recorded = parent.filter(_ => keepParentPaths) match {
       case Some(p) =>
-        val parentSchema = schema(spark, p)
-        require(sameColumns(deltaSchema, parentSchema),
+        require(sameColumns(deltaSchema, p.schema),
           s"append to $dir: delta columns (${deltaSchema.toDDL}) differ from " +
-            s"snapshot ${p.id}'s (${parentSchema.toDDL})")
-        parentSchema
+            s"snapshot ${p.id}'s (${p.schema.toDDL})")
+        p.schema
       case None => deltaSchema
     }
     val next = current.map(_.id + 1).getOrElse(0L)
@@ -205,7 +205,7 @@ object TableIO {
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(dataDir)
     val paths = (if (keepParentPaths) parent.map(_.paths).getOrElse(Seq.empty) else Seq.empty) :+ dataDir
     val snap = Snapshot(next, parent.map(_.id).getOrElse(-1L), paths, counters, lineage,
-      Some(recorded), properties)
+      recorded, properties)
     writeManifest(fs(spark, dir), dir, snap)
     snap
   }
@@ -222,21 +222,11 @@ object TableIO {
     read(spark, snapshotAt(spark, dir, id)
       .getOrElse(throw new IllegalStateException(s"no snapshot $id in $dir")))
 
-  /** Read one snapshot. With a recorded schema this plans without touching
-    * a data file — no schema-inference job — and an empty snapshot is a
+  /** Read one snapshot. The recorded schema plans it without touching a
+    * data file — no schema-inference job — and an empty snapshot is a
     * `LocalRelation` the optimizer can fold away (e.g. out of an anti-join).
-    * A manifest without a schema falls back to parquet schema inference.
     */
-  def read(spark: SparkSession, s: Snapshot): DataFrame = s.schema match {
-    case Some(sc) if s.paths.isEmpty =>
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), sc)
-    case Some(sc) => spark.read.schema(sc).parquet(s.paths: _*)
-    case None if s.paths.isEmpty =>
-      throw new IllegalStateException(s"snapshot ${s.id} has neither data nor a schema")
-    case None => spark.read.parquet(s.paths: _*)
-  }
-
-  /** The snapshot's schema: the recorded one, else inferred from its files. */
-  def schema(spark: SparkSession, s: Snapshot): StructType =
-    s.schema.getOrElse(read(spark, s).schema)
+  def read(spark: SparkSession, s: Snapshot): DataFrame =
+    if (s.paths.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), s.schema)
+    else spark.read.schema(s.schema).parquet(s.paths: _*)
 }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
 import graft.frontier.{CorpusFetcher, Frontier, UrlSeen}
 import graft.functions.{gf, HostStr}
@@ -130,11 +129,11 @@ class FrontierSpec extends AnyFunSuite {
     UrlSeen.append(spark, s"$dir/seen",
       Seq("com,a)/1", "com,b)/2", "com,c)/3").toDF("key"), c.seenCfg)
     val cands = Seq("com,a)/1", "com,x)/9", "com,c)/3", "com,y)/8").toDF("key")
-    def keys(broadcast: Boolean) =
-      UrlSeen.unseen(spark, s"$dir/seen", cands, c.seenCfg,
-        broadcastBloom = broadcast).collect().map(_.getString(0)).toSet
-    assert(keys(broadcast = true) == Set("com,x)/9", "com,y)/8"))
-    assert(keys(broadcast = false) == keys(broadcast = true))
+    def keys(seenCfg: UrlSeen.Config) =
+      UrlSeen.unseen(spark, s"$dir/seen", cands, seenCfg).collect().map(_.getString(0)).toSet
+    assert(keys(c.seenCfg) == Set("com,x)/9", "com,y)/8"))
+    // no driver room for the sidecar: the probe joins the sidecar table
+    assert(keys(c.seenCfg.copy(sidecarDriverMaxBytes = 0L)) == keys(c.seenCfg))
   }
 
   test("bloom pruning does not change results") {
@@ -173,28 +172,6 @@ class FrontierSpec extends AnyFunSuite {
       s"$killed/pending_removed", "orphan")
 
     // resume to 4 rounds — replay must pin to markers, ignoring orphans
-    runAll(killed, rounds = 4)
-    assert(logOf(killed) == logOf(full))
-    assert(seenOf(killed) == seenOf(full))
-  }
-
-  test("a crawl resumed from manifests without recorded schemas matches the uninterrupted run") {
-    val full = Files.createTempDirectory("f_legacy_full").toString
-    runAll(full, rounds = 4)
-    val killed = Files.createTempDirectory("f_legacy_kill").toString
-    runAll(killed, rounds = 2)
-    // make every data-bearing manifest look like one written before schemas
-    // were recorded; the resumed rounds infer those schemas from the files
-    // (an empty, manifest-only snapshot cannot exist without its schema)
-    val manifests = for {
-      t <- new java.io.File(killed).listFiles().toSeq if t.isDirectory
-      m <- t.listFiles().toSeq if m.getName.startsWith("_snapshot")
-      if Files.readAllLines(m.toPath).asScala.exists(l => l.startsWith("paths=") && l != "paths=")
-    } yield m
-    assert(manifests.nonEmpty)
-    manifests.foreach(TestFiles.dropLines(_, "schema="))
-    val st = Frontier.lastCommitted(spark, cfg(killed)).get
-    assert(TableIO.snapshotAt(spark, s"$killed/pending", st.pending).get.schema.isEmpty)
     runAll(killed, rounds = 4)
     assert(logOf(killed) == logOf(full))
     assert(seenOf(killed) == seenOf(full))
@@ -286,12 +263,14 @@ class FrontierSpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("buckets = 16"), err.getMessage)
     assert(Frontier.lastCommitted(spark, c16).get.round == -1)
-    // an init marker written before the count was recorded is accepted
+    // an init marker that records no bucket count is refused, not trusted
     val marker = new java.io.File(s"$dir/markers/round--1")
-    Files.write(marker.toPath, Files.readAllLines(marker.toPath).asScala
-      .filterNot(_.startsWith("buckets=")).asJava)
-    new java.io.File(s"$dir/markers/.round--1.crc").delete()
-    assert(Frontier.run(spark, c16, fetcher, 1, budgets, robots, priorities).round == 0)
+    TestFiles.dropLines(marker, "buckets=")
+    val unrecorded = intercept[IllegalStateException] {
+      Frontier.run(spark, c16, fetcher, 1, budgets, robots, priorities)
+    }
+    assert(unrecorded.getMessage.contains(marker.getPath), unrecorded.getMessage)
+    assert(Frontier.lastCommitted(spark, c16).get.round == -1)
   }
 
   test("the seen set refuses a bucket count other than the one it was written with") {
@@ -303,12 +282,15 @@ class FrontierSpec extends AnyFunSuite {
     val probe = intercept[IllegalStateException](UrlSeen.unseen(spark, dir, keys, eight))
     assert(probe.getMessage.contains("buckets = 4"), probe.getMessage)
     intercept[IllegalStateException](UrlSeen.append(spark, dir, keys, eight))
-    // the matching count works, and a snapshot without the property is accepted
+    // the matching count works, and a snapshot without the property is refused
     val (snap, _) = UrlSeen.append(spark, dir, keys, four)
     assert(snap.properties.get("buckets").contains("4"))
     assert(snap.counters.keySet.forall(_.startsWith("bucket.")))
     TestFiles.dropLines(new java.io.File(s"$dir/_snapshot-${snap.id}"), "property.buckets=")
-    assert(UrlSeen.unseen(spark, dir, keys, eight, atSnapshot = Some(snap.id)).count() == 1)
+    val unrecorded = intercept[IllegalStateException] {
+      UrlSeen.unseen(spark, dir, keys, four, atSnapshot = Some(snap.id))
+    }
+    assert(unrecorded.getMessage.contains(dir), unrecorded.getMessage)
   }
 
   test("physical-path configs (candidate barrier, broadcast fetch) don't change results") {
@@ -436,11 +418,10 @@ class FrontierSpec extends AnyFunSuite {
     assert(sidecar(a) == sidecar(b))
     // probe equivalence on top of the merged sidecars
     val cands = Seq("com,a)/1", "com,zz)/9", "net,d)/4", "org,yy)/8").toDF("key")
-    def unseenOf(dir: String, cfg0: UrlSeen.Config, bc: Boolean) =
-      UrlSeen.unseen(spark, dir, cands, cfg0, broadcastBloom = bc)
-        .collect().map(_.getString(0)).toSet
-    assert(unseenOf(a, small, bc = true) == Set("com,zz)/9", "org,yy)/8"))
-    assert(unseenOf(b, big, bc = false) == Set("com,zz)/9", "org,yy)/8"))
+    def unseenOf(dir: String, cfg0: UrlSeen.Config) =
+      UrlSeen.unseen(spark, dir, cands, cfg0).collect().map(_.getString(0)).toSet
+    assert(unseenOf(a, small) == Set("com,zz)/9", "org,yy)/8"))
+    assert(unseenOf(b, big) == Set("com,zz)/9", "org,yy)/8"))
   }
 
   test("sitemap URLs from robots.txt are scheduled (reference default-on link class)") {

@@ -24,9 +24,7 @@ class TableIOSpec extends AnyFunSuite {
     df.collect().map(_.getLong(0)).toSet
   }
 
-  /** Drop the recorded schema from a snapshot's manifests, as a manifest
-    * written before schemas were recorded looks.
-    */
+  /** Drop the recorded schema from a snapshot's manifests. */
   private def stripSchema(dir: String, id: Long): Unit = {
     TestFiles.dropLines(new java.io.File(s"$dir/_snapshot-$id"), "schema=")
     if (TableIO.currentSnapshot(spark, dir).exists(_.id == id))
@@ -136,15 +134,15 @@ class TableIOSpec extends AnyFunSuite {
     val s0 = TableIO.write(df, dir, partitionBy = Seq("bucket"))
     val inferred = spark.read.parquet(s0.paths: _*).schema
     // partition column last and every level nullable, as a parquet read reports it
-    assert(s0.schema.contains(inferred), s0.schema)
-    assert(TableIO.snapshotAt(spark, dir, s0.id).get.schema.contains(inferred))
+    assert(s0.schema == inferred, s0.schema)
+    assert(TableIO.snapshotAt(spark, dir, s0.id).get.schema == inferred)
     assert(TableIO.read(spark, dir).schema == inferred)
     assert(rows(dir) == Set(1L, 2L))
     // an append carries the schema on
     val plain = Files.createTempDirectory("tio_schema_ap").toString + "/t"
     TableIO.write(df, plain)
     val s1 = TableIO.append(Seq((1, 3L, Seq(("b", 2.0)))).toDF("bucket", "v", "pairs"), plain)
-    assert(s1.schema.contains(spark.read.parquet(s1.paths: _*).schema))
+    assert(s1.schema == spark.read.parquet(s1.paths: _*).schema)
     assert(TableIO.read(spark, plain).select("v").as[Long].collect().toSet == Set(1L, 2L, 3L))
   }
 
@@ -158,9 +156,11 @@ class TableIOSpec extends AnyFunSuite {
         Files.createTempDirectory("tio_nojob_c").toString + "/t")
     }
     assert(jobs.isEmpty, jobs)
-    // the recorder does see the schema-inference job of a manifest without a schema
+    // there is no inference fallback: a manifest without a schema fails loudly
     stripSchema(dir, s0.id)
-    assert(JobRecorder.during(spark)(TableIO.read(spark, dir).schema).nonEmpty)
+    val err = intercept[IllegalStateException](TableIO.read(spark, dir))
+    assert(err.getMessage.contains(s"$dir/_snapshot"), err.getMessage)
+    intercept[IllegalStateException](TableIO.readAt(spark, dir, s0.id))
   }
 
   test("an empty snapshot is a manifest only, reads back typed, and takes appends") {
@@ -181,23 +181,6 @@ class TableIOSpec extends AnyFunSuite {
     // create over an existing table replaces it, like write
     val s2 = TableIO.create(spark, schema, dir)
     assert(s2.parentId == s1.id && TableIO.read(spark, dir).count() == 0)
-  }
-
-  test("a manifest without a recorded schema still reads, and its next append records one") {
-    val dir = Files.createTempDirectory("tio_legacy").toString + "/t"
-    val s0 = TableIO.write(Seq(1L, 2L).toDF("v"), dir)
-    stripSchema(dir, s0.id)
-    val legacy = TableIO.snapshotAt(spark, dir, s0.id).get
-    assert(legacy.schema.isEmpty)
-    assert(rows(dir) == Set(1L, 2L))
-    val s1 = TableIO.append(Seq(3L).toDF("v"), dir, parentId = Some(s0.id))
-    assert(s1.schema.exists(_.fieldNames.toSeq == Seq("v")))
-    assert(rows(dir, Some(s1.id)) == Set(1L, 2L, 3L))
-    // with neither data nor schema there is nothing to read: fail loudly
-    val e0 = Files.createTempDirectory("tio_legacy_e").toString + "/t"
-    TableIO.create(spark, StructType.fromDDL("v BIGINT"), e0)
-    stripSchema(e0, 0L)
-    intercept[IllegalStateException](TableIO.read(spark, e0))
   }
 
   test("an append whose columns differ from the parent's schema throws") {

@@ -5,8 +5,8 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-/** Edits to committed metadata files, for specs that need the older form
-  * of a manifest or marker.
+/** Edits to committed metadata files, for specs that check how a manifest
+  * or marker missing a field is refused.
   */
 object TestFiles {
   /** Drop the lines starting with `prefix`, and the Hadoop checksum file
