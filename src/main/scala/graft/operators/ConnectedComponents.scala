@@ -30,7 +30,7 @@ object ConnectedComponents {
   def weak(vertices: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame = {
     val spark = vertices.sparkSession
     DriverGraph.load(vertices, edges, None, DriverGraph.WeakStateBytes,
-        DriverGraph.budget(spark)) match {
+        DriverLoad.budget(spark)) match {
       case Some(g) =>
         // the Spark loop's schema: messages to either endpoint join `id`,
         // and `component` is an aggregate

@@ -9,26 +9,22 @@ import org.apache.spark.sql.functions._
   * WITHOUT the single-partition window that would be the scalability cliff at
   * 10^8-10^10 rows (SURVEY.md §4).
   *
-  * Method: range-partition by the sort key (equal keys co-located, partitions
-  * ordered), sort within partitions, count rows per partition, broadcast the
-  * cumulative offsets (one long per partition), then
-  * `id = row_number within partition + offset`. Two jobs over a persisted
-  * stage; every step is fully parallel.
+  * Method: [[Ranks.rowNumber]] minus one. An input that fits the driver's
+  * budget is sorted in the driver after one collect; a larger one is
+  * range-partitioned by the sort key (equal keys co-located, partitions
+  * ordered), sorted within partitions and counted per partition, and
+  * `id = row_number within partition + offset` from the broadcast
+  * cumulative offsets.
   */
 object DenseIds {
 
   /** Assign `idCol` = 0..n-1 ascending in `sortCol` order.
     *
     * Requires `sortCol` values to be distinct (vertex names are). The result
-    * is a pure function of the global sort order — independent of partition
-    * count and range boundaries.
-    *
-    * The intermediate stage is persisted so the partition ids seen by the
-    * count job and the final job are identical; callers should materialize
-    * the result (write / cache) in the same job scope.
+    * is a pure function of the global sort order — independent of the plan
+    * that assigns it.
     */
-  def assign(df: DataFrame, sortCol: String, idCol: String = "id",
-             partitions: Int = 0): DataFrame =
-    Ranks.rowNumber(df, Seq(col(sortCol)), idCol, partitions)
+  def assign(df: DataFrame, sortCol: String, idCol: String = "id"): DataFrame =
+    Ranks.rowNumber(df, Seq(col(sortCol)), idCol)
       .withColumn(idCol, col(idCol) - 1L)
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import scala.reflect.ClassTag
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructType}
@@ -13,10 +12,9 @@ import graft.functions.Hll
   * these steps inside one JVM over in-memory arrays (WebGraph/LAW,
   * `process_webgraph.sh:255-272`); a Spark loop pays 4 to 16 jobs per
   * iteration for the same rounds. So when the graph fits a byte budget of
-  * the driver, one job collects it and the operator iterates here; when it
-  * does not, [[load]] declines and the operator runs its Spark loop.
-  * Whether the graph fits is decided from the input's size alone, as "To
-  * Partition, or Not to Partition" (SIGMOD 2021) chooses a join strategy.
+  * the driver ([[DriverLoad]]), one job collects it and the operator
+  * iterates here; when it does not, [[load]] declines and the operator runs
+  * its Spark loop.
   *
   * The kernels run the Spark loops' synchronous rounds with their exact
   * semantics. Arcs count as a multiset, and an arc with an endpoint that is
@@ -24,13 +22,6 @@ import graft.functions.Hll
   */
 private[graft] object DriverGraph {
 
-  /** The loaded graph may take 1/16 of the driver's max heap. */
-  val HeapShare = 16L
-  /** ... and 1/4 of `spark.driver.maxResultSize` (0 = unlimited). The load's
-    * results can reach [[PartitionSkew]] budgets in the worst case, which
-    * then still stays below the limit Spark aborts a job at.
-    */
-  val ResultShare = 4L
   /** Driver bytes per arc: two packed longs while loading, then two int
     * vertex indices.
     */
@@ -41,22 +32,8 @@ private[graft] object DriverGraph {
   val VertexBytes = 16L
   /** Driver bytes per preference row: its packed id and value. */
   val PrefBytes = 16L
-  /** One partition may return up to this many even shares of the budget,
-    * so an uneven split does not decline a graph that fits, while the
-    * results of one load stay within this many budgets.
-    */
-  val PartitionSkew = 4L
   /** Rows per slice of an operator's output RDD. */
   val RowsPerSlice = 1 << 20
-
-  /** Bytes the loaded graph may take, from the driver's max heap and
-    * `spark.driver.maxResultSize`.
-    */
-  def budget(spark: SparkSession): Long = {
-    val heap = Runtime.getRuntime.maxMemory / HeapShare
-    val results = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    if (results > 0) math.min(heap, results / ResultShare) else heap
-  }
 
   /** A graph in driver memory. `ids` are the vertex ids, ascending; arc k
     * runs from `ids(src(k))` to `ids(dst(k))`. `pref(i)` is vertex i's
@@ -72,12 +49,11 @@ private[graft] object DriverGraph {
     * preference (id, pref) when they fit `budget`, counting `stateBytes` of
     * kernel state per vertex. Declines (None) without starting a job when
     * the optimized plans' size estimate is over the budget; otherwise one
-    * job collects every input as packed longs, at most the budget's
-    * [[PartitionSkew]]-fold share per partition, and declines when the rows
-    * it got cost more than the budget. Also declines ids or preference
-    * columns of another type than long/double, a null vertex id, a
-    * repeated vertex or preference id and a null or NaN preference: the
-    * Spark loop keeps whatever it does with those.
+    * job collects every input as packed longs ([[DriverLoad.collect]]),
+    * and declines when the rows cost more than the budget. Also declines
+    * ids or preference columns of another type than long/double, a null
+    * vertex id, a repeated vertex or preference id and a null or NaN
+    * preference: the Spark loop keeps whatever it does with those.
     */
   def load(vertices: DataFrame, edges: DataFrame, preference: Option[DataFrame],
            stateBytes: Long, budget: Long): Option[Graph] = {
@@ -90,28 +66,20 @@ private[graft] object DriverGraph {
     val inputs = Seq(v, e) ++ p
     if (inputs.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum > budget) return None
 
-    val rdds = inputs.map(_.queryExecution.toRdd)
-    val parts = rdds.map(_.getNumPartitions)
-    val cap = math.min(budget, budget * PartitionSkew / math.max(1, parts.sum))
-    val packed = Seq(
-      pack(rdds(0), arcs = false, VertexBytes + stateBytes, cap),
-      pack(rdds(1), arcs = true, ArcBytes, cap)) ++
-      rdds.drop(2).map(pack(_, arcs = false, PrefBytes, cap))
-    val got = vertices.sparkSession.sparkContext.union(packed).collect()
-    if (got.contains(null)) return None
-    val (vs, rest) = got.splitAt(parts(0))
-    val (es, ps) = rest.splitAt(parts(1))
-    val (nIds, nArcs, nPrefs) =
-      (vs.map(_.length.toLong).sum, es.map(_.length / 2L).sum, ps.map(_.length / 2L).sum)
-    if (nIds * (VertexBytes + stateBytes) + nArcs * ArcBytes + nPrefs * PrefBytes > budget)
-      return None
+    val packed = DriverLoad.collect(budget, inputs.map(_.queryExecution.toRdd)) {
+      case 0 => pack(arcs = false, VertexBytes + stateBytes)
+      case 1 => pack(arcs = true, ArcBytes)
+      case _ => pack(arcs = false, PrefBytes)
+    }.getOrElse(return None)
+    val (vs, es, ps) = (packed(0), packed(1), packed.drop(2).flatten)
+    val nArcs = es.map(_.length / 2).sum
 
     val ids = vs.flatten
     java.util.Arrays.sort(ids)
     if ((1 until ids.length).exists(i => ids(i) == ids(i - 1))) return None
     val index = indexOf(ids)
-    val src = new Array[Int](nArcs.toInt)
-    val dst = new Array[Int](nArcs.toInt)
+    val src = new Array[Int](nArcs)
+    val dst = new Array[Int](nArcs)
     var m = 0
     for (a <- es; k <- 0 until a.length by 2) {
       val (s, d) = (index(a(k)), index(a(k + 1)))
@@ -131,28 +99,29 @@ private[graft] object DriverGraph {
     else Some(new Graph(ids, java.util.Arrays.copyOf(src, m), java.util.Arrays.copyOf(dst, m), pref))
   }
 
-  /** One array per partition: its rows' columns as longs (a double as its
-    * bits), or null when a row has a null column or the rows cost more than
-    * `cap`. For `arcs`, a row with a null column is skipped instead.
+  /** Packs a partition's rows: its columns as longs (a double as its
+    * bits), `rowBytes` each; null when a row has a null column or the rows
+    * cost more than the cap. For `arcs`, a row with a null column is
+    * skipped instead.
     */
-  private def pack(rows: RDD[InternalRow], arcs: Boolean, rowBytes: Long,
-                   cap: Long): RDD[Array[Long]] = rows.mapPartitions { it =>
-    val out = Array.newBuilder[Long]
-    var bytes = 0L
-    var ok = true
-    while (ok && it.hasNext) {
-      val r = it.next()
-      if ((0 until r.numFields).exists(r.isNullAt)) ok = arcs
-      else {
-        out += r.getLong(0)
-        // an arc's second column is a long, a preference row's a double
-        if (r.numFields == 2)
-          out += (if (arcs) r.getLong(1) else java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
-        bytes += rowBytes
-        ok = bytes <= cap
+  private def pack(arcs: Boolean, rowBytes: Long): (Iterator[InternalRow], Long) => (Array[Long], Long) = {
+    (it, cap) =>
+      val out = Array.newBuilder[Long]
+      var bytes = 0L
+      var ok = true
+      while (ok && it.hasNext) {
+        val r = it.next()
+        if ((0 until r.numFields).exists(r.isNullAt)) ok = arcs
+        else {
+          out += r.getLong(0)
+          // an arc's second column is a long, a preference row's a double
+          if (r.numFields == 2)
+            out += (if (arcs) r.getLong(1) else java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
+          bytes += rowBytes
+          ok = bytes <= cap
+        }
       }
-    }
-    Iterator.single(if (ok) out.result() else null)
+      if (ok) (out.result(), bytes) else null
   }
 
   /** Id → index into the ascending `ids`, -1 for an id that is not there:

@@ -71,7 +71,7 @@ object HarmonicCentrality {
                 maxHops: Int = 32): DataFrame = {
     val spark = vertices.sparkSession
     DriverGraph.load(vertices, edges, None, DriverGraph.hyperballStateBytes(log2m),
-        DriverGraph.budget(spark)) match {
+        DriverLoad.budget(spark)) match {
       case Some(g) =>
         // the Spark loop's schema: its hops union the arcs' `to_id` into `id`
         // and aggregate `hc_val`; without a hop both come from the start row

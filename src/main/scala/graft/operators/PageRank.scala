@@ -40,7 +40,7 @@ object PageRank {
           alpha: Double = 0.85, maxIter: Int = 30, tol: Double = 1e-9): DataFrame = {
     val spark = vertices.sparkSession
     DriverGraph.load(vertices, edges, preference, DriverGraph.PageRankStateBytes,
-        DriverGraph.budget(spark)) match {
+        DriverLoad.budget(spark)) match {
       case Some(g) if g.n == 0 => vertices.select(col("id"), lit(0.0).as("pr_val"))
       case Some(g) =>
         // the Spark loop's schema: `id` and `pref` come from the preference

@@ -1,44 +1,160 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.io.{ByteArrayOutputStream, DataOutputStream}
+import java.nio.ByteBuffer
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.Platform
 
-/** Scalable global ranking: `row_number()` in a total order WITHOUT a
-  * single-partition window (SURVEY.md §4 "single-partition windows are the
-  * scalability cliff"). Same two-pass shape as [[DenseIds]]: range-partition
-  * on the sort key, rank within partitions, add broadcast per-partition
-  * offsets.
+/** Global ranking: `row_number()` in a total order, with two plans chosen
+  * from the input's size. An input that fits the driver's budget
+  * ([[DriverLoad]]) is collected by one job and sorted in the driver, as the
+  * reference sorts in one JVM (`JoinSortRanks.java:57-161`); the result is a
+  * one-partition local relation, whose exact size lets its consumers
+  * broadcast it. A larger input runs [[rowNumberSpark]], which avoids the
+  * single-partition window that is the scalability cliff at scale
+  * (SURVEY.md §4): range-partition on the sort key, rank within partitions,
+  * add broadcast per-partition offsets.
   */
 object Ranks {
+
+  /** Driver bytes per collected row of `size` bytes in Spark's binary row
+    * format: its packed copy, the external row it is converted to and the
+    * local relation's row, each about the size again plus object headers.
+    */
+  private[graft] def rowBytes(size: Int): Long = 4L * size + 64
 
   /** Add `rankCol` = 1..n following the total order given by `sortCols`
     * (which must be a total order — include a unique tie-break column, as the
     * reference does with (score desc, id asc), `JoinSortRanks.java:57-71`).
+    * `rankCol` is a non-null long; the input's columns keep their types and
+    * nullability. A `df` the caller cached stays cached.
     */
-  def rowNumber(df: DataFrame, sortCols: Seq[Column], rankCol: String,
-                partitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
+  def rowNumber(df: DataFrame, sortCols: Seq[Column], rankCol: String): DataFrame =
+    rowNumber(df, sortCols, rankCol, DriverLoad.budget(df.sparkSession))
+
+  /** [[rowNumber]] with the driver's byte budget given. When the optimized
+    * plan's size estimate is within `budget`, the rows are collected
+    * straight from the plan. When it is over, the input is persisted first:
+    * without CBO a join is estimated as the product of its sides, so rows
+    * that fit are often estimated far over, and the persisted input serves
+    * the collect and, if that declines, [[rowNumberSpark]] without running
+    * twice.
+    */
+  private[graft] def rowNumber(df: DataFrame, sortCols: Seq[Column], rankCol: String,
+                               budget: Long): DataFrame = {
+    val persist = df.queryExecution.optimizedPlan.stats.sizeInBytes > budget &&
+      df.storageLevel == StorageLevel.NONE
+    if (persist) df.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    try inDriver(df, sortCols, rankCol, budget).getOrElse(rowNumberSpark(df, sortCols, rankCol))
+    finally if (persist) df.unpersist(blocking = false)
+  }
+
+  /** The in-driver path: one job collects the rows, at most `budget` bytes
+    * of them ([[rowBytes]]), and the driver sorts them with Spark's own
+    * ordering of `sortCols` (NaN, -0.0, nulls and the UTF-8 byte order of
+    * strings compare as in Spark's sort). None when the rows do not fit or
+    * a sort column is not a column of `df`.
+    */
+  private def inDriver(df: DataFrame, sortCols: Seq[Column], rankCol: String,
+                       budget: Long): Option[DataFrame] = {
+    // a new plan over df reads df's cache; df's own plan may predate it
+    val src = df.select("*")
+    val ordering = src.sort(sortCols: _*).queryExecution.analyzed match {
+      case Sort(order, true, child, _) if child.output == src.queryExecution.analyzed.output =>
+        new InterpretedOrdering(order, child.output)
+      case _ => return None
+    }
+    val schema = src.schema
+    val packed = DriverLoad.collect(budget, Seq(src.queryExecution.toRdd))(_ => pack(schema))
+      .getOrElse(return None)
+    val rows = packed.head.flatMap(unpack(_, schema.length))
+    java.util.Arrays.sort(rows, ordering)
+
+    val out = df.withColumn(rankCol, lit(0L)).schema
+    val k = out.fieldIndex(rankCol)
+    val toScala = CatalystTypeConverters.createToScalaConverter(schema)
+    val ranked = rows.indices.map { i =>
+      val values = toScala(rows(i)).asInstanceOf[Row].toSeq
+      Row.fromSeq(if (out.length > values.length) values :+ (i + 1L) else values.updated(k, i + 1L))
+    }
+    // one partition, so a written result is one file, as the range path's
+    // AQE-coalesced exchange writes for an input this small
+    Some(df.sparkSession.createDataFrame(ranked.asJava, out).coalesce(1))
+  }
+
+  /** Packs a partition's rows in Spark's binary row format, each after its
+    * length; null when they cost more than the cap.
+    */
+  private def pack(schema: StructType): (Iterator[InternalRow], Long) => (Array[Byte], Long) = {
+    (it, cap) =>
+      lazy val toUnsafe = UnsafeProjection.create(schema)
+      val buf = new ByteArrayOutputStream()
+      val out = new DataOutputStream(buf)
+      val copyBuf = new Array[Byte](4096)
+      var bytes = 0L
+      while (bytes <= cap && it.hasNext) {
+        val r = it.next() match {
+          case u: UnsafeRow => u
+          case other => toUnsafe(other)
+        }
+        out.writeInt(r.getSizeInBytes)
+        r.writeToStream(out, copyBuf)
+        bytes += rowBytes(r.getSizeInBytes)
+      }
+      if (bytes <= cap) (buf.toByteArray, bytes) else null
+  }
+
+  /** The rows [[pack]] wrote to `buf`, pointing into it. */
+  private def unpack(buf: Array[Byte], numFields: Int): Array[InternalRow] = {
+    val rows = Array.newBuilder[InternalRow]
+    val lengths = ByteBuffer.wrap(buf)
+    var at = 0
+    while (at < buf.length) {
+      val size = lengths.getInt(at)
+      val row = new UnsafeRow(numFields)
+      row.pointTo(buf, Platform.BYTE_ARRAY_OFFSET + at + 4, size)
+      rows += row
+      at += 4 + size
+    }
+    rows.result()
+  }
+
+  /** The range path: range-partition the input on `sortCols`, sort within
+    * partitions, count the rows of each partition, and add the broadcast
+    * offsets to a per-partition `row_number`. Two jobs over a persisted
+    * stage, every step parallel.
+    */
+  private[graft] def rowNumberSpark(df: DataFrame, sortCols: Seq[Column],
+                                    rankCol: String): DataFrame = {
     // the range exchange EXECUTES its input twice (once for the range
     // sampling pass, once for the shuffle itself) — cache the input so the
     // upstream chain (often a distinct over the corpus) runs once; released
-    // as soon as `staged` is materialized by the counts job below
-    val input = df.persist(StorageLevel.MEMORY_AND_DISK_SER)
-    // no explicit partition count unless the caller pins one: leaving it to
-    // the planner keeps the exchange AQE-coalescible, so a small input lands
-    // in ONE ordered partition instead of `spark.sql.shuffle.partitions`
-    // near-empty ones (scale-adaptive: ranks/ids depend only on the global
-    // sort order, never on the partition boundaries)
-    val ranged = if (partitions > 0) input.repartitionByRange(partitions, sortCols: _*)
-                 else input.repartitionByRange(sortCols: _*)
-    val staged = ranged
+    // as soon as `staged` is materialized by the counts job below. A cache
+    // the caller made is left alone.
+    val own = df.storageLevel == StorageLevel.NONE
+    val input = if (own) df.persist(StorageLevel.MEMORY_AND_DISK_SER) else df
+    // no explicit partition count: leaving it to the planner keeps the
+    // exchange AQE-coalescible, so a small input lands in ONE ordered
+    // partition instead of `spark.sql.shuffle.partitions` near-empty ones
+    // (ranks depend only on the global sort order, never on the partition
+    // boundaries)
+    val staged = input.repartitionByRange(sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .withColumn("__pid", spark_partition_id())
       .persist(StorageLevel.MEMORY_AND_DISK)
     val counts = staged.groupBy("__pid").count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    input.unpersist(blocking = false) // staged now holds the materialized rows
+    if (own) input.unpersist(blocking = false) // staged now holds the materialized rows
     val offsets: Map[Int, Long] = {
       var acc = 0L
       counts.map { case (pid, n) => val o = (pid, acc); acc += n; o }.toMap

@@ -111,7 +111,7 @@ class DriverGraphSpec extends AnyFunSuite {
     val e = Seq((0L, 1L)).toDF("from_id", "to_id")
     var declined: Option[DriverGraph.Graph] = None
     assert(JobRecorder.during(spark) {
-      declined = DriverGraph.load(huge, e, None, 0L, DriverGraph.budget(spark))
+      declined = DriverGraph.load(huge, e, None, 0L, DriverLoad.budget(spark))
     }.isEmpty)
     assert(declined.isEmpty)
     // 4 vertices and 3 arcs cost exactly this many bytes

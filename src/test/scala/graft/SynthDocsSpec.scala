@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{DenseIds, HostGraph}
+import graft.operators.{DenseIds, HostGraph, Ranks}
 import graft.sources.SynthDocs
 
 class SynthDocsSpec extends AnyFunSuite {
@@ -66,9 +67,21 @@ class SynthDocsSpec extends AnyFunSuite {
       concat(lit("k"), lpad(pmod(xxhash64($"id"), lit(100000)).cast("string"), 6, "0")).as("key"))
       .distinct()
       .repartition(7)
-    val got = DenseIds.assign(df, "key", partitions = 5)
-      .orderBy("id").collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("key")))
+    def ids(out: DataFrame) =
+      out.orderBy("id").collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("key"))).toSeq
+    val got = ids(DenseIds.assign(df, "key"))
     val expected = got.map(_._2).sorted.zipWithIndex.map { case (k, i) => (i.toLong, k) }
-    assert(got.toSeq == expected.toSeq)
+    assert(got == expected)
+    // the range path over 5 range partitions gives the same ids
+    val conf = spark.conf
+    val saved = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+      .map(k => k -> conf.get(k))
+    conf.set("spark.sql.shuffle.partitions", "5")
+    conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      val ranged = Ranks.rowNumberSpark(df, Seq(col("key")), "id")
+      assert(ranged.rdd.getNumPartitions == 5)
+      assert(ids(ranged.withColumn("id", col("id") - 1L)) == expected)
+    } finally saved.foreach { case (k, v) => conf.set(k, v) }
   }
 }
