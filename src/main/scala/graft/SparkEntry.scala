@@ -234,16 +234,15 @@ object SparkEntry {
         .select(col("id"), round(col("pr_val"), 6).as("pr_val"))
         .orderBy("id")
     }),
-    // F4: weak connected components via the large-star/small-star scale
-    // path (closed-form oracle; StarWccSpec pins equality vs min-label
-    // propagation on random graphs)
+    // F4: weak connected components (closed-form oracle; StarWccSpec pins
+    // both paths of `weak` against a sequential BFS on random graphs)
     "q_components" -> ((s, dir) => {
       val nation = s.read.parquet(t(dir, "nation"))
       val nodes = nation.select(col("n_nationkey").cast("long").as("id"))
       val chain = nation.filter(col("n_nationkey") % 5 =!= 0)
         .select(col("n_nationkey").cast("long").as("from_id"),
                 (col("n_nationkey") - 1).cast("long").as("to_id"))
-      ConnectedComponents.star(nodes, chain).orderBy("id")
+      ConnectedComponents.weak(nodes, chain).orderBy("id")
     }),
     // F3: exact harmonic centrality (closed-form oracle on the chain graph)
     "q_harmonic" -> ((s, dir) => {
@@ -708,7 +707,7 @@ object SparkEntry {
       val chain = nation.filter(col("n_nationkey") % 5 =!= 0)
         .select(col("n_nationkey").cast("long").as("from_id"),
                 (col("n_nationkey") - 1).cast("long").as("to_id"))
-      ConnectedComponents.sizes(ConnectedComponents.star(nodes, chain))
+      ConnectedComponents.sizes(ConnectedComponents.weak(nodes, chain))
     })
   )
 

@@ -16,9 +16,11 @@ import graft.functions.Hll
   * iterates here; when it does not, [[load]] declines and the operator runs
   * its Spark loop.
   *
-  * The kernels run the Spark loops' synchronous rounds with their exact
-  * semantics. Arcs count as a multiset, and an arc with an endpoint that is
-  * not a vertex (or is null) is ignored.
+  * The HyperBall and PageRank kernels run the Spark loops' synchronous
+  * rounds with their exact semantics; the WCC kernel is union-find, which
+  * gives the Spark loop's labels without rounds. Arcs count as a multiset,
+  * and an arc with an endpoint that is not a vertex (or is null) is
+  * ignored.
   */
 private[graft] object DriverGraph {
 
@@ -176,36 +178,32 @@ private[graft] object DriverGraph {
     hc
   }
 
-  /** Kernel state bytes per vertex of [[weak]]: two int label arrays. */
-  val WeakStateBytes = 8L
+  /** Kernel state bytes per vertex of [[weak]]: one int parent array. */
+  val WeakStateBytes = 4L
 
-  /** Min-label WCC rounds over `g`, as `ConnectedComponents.weakSpark` runs
-    * them: each round a vertex takes the least label of itself and its
-    * neighbors in either direction from the previous round, for at most
-    * `maxIter` changing rounds plus the confirming one. Returns each
-    * vertex's component as an index into `g.ids` (the ids ascend, so the
-    * least index is the least id).
+  /** Union-find over `g`'s arcs, read in either direction: each arc links
+    * the larger of its endpoints' roots under the smaller, and `find`
+    * halves paths, so a root is the least index of its component. Returns
+    * each vertex's component as an index into `g.ids` (the ids ascend, so
+    * the least index is the least id). No rounds, so no bound.
     */
-  def weak(g: Graph, maxIter: Int): Array[Int] = {
-    var label = Array.tabulate(g.n)(identity)
-    var next = new Array[Int](g.n)
-    var iter = 0
-    var changed = 1L
-    while (iter <= maxIter && changed > 0) {
-      System.arraycopy(label, 0, next, 0, g.n)
-      var k = 0
-      while (k < g.src.length) {
-        val (u, v) = (g.src(k), g.dst(k))
-        if (label(u) < next(v)) next(v) = label(u)
-        if (label(v) < next(u)) next(u) = label(v)
-        k += 1
-      }
-      changed = (0 until g.n).count(i => next(i) < label(i)).toLong
-      val t = label; label = next; next = t
-      iter += 1
+  def weak(g: Graph): Array[Int] = {
+    val parent = Array.tabulate(g.n)(identity)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
     }
-    ConnectedComponents.requireConverged(changed, maxIter)
-    label
+    var k = 0
+    while (k < g.src.length) {
+      val a = find(g.src(k))
+      val b = find(g.dst(k))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      k += 1
+    }
+    var i = 0
+    while (i < g.n) { parent(i) = find(i); i += 1 }
+    parent
   }
 
   /** Kernel state bytes per vertex of [[pageRank]]: ranks, next ranks,

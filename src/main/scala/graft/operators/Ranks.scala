@@ -131,7 +131,7 @@ object Ranks {
 
   /** The range path: range-partition the input on `sortCols`, sort within
     * partitions, count the rows of each partition, and add the broadcast
-    * offsets to a per-partition `row_number`. Two jobs over a persisted
+    * offsets to a per-partition `row_number`. Two jobs over a checkpointed
     * stage, every step parallel.
     */
   private[graft] def rowNumberSpark(df: DataFrame, sortCols: Seq[Column],
@@ -140,7 +140,10 @@ object Ranks {
     // sampling pass, once for the shuffle itself) — cache the input so the
     // upstream chain (often a distinct over the corpus) runs once; released
     // as soon as `staged` is materialized by the counts job below. A cache
-    // the caller made is left alone.
+    // the caller made is left alone. `staged` itself is a lazy local
+    // checkpoint, not a cache: a lineage-free leaf the counts job
+    // materializes, whose blocks the ContextCleaner frees once the result
+    // is dropped (a persist would stay in the cache manager for good).
     val own = df.storageLevel == StorageLevel.NONE
     val input = if (own) df.persist(StorageLevel.MEMORY_AND_DISK_SER) else df
     // no explicit partition count: leaving it to the planner keeps the
@@ -151,7 +154,7 @@ object Ranks {
     val staged = input.repartitionByRange(sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .withColumn("__pid", spark_partition_id())
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = false)
     val counts = staged.groupBy("__pid").count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     if (own) input.unpersist(blocking = false) // staged now holds the materialized rows

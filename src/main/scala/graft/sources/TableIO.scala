@@ -32,11 +32,10 @@ object TableIO {
 
   /** One committed snapshot, as its manifest records it.
     *
-    * @param schema     the read schema (data columns, then partition
-    *                   columns, all nullable) — kept in the manifest, as
-    *                   Iceberg keeps it in table metadata, so planning a read
-    *                   never opens a data file. Every manifest records one:
-    *                   reading one without it throws.
+    * @param schema     the read schema (every level nullable) — kept in the
+    *                   manifest, as Iceberg keeps it in table metadata, so
+    *                   planning a read never opens a data file. Every
+    *                   manifest records one: reading one without it throws.
     * @param properties table properties a caller pins to the snapshot (e.g.
     *                   a layout parameter), kept apart from the counters
     */
@@ -118,14 +117,6 @@ object TableIO {
   private def nullable(s: StructType): StructType =
     StructType(s.fields.map(f => f.copy(dataType = nullableType(f.dataType), nullable = true)))
 
-  /** The schema a read of `df` written with `partitionCols` reports:
-    * partition columns move to the end, in `partitionBy` order.
-    */
-  private def readSchema(df: DataFrame, partitionCols: Seq[String]): StructType = {
-    val (parts, data) = df.schema.fields.partition(f => partitionCols.contains(f.name))
-    nullable(StructType(data ++ partitionCols.flatMap(p => parts.find(_.name == p))))
-  }
-
   /** Same column names and types, in any order, nullability ignored. */
   private def sameColumns(a: StructType, b: StructType): Boolean = {
     def cols(s: StructType) = s.fields.map(f => f.name -> nullableType(f.dataType)).toMap
@@ -134,10 +125,8 @@ object TableIO {
 
   /** Full-replace commit: write a fresh data dir, manifest covers only it. */
   def write(df: DataFrame, dir: String, lineage: String = "",
-            counters: Map[String, Long] = Map.empty,
-            partitionBy: Seq[String] = Seq.empty): Snapshot =
-    commit(df, dir, lineage, counters, keepParentPaths = false,
-      partitionCols = partitionBy)
+            counters: Map[String, Long] = Map.empty): Snapshot =
+    commit(df, dir, lineage, counters, keepParentPaths = false)
 
   /** Append commit: write a delta dir, manifest covers parent dirs + delta.
     * `parentId` pins the parent snapshot — REQUIRED for crash-replay
@@ -148,8 +137,7 @@ object TableIO {
     * One snapshot chain never mixes schemas (a multi-dir read would surface
     * nulls in a missing column): a delta whose column names or types differ
     * from the parent's schema throws IllegalArgumentException before any
-    * data is written. A delta is never partitioned: a read of several
-    * `partitionBy` dirs fails with CONFLICTING_DIRECTORY_STRUCTURES.
+    * data is written.
     */
   def append(df: DataFrame, dir: String, lineage: String = "",
              counters: Map[String, Long] = Map.empty,
@@ -174,7 +162,6 @@ object TableIO {
   private def commit(df: DataFrame, dir: String, lineage: String,
                      counters: Map[String, Long], keepParentPaths: Boolean,
                      parentId: Option[Long] = None,
-                     partitionCols: Seq[String] = Seq.empty,
                      properties: Map[String, String] = Map.empty): Snapshot = {
     val spark = df.sparkSession
     val current = currentSnapshot(spark, dir)
@@ -183,7 +170,7 @@ object TableIO {
         .orElse(throw new IllegalStateException(s"pinned parent snapshot $id missing in $dir"))
       case None => current
     }
-    val deltaSchema = readSchema(df, partitionCols)
+    val deltaSchema = nullable(df.schema)
     val recorded = parent.filter(_ => keepParentPaths) match {
       case Some(p) =>
         require(sameColumns(deltaSchema, p.schema),
@@ -200,9 +187,9 @@ object TableIO {
     // it, and mode("overwrite") clears any debris of a crashed attempt of
     // the same snapshot id. Measured ~25% off the fixed cost of the tiny
     // per-round frontier commits (WriteProbe: 202 → 149 ms/write).
-    val w = df.write.mode("overwrite") // overwrite: crashed attempt of same id is replaced
+    df.write.mode("overwrite") // overwrite: crashed attempt of same id is replaced
       .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(dataDir)
+      .parquet(dataDir)
     val paths = (if (keepParentPaths) parent.map(_.paths).getOrElse(Seq.empty) else Seq.empty) :+ dataDir
     val snap = Snapshot(next, parent.map(_.id).getOrElse(-1L), paths, counters, lineage,
       recorded, properties)

@@ -289,11 +289,12 @@ object Dedup {
     * doc APPEARING IN A PAIR — docs with no duplicates are implicitly their
     * own canonical, keeping the output O(|dup docs|), not O(corpus) (at
     * 100 TB the keep-map is a small broadcast-able side table; the corpus
-    * is filtered with one anti-join on `doc_id <> canonical_id`). Uses the
-    * large-star/small-star formulation: template-heavy corpora chain
-    * near-dups into LONG paths, and star converges in O(log diameter)
-    * rounds where min-label propagation pays the full diameter — each
-    * round shuffles only the pair-graph, never the corpus.
+    * is filtered with one anti-join on `doc_id <> canonical_id`).
+    * Template-heavy corpora chain near-dups into LONG paths, which
+    * [[graft.operators.ConnectedComponents.weak]] handles without a round
+    * per hop: a pair graph that fits the driver runs union-find there, a
+    * larger one the large-star/small-star loop in O(log n) rounds, each
+    * shuffling only the pair graph, never the corpus.
     */
   def dupGroups(pairs: DataFrame,
                 aCol: String = "doc_a", bCol: String = "doc_b"): DataFrame = {
@@ -301,17 +302,17 @@ object Dedup {
     // construction (O(|dup docs|)) and feeds BOTH the vertex derivation and
     // the component iterations — without this the whole upstream pair
     // producer (the full minhash chain) re-executes per consumer, and the
-    // shared subplan between the vertex union and star's self-unions trips
-    // Spark 4.1's UnionBase constraint rewrite ("key not found" at
-    // analysis). Blocks are reclaimed by the ContextCleaner once the
-    // returned keep-map is dropped (same contract PageRank documents).
+    // shared subplan between the vertex union and the star loop's
+    // self-unions trips Spark 4.1's UnionBase constraint rewrite ("key not
+    // found" at analysis). Blocks are reclaimed by the ContextCleaner once
+    // the returned keep-map is dropped (same contract PageRank documents).
     val edges0 = pairs.select(col(aCol).as("from_id"), col(bCol).as("to_id"))
     val rdd = edges0.rdd
     rdd.localCheckpoint()
     val edges = pairs.sparkSession.createDataFrame(rdd, edges0.schema)
     val vertices = edges.select(col("from_id").as("id"))
       .union(edges.select(col("to_id").as("id"))).distinct()
-    graft.operators.ConnectedComponents.star(vertices, edges)
+    graft.operators.ConnectedComponents.weak(vertices, edges)
       .select(col("id").as("doc_id"), col("component").as("canonical_id"))
   }
 

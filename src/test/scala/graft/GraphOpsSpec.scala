@@ -133,10 +133,10 @@ class GraphOpsSpec extends AnyFunSuite {
     // components {0,1,2}, {3,4}, {5}
     val e = edgesDf((1, 0), (1, 2), (4, 3))
     for (weak <- Seq(ConnectedComponents.weak _, ConnectedComponents.weakSpark _)) {
-      val cc = weak(vertsDf(6), e, 50).orderBy("id").collect()
+      val cc = weak(vertsDf(6), e).orderBy("id").collect()
         .map(_.getAs[Long]("component"))
       assert(cc.toSeq == Seq(0L, 0L, 0L, 3L, 3L, 5L))
-      val sizes = ConnectedComponents.sizes(weak(vertsDf(6), e, 50)).collect()
+      val sizes = ConnectedComponents.sizes(weak(vertsDf(6), e)).collect()
         .map(r => (r.getAs[Long]("component_rank"), r.getAs[Long]("size")))
       assert(sizes.toSeq == Seq((0L, 3L), (1L, 2L), (2L, 1L)))
     }

@@ -191,4 +191,13 @@ class RanksSpec extends AnyFunSuite {
       }
     } finally df.unpersist(blocking = true)
   }
+
+  test("the range path leaves nothing in the cache manager") {
+    // start from an empty cache manager: the assertion is about this call
+    spark.catalog.clearCache()
+    val df = spark.range(1000).select(col("id"), (col("id") % 7).as("k"))
+    val out = Ranks.rowNumberSpark(df, Seq(col("k").asc, col("id").asc), "r")
+    assert(ranks(out).size == 1000)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }

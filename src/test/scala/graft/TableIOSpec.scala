@@ -118,32 +118,21 @@ class TableIOSpec extends AnyFunSuite {
     assert(rows(dir, Some(s1.id)) == Set(1L, 2L)) // debris gone, rows exact
   }
 
-  test("partitionBy layouts round-trip with the partition column intact") {
-    val dir = Files.createTempDirectory("tio_part").toString + "/t"
-    TableIO.write(Seq((1L, 0), (2L, 1), (3L, 0)).toDF("v", "bucket"), dir,
-      partitionBy = Seq("bucket"))
-    val got = TableIO.read(spark, dir).collect()
-      .map(r => (r.getAs[Long]("v"), r.getAs[Int]("bucket"))).toSet
-    assert(got == Set((1L, 0), (2L, 1), (3L, 0)))
-  }
-
-  test("the manifest records the read schema, partition columns included") {
+  test("the manifest records the read schema, every level nullable") {
     val dir = Files.createTempDirectory("tio_schema").toString + "/t"
-    val df = Seq((0, 1L, Seq(("a", 1.5))), (1, 2L, Seq.empty[(String, Double)]))
-      .toDF("bucket", "v", "pairs")
-    val s0 = TableIO.write(df, dir, partitionBy = Seq("bucket"))
+    val df = Seq((1L, 0, Seq(("a", 1.5))), (2L, 1, Seq.empty[(String, Double)]))
+      .toDF("v", "bucket", "pairs")
+    val s0 = TableIO.write(df, dir)
     val inferred = spark.read.parquet(s0.paths: _*).schema
-    // partition column last and every level nullable, as a parquet read reports it
+    // every level nullable, as a parquet read reports it
     assert(s0.schema == inferred, s0.schema)
     assert(TableIO.snapshotAt(spark, dir, s0.id).get.schema == inferred)
     assert(TableIO.read(spark, dir).schema == inferred)
     assert(rows(dir) == Set(1L, 2L))
     // an append carries the schema on
-    val plain = Files.createTempDirectory("tio_schema_ap").toString + "/t"
-    TableIO.write(df, plain)
-    val s1 = TableIO.append(Seq((1, 3L, Seq(("b", 2.0)))).toDF("bucket", "v", "pairs"), plain)
+    val s1 = TableIO.append(Seq((3L, 1, Seq(("b", 2.0)))).toDF("v", "bucket", "pairs"), dir)
     assert(s1.schema == spark.read.parquet(s1.paths: _*).schema)
-    assert(TableIO.read(spark, plain).select("v").as[Long].collect().toSet == Set(1L, 2L, 3L))
+    assert(TableIO.read(spark, dir).select("v").as[Long].collect().toSet == Set(1L, 2L, 3L))
   }
 
   test("reads and empty commits plan from the manifest and start no job") {
