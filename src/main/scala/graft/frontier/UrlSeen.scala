@@ -186,63 +186,63 @@ object UrlSeen {
     def labeled[T](body: => T) = JobLabel.future(spark, JobLabel.current(spark))(body)
     def appendKeys(perBucket: Map[String, Long]) =
       labeled { TableIO.append(bucketed, dir, lineage, perBucket, parentId, properties = props) }
-    if (sidecarFitsDriver(cfg)) {
-      val deltaStats = deltaAgg.collect()
-      val perBucket = deltaStats.map(r => s"bucket.${r.getInt(0)}" -> r.getLong(1)).toMap
-      // the table append and the sidecar write are independent outputs — run
-      // the append concurrently with the driver-side bloom merge + write
-      val fAppend = appendKeys(perBucket)
-      val prev = prevBlooms.getOrElse(readBloomMap(spark, dir))
-      val merged = scala.collection.mutable.Map[Int, Array[Byte]](prev.toSeq: _*)
-      deltaStats.foreach { r =>
-        val b = r.getInt(0)
-        val bits = r.getAs[Array[Byte]]("bits")
-        merged.get(b) match {
-          case Some(old) =>
-            // clone: never mutate the caller's map (broadcasts in local mode
-            // share object references)
-            val m = old.clone()
-            var i = 0
-            while (i < m.length) { m(i) = (m(i) | bits(i)).toByte; i += 1 }
-            merged.put(b, m)
-          case None => merged.put(b, bits)
+    try {
+      if (sidecarFitsDriver(cfg)) {
+        val deltaStats = deltaAgg.collect()
+        val perBucket = deltaStats.map(r => s"bucket.${r.getInt(0)}" -> r.getLong(1)).toMap
+        // the table append and the sidecar write are independent outputs — run
+        // the append concurrently with the driver-side bloom merge + write
+        val fAppend = appendKeys(perBucket)
+        val prev = prevBlooms.getOrElse(readBloomMap(spark, dir))
+        val merged = scala.collection.mutable.Map[Int, Array[Byte]](prev.toSeq: _*)
+        deltaStats.foreach { r =>
+          val b = r.getInt(0)
+          val bits = r.getAs[Array[Byte]]("bits")
+          merged.get(b) match {
+            case Some(old) =>
+              // clone: never mutate the caller's map (broadcasts in local mode
+              // share object references)
+              val m = old.clone()
+              var i = 0
+              while (i < m.length) { m(i) = (m(i) | bits(i)).toByte; i += 1 }
+              merged.put(b, m)
+            case None => merged.put(b, bits)
+          }
         }
+        import spark.implicits._
+        val mergedDf = merged.toSeq.map { case (b, bits) => (b, bits) }
+          .toDF("bucket", "bits")
+        // sidecar write and key-table append are independent outputs — overlap
+        // them too (the round marker remains the only commit point)
+        val fBloom = labeled {
+          TableIO.write(mergedDf, s"$dir-bloom", lineage = "urlseen:bloom")
+        }
+        val snap = Await.result(fAppend, Duration.Inf)
+        Await.result(fBloom, Duration.Inf)
+        (snap, Some(merged.toMap))
+      } else {
+        // 10^10-scale path: only the per-bucket COUNTS (a few bytes per
+        // bucket) cross to the driver; the bit arrays are merged where they
+        // already live
+        val stats = deltaAgg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        try {
+          val perBucket = stats.select(col("bucket"), col("n")).collect()
+            .map(r => s"bucket.${r.getInt(0)}" -> r.getLong(1)).toMap
+          val fAppend = appendKeys(perBucket)
+          import spark.implicits._
+          val prev = TableIO.currentSnapshot(spark, s"$dir-bloom") match {
+            case Some(_) => TableIO.read(spark, s"$dir-bloom")
+            case None => Seq.empty[(Int, Array[Byte])].toDF("bucket", "bits")
+          }
+          val orAgg = F.udaf(new OrAgg(cfg.bitsPerBucket / 8))
+          val merged = prev.select(col("bucket"), col("bits"))
+            .unionByName(stats.select(col("bucket"), col("bits")))
+            .groupBy("bucket").agg(orAgg(col("bits")).as("bits"))
+          TableIO.write(merged, s"$dir-bloom", lineage = "urlseen:bloom")
+          (Await.result(fAppend, Duration.Inf), None)
+        } finally stats.unpersist(blocking = false)
       }
-      import spark.implicits._
-      val mergedDf = merged.toSeq.map { case (b, bits) => (b, bits) }
-        .toDF("bucket", "bits")
-      // sidecar write and key-table append are independent outputs — overlap
-      // them too (the round marker remains the only commit point)
-      val fBloom = labeled {
-        TableIO.write(mergedDf, s"$dir-bloom", lineage = "urlseen:bloom")
-      }
-      val snap = Await.result(fAppend, Duration.Inf)
-      Await.result(fBloom, Duration.Inf)
-      bucketed.unpersist(blocking = false)
-      (snap, Some(merged.toMap))
-    } else {
-      // 10^10-scale path: only the per-bucket COUNTS (a few bytes per
-      // bucket) cross to the driver; the bit arrays are merged where they
-      // already live
-      val stats = deltaAgg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val perBucket = stats.select(col("bucket"), col("n")).collect()
-        .map(r => s"bucket.${r.getInt(0)}" -> r.getLong(1)).toMap
-      val fAppend = appendKeys(perBucket)
-      import spark.implicits._
-      val prev = TableIO.currentSnapshot(spark, s"$dir-bloom") match {
-        case Some(_) => TableIO.read(spark, s"$dir-bloom")
-        case None => Seq.empty[(Int, Array[Byte])].toDF("bucket", "bits")
-      }
-      val orAgg = F.udaf(new OrAgg(cfg.bitsPerBucket / 8))
-      val merged = prev.select(col("bucket"), col("bits"))
-        .unionByName(stats.select(col("bucket"), col("bits")))
-        .groupBy("bucket").agg(orAgg(col("bits")).as("bits"))
-      TableIO.write(merged, s"$dir-bloom", lineage = "urlseen:bloom")
-      val snap = Await.result(fAppend, Duration.Inf)
-      stats.unpersist(blocking = false)
-      bucketed.unpersist(blocking = false)
-      (snap, None)
-    }
+    } finally bucketed.unpersist(blocking = false)
   }
 
   /** Load the bloom sidecar as a driver map (what [[unseen]] broadcasts). */

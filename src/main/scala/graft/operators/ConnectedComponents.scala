@@ -30,15 +30,13 @@ object ConnectedComponents {
   def weak(vertices: DataFrame, edges: DataFrame): DataFrame = {
     val spark = vertices.sparkSession
     DriverGraph.load(vertices, edges, None, DriverGraph.WeakStateBytes,
-        DriverLoad.budget(spark)) match {
-      case Some(g) =>
-        // the Spark loop's schema: `id` comes from `vertices`, and
-        // `component` = coalesce(component, id) is nullable where `id` is
-        val id = vertices.schema("id")
-        val schema = StructType(Seq(id, StructField("component", LongType, id.nullable)))
-        DriverGraph.frame(spark, schema, g.ids, DriverGraph.weak(g).map(g.ids(_)))
-      case None => weakSpark(vertices, edges)
-    }
+        DriverLoad.budget(spark)) { g =>
+      // the Spark loop's schema: `id` comes from `vertices`, and
+      // `component` = coalesce(component, id) is nullable where `id` is
+      val id = vertices.schema("id")
+      val schema = StructType(Seq(id, StructField("component", LongType, id.nullable)))
+      DriverGraph.frame(spark, schema, g.ids, DriverGraph.weak(g).map(g.ids(_)))
+    } { (v, e, _) => weakSpark(v, e) }
   }
 
   /** [[weak]] as a Spark loop: alternating LARGE-STAR/SMALL-STAR (Kiveris
@@ -72,14 +70,11 @@ object ConnectedComponents {
         .select(col("v").as("u"), col("m").as("v"))
       rePointed.unionByName(mins.select(col("u"), col("m").as("v"))).distinct()
     }
-    // the semi-joins drop arcs with an endpoint outside `vertices` (or
-    // null) once, here. Lazy checkpoints: the count that follows each one
-    // materializes it in the same job (the eager default pays a separate
-    // checkpoint job first)
-    val ids = vertices.select(col("id"))
-    var e = edges
-      .join(ids.withColumnRenamed("id", "from_id"), Seq("from_id"), "left_semi")
-      .join(ids.withColumnRenamed("id", "to_id"), Seq("to_id"), "left_semi")
+    // arcs with an endpoint outside `vertices` (or null) are dropped once,
+    // here. Lazy checkpoints: the count that follows each one materializes
+    // it in the same job (the eager default pays a separate checkpoint job
+    // first)
+    var e = arcsWithin(vertices, edges)
       .select(greatest(col("from_id"), col("to_id")).as("u"),
               least(col("from_id"), col("to_id")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
@@ -106,6 +101,16 @@ object ConnectedComponents {
     vertices.select("id")
       .join(comp, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+  }
+
+  /** The arcs of `edges` whose endpoints are both in `vertices`: the
+    * semi-joins every Spark graph loop runs once at setup.
+    */
+  private[operators] def arcsWithin(vertices: DataFrame, edges: DataFrame): DataFrame = {
+    val ids = vertices.select(col("id"))
+    edges
+      .join(ids.withColumnRenamed("id", "from_id"), Seq("from_id"), "left_semi")
+      .join(ids.withColumnRenamed("id", "to_id"), Seq("to_id"), "left_semi")
   }
 
   /** Component sizes, renumbered by decreasing size (WebGraph `--renumber

@@ -3,7 +3,7 @@ package graft.operators
 import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructType}
 
 import graft.functions.Hll
@@ -12,9 +12,9 @@ import graft.functions.Hll
   * these steps inside one JVM over in-memory arrays (WebGraph/LAW,
   * `process_webgraph.sh:255-272`); a Spark loop pays 4 to 16 jobs per
   * iteration for the same rounds. So when the graph fits a byte budget of
-  * the driver ([[DriverLoad]]), one job collects it and the operator
-  * iterates here; when it does not, [[load]] declines and the operator runs
-  * its Spark loop.
+  * the driver, [[load]] reads it from [[DriverLoad]]'s one collect and the
+  * operator iterates here; when it does not, the operator runs its Spark
+  * loop over the same inputs.
   *
   * The HyperBall and PageRank kernels run the Spark loops' synchronous
   * rounds with their exact semantics; the WCC kernel is union-find, which
@@ -24,16 +24,16 @@ import graft.functions.Hll
   */
 private[graft] object DriverGraph {
 
-  /** Driver bytes per arc: two packed longs while loading, then two int
-    * vertex indices.
+  /** Driver bytes per arc: its packed row (a length, a null bitmap and two
+    * longs), then two int vertex indices.
     */
-  val ArcBytes = 24L
-  /** Driver bytes per vertex besides its kernel state: the packed id and
-    * its output row.
+  val ArcBytes = 4L + 8 + 16 + 8
+  /** Driver bytes per vertex besides its kernel state: its packed row and
+    * its id in [[Graph.ids]].
     */
-  val VertexBytes = 16L
-  /** Driver bytes per preference row: its packed id and value. */
-  val PrefBytes = 16L
+  val VertexBytes = 4L + 8 + 8 + 8
+  /** Driver bytes per preference row: its packed row. */
+  val PrefBytes = 4L + 8 + 16
   /** Rows per slice of an operator's output RDD. */
   val RowsPerSlice = 1 << 20
 
@@ -47,83 +47,61 @@ private[graft] object DriverGraph {
     def n: Int = ids.length
   }
 
-  /** Loads `vertices` (id), `edges` (from_id, to_id) and the optional
-    * preference (id, pref) when they fit `budget`, counting `stateBytes` of
-    * kernel state per vertex. Declines (None) without starting a job when
-    * the optimized plans' size estimate is over the budget; otherwise one
-    * job collects every input as packed longs ([[DriverLoad.collect]]),
-    * and declines when the rows cost more than the budget. Also declines
-    * ids or preference columns of another type than long/double, a null
-    * vertex id, a repeated vertex or preference id and a null or NaN
-    * preference: the Spark loop keeps whatever it does with those.
+  /** Runs `kernel` over `vertices` (id), `edges` (from_id, to_id) and the
+    * optional preference (id, pref) loaded into driver memory when they fit
+    * `budget`, counting `stateBytes` of kernel state per vertex; otherwise
+    * `onSpark` over those columns, persisted when they are estimated over
+    * the budget ([[DriverLoad.run]]). Also runs `onSpark` for ids or
+    * preference columns of another type than long/double, a null vertex
+    * id, a repeated vertex or preference id and a null or NaN preference:
+    * the Spark loop keeps whatever it does with those.
     */
-  def load(vertices: DataFrame, edges: DataFrame, preference: Option[DataFrame],
-           stateBytes: Long, budget: Long): Option[Graph] = {
+  def load[T](vertices: DataFrame, edges: DataFrame, preference: Option[DataFrame],
+              stateBytes: Long, budget: Long)(kernel: Graph => T)(
+      onSpark: (DataFrame, DataFrame, Option[DataFrame]) => T): T = {
     val v = vertices.select("id")
     val e = edges.select("from_id", "to_id")
     val p = preference.map(_.select("id", "pref"))
     def typed(df: DataFrame, types: DataType*) = df.schema.fields.map(_.dataType).toSeq == types
     if (!typed(v, LongType) || !typed(e, LongType, LongType) ||
-        !p.forall(typed(_, LongType, DoubleType))) return None
-    val inputs = Seq(v, e) ++ p
-    if (inputs.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum > budget) return None
+        !p.forall(typed(_, LongType, DoubleType))) return onSpark(v, e, p)
+    val rowBytes = Seq[Int => Long](_ => VertexBytes + stateBytes, _ => ArcBytes) ++
+      p.map(_ => (_: Int) => PrefBytes)
+    DriverLoad.run(Seq(v, e) ++ p, rowBytes, budget)(read(_).map(kernel)) { loaded =>
+      onSpark(loaded(0), loaded(1), loaded.lift(2))
+    }
+  }
 
-    val packed = DriverLoad.collect(budget, inputs.map(_.queryExecution.toRdd)) {
-      case 0 => pack(arcs = false, VertexBytes + stateBytes)
-      case 1 => pack(arcs = true, ArcBytes)
-      case _ => pack(arcs = false, PrefBytes)
-    }.getOrElse(return None)
-    val (vs, es, ps) = (packed(0), packed(1), packed.drop(2).flatten)
-    val nArcs = es.map(_.length / 2).sum
-
-    val ids = vs.flatten
+  /** The graph in [[DriverLoad.run]]'s packed rows of (id), (from_id,
+    * to_id) and the optional (id, pref), each read through one reused row.
+    * None for a null vertex id, a repeated vertex or preference id, or a
+    * null or NaN preference.
+    */
+  private def read(packed: Seq[Seq[Array[Byte]]]): Option[Graph] = {
+    val (vertex, pair) = (new UnsafeRow(1), new UnsafeRow(2))
+    val ids = DriverLoad.rows(packed(0), vertex)
+      .map(r => if (r.isNullAt(0)) return None else r.getLong(0)).toArray
     java.util.Arrays.sort(ids)
     if ((1 until ids.length).exists(i => ids(i) == ids(i - 1))) return None
     val index = indexOf(ids)
+    val nArcs = DriverLoad.rows(packed(1), pair).size
     val src = new Array[Int](nArcs)
     val dst = new Array[Int](nArcs)
     var m = 0
-    for (a <- es; k <- 0 until a.length by 2) {
-      val (s, d) = (index(a(k)), index(a(k + 1)))
+    for (r <- DriverLoad.rows(packed(1), pair) if !r.isNullAt(0) && !r.isNullAt(1)) {
+      val (s, d) = (index(r.getLong(0)), index(r.getLong(1)))
       if (s >= 0 && d >= 0) { src(m) = s; dst(m) = d; m += 1 }
     }
-    val pref = if (p.isEmpty) null else Array.fill(ids.length)(Double.NaN)
-    var bad = false
-    for (a <- ps; k <- 0 until a.length by 2) {
-      val i = index(a(k))
+    val pref = if (packed.size < 3) null else Array.fill(ids.length)(Double.NaN)
+    for (r <- packed.drop(2).iterator.flatMap(DriverLoad.rows(_, pair))) {
+      if (r.isNullAt(0) || r.isNullAt(1)) return None
+      val i = index(r.getLong(0))
       if (i >= 0) {
-        val value = java.lang.Double.longBitsToDouble(a(k + 1))
-        bad ||= !pref(i).isNaN || value.isNaN // repeated id, or NaN
-        pref(i) = value
+        if (!pref(i).isNaN || r.getDouble(1).isNaN) return None // repeated id, or NaN
+        pref(i) = r.getDouble(1)
       }
     }
-    if (bad) None
-    else Some(new Graph(ids, java.util.Arrays.copyOf(src, m), java.util.Arrays.copyOf(dst, m), pref))
-  }
-
-  /** Packs a partition's rows: its columns as longs (a double as its
-    * bits), `rowBytes` each; null when a row has a null column or the rows
-    * cost more than the cap. For `arcs`, a row with a null column is
-    * skipped instead.
-    */
-  private def pack(arcs: Boolean, rowBytes: Long): (Iterator[InternalRow], Long) => (Array[Long], Long) = {
-    (it, cap) =>
-      val out = Array.newBuilder[Long]
-      var bytes = 0L
-      var ok = true
-      while (ok && it.hasNext) {
-        val r = it.next()
-        if ((0 until r.numFields).exists(r.isNullAt)) ok = arcs
-        else {
-          out += r.getLong(0)
-          // an arc's second column is a long, a preference row's a double
-          if (r.numFields == 2)
-            out += (if (arcs) r.getLong(1) else java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
-          bytes += rowBytes
-          ok = bytes <= cap
-        }
-      }
-      if (ok) (out.result(), bytes) else null
+    Some(new Graph(ids, java.util.Arrays.copyOf(src, m), java.util.Arrays.copyOf(dst, m), pref))
   }
 
   /** Id → index into the ascending `ids`, -1 for an id that is not there:

@@ -71,19 +71,17 @@ object HarmonicCentrality {
                 maxHops: Int = 32): DataFrame = {
     val spark = vertices.sparkSession
     DriverGraph.load(vertices, edges, None, DriverGraph.hyperballStateBytes(log2m),
-        DriverLoad.budget(spark)) match {
-      case Some(g) =>
-        // the Spark loop's schema: its hops union the arcs' `to_id` into `id`
-        // and aggregate `hc_val`; without a hop both come from the start row
-        val hopped = maxHops > 0
-        val schema = StructType(Seq(
-          StructField("id", LongType,
-            vertices.schema("id").nullable || hopped && edges.schema("to_id").nullable),
-          StructField("hc_val", FloatType, hopped)))
-        DriverGraph.frame(spark, schema, g.ids,
-          DriverGraph.hyperball(g, log2m, maxHops).map(_.toFloat))
-      case None => hyperballSpark(vertices, edges, log2m, maxHops)
-    }
+        DriverLoad.budget(spark)) { g =>
+      // the Spark loop's schema: its hops union the arcs' `to_id` into `id`
+      // and aggregate `hc_val`; without a hop both come from the start row
+      val hopped = maxHops > 0
+      val schema = StructType(Seq(
+        StructField("id", LongType,
+          vertices.schema("id").nullable || hopped && edges.schema("to_id").nullable),
+        StructField("hc_val", FloatType, hopped)))
+      DriverGraph.frame(spark, schema, g.ids,
+        DriverGraph.hyperball(g, log2m, maxHops).map(_.toFloat))
+    } { (v, e, _) => hyperballSpark(v, e, log2m, maxHops) }
   }
 
   /** [[hyperball]] as a Spark loop: a typed Aggregator merges the registers,

@@ -40,9 +40,9 @@ object PageRank {
           alpha: Double = 0.85, maxIter: Int = 30, tol: Double = 1e-9): DataFrame = {
     val spark = vertices.sparkSession
     DriverGraph.load(vertices, edges, preference, DriverGraph.PageRankStateBytes,
-        DriverLoad.budget(spark)) match {
-      case Some(g) if g.n == 0 => vertices.select(col("id"), lit(0.0).as("pr_val"))
-      case Some(g) =>
+        DriverLoad.budget(spark)) { g =>
+      if (g.n == 0) vertices.select(col("id"), lit(0.0).as("pr_val"))
+      else {
         // the Spark loop's schema: `id` and `pref` come from the preference
         // (or the vertices with a literal 1/n); without a step the ranks are
         // the literal start ranks
@@ -54,8 +54,8 @@ object PageRank {
         val (rank, live) = DriverGraph.pageRank(g, alpha, maxIter, tol)
         val keep = g.ids.indices.filter(live(_))
         DriverGraph.frame(spark, schema, keep.map(g.ids(_)).toArray, keep.map(rank(_)).toArray)
-      case None => runSpark(vertices, edges, preference, alpha, maxIter, tol)
-    }
+      }
+    } { (v, e, p) => runSpark(v, e, p, alpha, maxIter, tol) }
   }
 
   /** [[run]] as a Spark loop. Its result is backed by the final iteration's
@@ -74,71 +74,67 @@ object PageRank {
     // degree-annotated edges, reused every iteration: cache once. The
     // semi-joins drop arcs with an endpoint outside `vertices` once, here:
     // counted in `outdeg`, such an arc would send mass nowhere.
-    val ids = vertices.select(col("id"))
-    val arcs = edges
-      .join(ids.withColumnRenamed("id", "from_id"), Seq("from_id"), "left_semi")
-      .join(ids.withColumnRenamed("id", "to_id"), Seq("to_id"), "left_semi")
+    val arcs = ConnectedComponents.arcsWithin(vertices, edges)
     val outDeg = arcs.groupBy("from_id").agg(count(lit(1)).as("outdeg"))
     val edgesDeg = arcs.join(outDeg, "from_id")
       .select(col("from_id"), col("to_id"), col("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edgesDeg.count()
 
     val pref = preference
       .getOrElse(vertices.select(col("id"), lit(1.0 / n).as("pref")))
       .select(col("id"), col("pref"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    pref.count()
+    val cached = Seq(edgesDeg, pref)
+    cached.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    try {
+      cached.foreach(_.count())
 
-    // localCheckpoint truncates lineage each iteration — without it the
-    // logical plan grows linearly and explain/AQE replanning OOMs. The
-    // initial ranks use the same RDD-level checkpoint as the loop so their
-    // blocks are TRACKED and released after the first iteration
-    // materializes (ADVICE r5: the old Dataset-level checkpoint here was
-    // never unpersisted, accumulating orphaned storage across repeated
-    // runs in one session).
-    val init0 = vertices.select(col("id"), lit(1.0 / n).as("pr_val"))
-    val initRdd = init0.rdd
-    initRdd.localCheckpoint()
-    var ranks = spark.createDataFrame(initRdd, init0.schema)
+      // localCheckpoint truncates lineage each iteration — without it the
+      // logical plan grows linearly and explain/AQE replanning OOMs. The
+      // initial ranks use the same RDD-level checkpoint as the loop so their
+      // blocks are TRACKED and released after the first iteration
+      // materializes (ADVICE r5: the old Dataset-level checkpoint here was
+      // never unpersisted, accumulating orphaned storage across repeated
+      // runs in one session).
+      val init0 = vertices.select(col("id"), lit(1.0 / n).as("pr_val"))
+      val initRdd = init0.rdd
+      initRdd.localCheckpoint()
+      var ranks = spark.createDataFrame(initRdd, init0.schema)
 
-    var iter = 0
-    var delta = Double.MaxValue
-    var prevRdd: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = Some(initRdd)
-    while (iter < maxIter && delta > tol) {
-      // convergence fused into the iteration (VERDICT r4 item 7): the OLD
-      // rank is joined into the step plan itself, so ONE action per
-      // iteration — the L1-delta aggregate — materializes new and old rank
-      // side by side (persisted for the next iteration's scan), instead of
-      // the old separate eager checkpoint + newRanks ⋈ ranks delta job.
-      // The iteration boundary is an RDD-level localCheckpoint, NOT the
-      // Dataset-level one: checkpointing a plan that references the
-      // previous checkpoint twice (step + the __old branch) makes Spark's
-      // Dataset-checkpoint stats/constraints rewrite grow superlinearly
-      // across iterations (measured: flat 0.3 s/iter through iteration
-      // ~18, then 2.4 s at 21 and 110 s at 25 on a 4-node graph);
-      // rdd.localCheckpoint() still truncates lineage at materialization
-      // (a plain persist stack-overflows task serialization by iteration
-      // ~60), and createDataFrame(rdd, schema) rebuilds a leaf with no
-      // inherited stats, keeping every iteration O(step). pr_val
-      // arithmetic is untouched, so results are unchanged. Durability
-      // trade: losing an executor holding checkpoint blocks fails the job
-      // instead of recomputing (truncated lineage) — acceptable for a
-      // stateless batch algorithm the caller simply reruns.
-      val joined = step(ranks, edgesDeg, pref, alpha)
-        .join(ranks.select(col("id"), col("pr_val").as("__old")), Seq("id"))
-      val rdd = joined.rdd
-      rdd.localCheckpoint()
-      val stepped = spark.createDataFrame(rdd, joined.schema)
-      delta = stepped.agg(sum(abs(col("pr_val") - col("__old")))).first().getDouble(0)
-      prevRdd.foreach(_.unpersist(blocking = false))
-      prevRdd = Some(rdd)
-      ranks = stepped.drop("__old")
-      iter += 1
-    }
-    edgesDeg.unpersist()
-    pref.unpersist()
-    ranks
+      var iter = 0
+      var delta = Double.MaxValue
+      var prevRdd: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = Some(initRdd)
+      while (iter < maxIter && delta > tol) {
+        // convergence fused into the iteration (VERDICT r4 item 7): the OLD
+        // rank is joined into the step plan itself, so ONE action per
+        // iteration — the L1-delta aggregate — materializes new and old rank
+        // side by side (persisted for the next iteration's scan), instead of
+        // the old separate eager checkpoint + newRanks ⋈ ranks delta job.
+        // The iteration boundary is an RDD-level localCheckpoint, NOT the
+        // Dataset-level one: checkpointing a plan that references the
+        // previous checkpoint twice (step + the __old branch) makes Spark's
+        // Dataset-checkpoint stats/constraints rewrite grow superlinearly
+        // across iterations (measured: flat 0.3 s/iter through iteration
+        // ~18, then 2.4 s at 21 and 110 s at 25 on a 4-node graph);
+        // rdd.localCheckpoint() still truncates lineage at materialization
+        // (a plain persist stack-overflows task serialization by iteration
+        // ~60), and createDataFrame(rdd, schema) rebuilds a leaf with no
+        // inherited stats, keeping every iteration O(step). pr_val
+        // arithmetic is untouched, so results are unchanged. Durability
+        // trade: losing an executor holding checkpoint blocks fails the job
+        // instead of recomputing (truncated lineage) — acceptable for a
+        // stateless batch algorithm the caller simply reruns.
+        val joined = step(ranks, edgesDeg, pref, alpha)
+          .join(ranks.select(col("id"), col("pr_val").as("__old")), Seq("id"))
+        val rdd = joined.rdd
+        rdd.localCheckpoint()
+        val stepped = spark.createDataFrame(rdd, joined.schema)
+        delta = stepped.agg(sum(abs(col("pr_val") - col("__old")))).first().getDouble(0)
+        prevRdd.foreach(_.unpersist(blocking = false))
+        prevRdd = Some(rdd)
+        ranks = stepped.drop("__old")
+        iter += 1
+      }
+      ranks
+    } finally cached.foreach(_.unpersist())
   }
 
   /** One fused power-iteration step: arc contributions AND dangling mass in
@@ -187,38 +183,38 @@ object PageRank {
     val outDeg = edges.groupBy("from_id").agg(count(lit(1)).as("outdeg"))
     val edgesDeg = edges.join(outDeg, "from_id")
       .select(col("from_id"), col("to_id"), col("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val pref = preference
       .getOrElse(vertices.select(col("id"), lit(1.0 / n).as("pref")))
       .select(col("id"), col("pref"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // LAZY checkpoints: each iteration's plan is still truncated to a leaf
-    // (no plan growth), but nothing executes until the single materializing
-    // count below — k fixed iterations run as ONE job instead of k eager
-    // checkpoint jobs (no convergence checks exist here to force a
-    // per-iteration action). pr_val arithmetic is untouched.
-    var ranks = pref.select(col("id"), col("pref").as("pr_val")).localCheckpoint(false)
-    (1 to iterations).foreach { _ =>
-      ranks = (if (redistributeDangling) step(ranks, edgesDeg, pref, alpha)
-               else {
-                 // dangling mass statically zero — keep the two-join shape
-                 // with no sentinel/broadcast work at all
-                 val contrib = edgesDeg
-                   .join(ranks, edgesDeg("from_id") === ranks("id"))
-                   .groupBy(col("to_id").as("id"))
-                   .agg(sum(col("pr_val") / col("outdeg")).as("in_mass"))
-                 pref
-                   .join(contrib, Seq("id"), "left_outer")
-                   .select(col("id"),
-                     (lit(1.0 - alpha) * col("pref") +
-                       lit(alpha) * coalesce(col("in_mass"), lit(0.0))).as("pr_val"))
-               }).localCheckpoint(false)
-    }
-    // materialize the final checkpoint BEFORE releasing the caches it was
-    // computed from (with lazy checkpoints nothing has executed yet)
-    ranks.count()
-    edgesDeg.unpersist()
-    pref.unpersist()
-    ranks
+    val cached = Seq(edgesDeg, pref)
+    cached.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    try {
+      // LAZY checkpoints: each iteration's plan is still truncated to a leaf
+      // (no plan growth), but nothing executes until the single materializing
+      // count below — k fixed iterations run as ONE job instead of k eager
+      // checkpoint jobs (no convergence checks exist here to force a
+      // per-iteration action). pr_val arithmetic is untouched.
+      var ranks = pref.select(col("id"), col("pref").as("pr_val")).localCheckpoint(false)
+      (1 to iterations).foreach { _ =>
+        ranks = (if (redistributeDangling) step(ranks, edgesDeg, pref, alpha)
+                 else {
+                   // dangling mass statically zero — keep the two-join shape
+                   // with no sentinel/broadcast work at all
+                   val contrib = edgesDeg
+                     .join(ranks, edgesDeg("from_id") === ranks("id"))
+                     .groupBy(col("to_id").as("id"))
+                     .agg(sum(col("pr_val") / col("outdeg")).as("in_mass"))
+                   pref
+                     .join(contrib, Seq("id"), "left_outer")
+                     .select(col("id"),
+                       (lit(1.0 - alpha) * col("pref") +
+                         lit(alpha) * coalesce(col("in_mass"), lit(0.0))).as("pr_val"))
+                 }).localCheckpoint(false)
+      }
+      // materialize the final checkpoint BEFORE releasing the caches it was
+      // computed from (with lazy checkpoints nothing has executed yet)
+      ranks.count()
+      ranks
+    } finally cached.foreach(_.unpersist())
   }
 }

@@ -1,19 +1,14 @@
 package graft.operators
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
-import java.nio.ByteBuffer
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.unsafe.Platform
 
 /** Global ranking: `row_number()` in a total order, with two plans chosen
   * from the input's size. An input that fits the driver's budget
@@ -42,42 +37,30 @@ object Ranks {
   def rowNumber(df: DataFrame, sortCols: Seq[Column], rankCol: String): DataFrame =
     rowNumber(df, sortCols, rankCol, DriverLoad.budget(df.sparkSession))
 
-  /** [[rowNumber]] with the driver's byte budget given. When the optimized
-    * plan's size estimate is within `budget`, the rows are collected
-    * straight from the plan. When it is over, the input is persisted first:
-    * without CBO a join is estimated as the product of its sides, so rows
-    * that fit are often estimated far over, and the persisted input serves
-    * the collect and, if that declines, [[rowNumberSpark]] without running
-    * twice.
+  /** [[rowNumber]] with the driver's byte budget given: [[DriverLoad.run]]
+    * chooses between [[inDriver]] and [[rowNumberSpark]], and persists an
+    * input estimated over the budget for both.
     */
   private[graft] def rowNumber(df: DataFrame, sortCols: Seq[Column], rankCol: String,
-                               budget: Long): DataFrame = {
-    val persist = df.queryExecution.optimizedPlan.stats.sizeInBytes > budget &&
-      df.storageLevel == StorageLevel.NONE
-    if (persist) df.persist(StorageLevel.MEMORY_AND_DISK_SER)
-    try inDriver(df, sortCols, rankCol, budget).getOrElse(rowNumberSpark(df, sortCols, rankCol))
-    finally if (persist) df.unpersist(blocking = false)
-  }
+                               budget: Long): DataFrame =
+    DriverLoad.run(Seq(df), Seq(rowBytes(_)), budget)(
+        packed => inDriver(df, sortCols, rankCol, packed.head))(
+        loaded => rowNumberSpark(loaded.head, sortCols, rankCol))
 
-  /** The in-driver path: one job collects the rows, at most `budget` bytes
-    * of them ([[rowBytes]]), and the driver sorts them with Spark's own
-    * ordering of `sortCols` (NaN, -0.0, nulls and the UTF-8 byte order of
-    * strings compare as in Spark's sort). None when the rows do not fit or
-    * a sort column is not a column of `df`.
+  /** The in-driver path over `df`'s packed rows: the driver sorts them with
+    * Spark's own ordering of `sortCols` (NaN, -0.0, nulls and the UTF-8
+    * byte order of strings compare as in Spark's sort). None when a sort
+    * column is not a column of `df`.
     */
   private def inDriver(df: DataFrame, sortCols: Seq[Column], rankCol: String,
-                       budget: Long): Option[DataFrame] = {
-    // a new plan over df reads df's cache; df's own plan may predate it
-    val src = df.select("*")
-    val ordering = src.sort(sortCols: _*).queryExecution.analyzed match {
-      case Sort(order, true, child, _) if child.output == src.queryExecution.analyzed.output =>
+                       packed: Seq[Array[Byte]]): Option[DataFrame] = {
+    val ordering = df.sort(sortCols: _*).queryExecution.analyzed match {
+      case Sort(order, true, child, _) if child.output == df.queryExecution.analyzed.output =>
         new InterpretedOrdering(order, child.output)
       case _ => return None
     }
-    val schema = src.schema
-    val packed = DriverLoad.collect(budget, Seq(src.queryExecution.toRdd))(_ => pack(schema))
-      .getOrElse(return None)
-    val rows = packed.head.flatMap(unpack(_, schema.length))
+    val schema = df.schema
+    val rows = DriverLoad.rows(packed, new UnsafeRow(schema.length)).toArray[InternalRow]
     java.util.Arrays.sort(rows, ordering)
 
     val out = df.withColumn(rankCol, lit(0L)).schema
@@ -90,43 +73,6 @@ object Ranks {
     // one partition, so a written result is one file, as the range path's
     // AQE-coalesced exchange writes for an input this small
     Some(df.sparkSession.createDataFrame(ranked.asJava, out).coalesce(1))
-  }
-
-  /** Packs a partition's rows in Spark's binary row format, each after its
-    * length; null when they cost more than the cap.
-    */
-  private def pack(schema: StructType): (Iterator[InternalRow], Long) => (Array[Byte], Long) = {
-    (it, cap) =>
-      lazy val toUnsafe = UnsafeProjection.create(schema)
-      val buf = new ByteArrayOutputStream()
-      val out = new DataOutputStream(buf)
-      val copyBuf = new Array[Byte](4096)
-      var bytes = 0L
-      while (bytes <= cap && it.hasNext) {
-        val r = it.next() match {
-          case u: UnsafeRow => u
-          case other => toUnsafe(other)
-        }
-        out.writeInt(r.getSizeInBytes)
-        r.writeToStream(out, copyBuf)
-        bytes += rowBytes(r.getSizeInBytes)
-      }
-      if (bytes <= cap) (buf.toByteArray, bytes) else null
-  }
-
-  /** The rows [[pack]] wrote to `buf`, pointing into it. */
-  private def unpack(buf: Array[Byte], numFields: Int): Array[InternalRow] = {
-    val rows = Array.newBuilder[InternalRow]
-    val lengths = ByteBuffer.wrap(buf)
-    var at = 0
-    while (at < buf.length) {
-      val size = lengths.getInt(at)
-      val row = new UnsafeRow(numFields)
-      row.pointTo(buf, Platform.BYTE_ARRAY_OFFSET + at + 4, size)
-      rows += row
-      at += 4 + size
-    }
-    rows.result()
   }
 
   /** The range path: range-partition the input on `sortCols`, sort within

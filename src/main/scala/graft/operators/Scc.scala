@@ -16,8 +16,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object Scc {
 
-  /** (id, component) with component = smallest id in the SCC. */
+  /** (id, component) with component = smallest id in the SCC. An arc with
+    * an endpoint outside `vertices` is ignored.
+    */
   def exact(vertices: DataFrame, edges: DataFrame, maxHops: Int = 64): DataFrame = {
+    val arcs = ConnectedComponents.arcsWithin(vertices, edges).localCheckpoint(false)
     // forward closure: (src, dst) with src ⇝ dst
     var frontier = vertices.select(col("id").as("src"), col("id").as("dst"))
       .localCheckpoint(false)
@@ -26,7 +29,7 @@ object Scc {
     var hops = 0
     while (n > 0 && hops < maxHops) {
       hops += 1
-      val expanded = frontier.join(edges, frontier("dst") === edges("from_id"))
+      val expanded = frontier.join(arcs, frontier("dst") === arcs("from_id"))
         .select(col("src"), col("to_id").as("dst"))
         .distinct()
       frontier = expanded.join(closure, Seq("src", "dst"), "left_anti").localCheckpoint(false)
@@ -59,7 +62,7 @@ object Scc {
     *     those nodes are exactly root's SCC; emit, deactivate, repeat.
     *
     * Output: (id, component) with component = min id in the SCC — the same
-    * contract as [[exact]].
+    * contract as [[exact]], which also ignores arcs to non-vertices.
     */
   def coloring(vertices: DataFrame, edges: DataFrame,
                maxSweeps: Int = 4096, maxHops: Int = 256): DataFrame = {
@@ -68,8 +71,9 @@ object Scc {
     // needs k sweeps): deep for adversarial graphs, shallow for web graphs
     // (bowtie: trimming strips the tendrils, a handful of sweeps harvests
     // the cores)
-    val e0 = edges.select(col("from_id"), col("to_id"))
+    val e0 = ConnectedComponents.arcsWithin(vertices, edges.select(col("from_id"), col("to_id")))
       .filter(col("from_id") =!= col("to_id")).distinct()
+      .localCheckpoint(false)
     var active = vertices.select(col("id")).localCheckpoint(false)
     var result = vertices.select(col("id"), col("id").as("component")).limit(0)
       .localCheckpoint(false)
@@ -77,9 +81,9 @@ object Scc {
     var remaining = active.count()
     while (remaining > 0 && sweep < maxSweeps) {
       sweep += 1
-      // edges inside the active set (sweep 1: active == vertices, the
-      // semi-joins are identities — skip the two join jobs)
-      var e = if (sweep == 1) e0.localCheckpoint(false)
+      // edges inside the active set (sweep 1: active == vertices, and e0
+      // holds only arcs between vertices — skip the two join jobs)
+      var e = if (sweep == 1) e0
         else e0
           .join(active.select(col("id").as("from_id")), Seq("from_id"), "left_semi")
           .join(active.select(col("id").as("to_id")), Seq("to_id"), "left_semi")

@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
 
 /** The in-driver path of HyperBall, WCC and PageRank against their Spark
-  * loops, and the size decision between the two.
+  * loops, and the size decision between the two ([[DriverLoad.run]]).
   */
 class DriverGraphSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -105,28 +107,76 @@ class DriverGraphSpec extends AnyFunSuite {
     }
   }
 
-  test("decision: a plan estimated over the budget declines without a job; max + 1 declines") {
-    // `range` estimates 8 bytes a row and starts no job to say so
-    val huge = spark.range(0L, 1L << 40).toDF("id")
-    val e = Seq((0L, 1L)).toDF("from_id", "to_id")
-    var declined: Option[DriverGraph.Graph] = None
-    assert(JobRecorder.during(spark) {
-      declined = DriverGraph.load(huge, e, None, 0L, DriverLoad.budget(spark))
-    }.isEmpty)
-    assert(declined.isEmpty)
+  /** The graph `DriverGraph.load` gives a kernel, None when it declines. */
+  private def loaded(v: DataFrame, e: DataFrame, state: Long, budget: Long) =
+    DriverGraph.load(v, e, None, state, budget)(Option(_))((_, _, _) => None)
+
+  test("decision: a budget of exactly the packed rows loads the graph, one byte less declines") {
     // 4 vertices and 3 arcs cost exactly this many bytes
     val v = (0L until 4L).toDF("id")
     val arcs = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("from_id", "to_id")
     val state = 8L
     val fits = 4 * (DriverGraph.VertexBytes + state) + 3 * DriverGraph.ArcBytes
-    val loaded = DriverGraph.load(v, arcs, None, state, fits)
-    assert(loaded.map(g => (g.n, g.src.length)).contains((4, 3)))
-    // one arc more than the budget holds is declined after the collect
-    val tight = fits - DriverGraph.ArcBytes + 1
-    assert(JobRecorder.during(spark) {
-      declined = DriverGraph.load(v, arcs, None, state, tight)
-    }.nonEmpty)
-    assert(declined.isEmpty)
+    assert(loaded(v, arcs, state, fits).map(g => (g.n, g.src.length)).contains((4, 3)))
+    assert(loaded(v, arcs, state, fits - 1).isEmpty)
+  }
+
+  /** The host graph of a small SynthDocs corpus, not written: its edges are
+    * a join plan, estimated as the product of its sides.
+    */
+  private def unwrittenHostGraph(): (DataFrame, DataFrame) =
+    HostGraph.build(HostGraph.hostLinks(graft.sources.SynthDocs.docs(spark, 400L, 40, 7L).toDF()))
+
+  test("an unwritten host graph estimated over the budget loads in the driver, and equals the Spark loops") {
+    spark.catalog.clearCache()
+    val (v, e) = unwrittenHostGraph()
+    val budget = DriverLoad.budget(spark)
+    assert(e.queryExecution.optimizedPlan.stats.sizeInBytes > budget)
+    var g: Option[DriverGraph.Graph] = None
+    val load = JobRecorder.during(spark) { g = loaded(v, e, 0L, budget) }
+    assert(g.exists(g => g.n > 0 && g.src.nonEmpty))
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // each public entry starts the load's jobs and none of its Spark loop's
+    var out: Seq[DataFrame] = Nil
+    val jobs = JobRecorder.during(spark) {
+      out = Seq(ConnectedComponents.weak(v, e), HarmonicCentrality.hyperball(v, e),
+        PageRank.run(v, e, maxIter = 40, tol = 1e-14))
+    }
+    assert(jobs.size <= 3 * load.size, jobs)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(pairs(out(0)) == pairs(ConnectedComponents.weakSpark(v, e)))
+    sameHyperball(v, e)
+    samePageRank(v, e, None)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("decision: a graph over a tight budget runs the Spark loop over the persisted inputs") {
+    spark.catalog.clearCache()
+    val (v, e) = unwrittenHostGraph()
+    val want = pairs(ConnectedComponents.weak(v, e))
+    val got = DriverGraph.load(v, e, None, DriverGraph.WeakStateBytes, 1000L)(_ => Map.empty[Long, Any]) {
+      (v1, e1, _) =>
+        assert(Seq(v1, e1).forall(_.storageLevel == StorageLevel.MEMORY_AND_DISK_SER))
+        val wcc = ConnectedComponents.weakSpark(v1, e1)
+        assert(wcc.queryExecution.withCachedData.exists(_.isInstanceOf[InMemoryRelation]))
+        pairs(wcc)
+    }
+    assert(got == want)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("a failing input or Spark loop leaves nothing in the cache manager") {
+    spark.catalog.clearCache()
+    val boom = udf((id: Long) => if (id >= 0) throw new IllegalStateException("boom") else id)
+    val v = spark.range(0, 10).toDF("id")
+    val e = spark.range(0, 10).select(boom(col("id")).as("from_id"), (col("id") + 1).as("to_id"))
+    intercept[Exception](PageRank.runSpark(v, e).collect())
+    assert(spark.sharedState.cacheManager.isEmpty)
+    intercept[Exception](PageRank.runFixed(v, e, 3).collect())
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // the load persists inputs estimated over the budget, then throws
+    intercept[Exception](loaded(v, e, 0L, 1L))
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("the public entry starts no job beyond the load collect") {

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -67,6 +68,29 @@ class Round2Spec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L,
       3L -> 3L, 4L -> 3L, 5L -> 3L, 6L -> 6L, 7L -> 7L))
+  }
+
+  test("SCC on a vertex-subset input equals SCC on the arcs inside it, exact and coloring") {
+    type Op = (DataFrame, DataFrame) => DataFrame
+    def scc(f: Op, v: Seq[Long], e: Seq[(Long, Long)]) =
+      f(v.toDF("id"), e.toDF("from_id", "to_id")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (nodes, edges) = randomGraph(40, 3, 4L)
+    val arcs = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val cases = Seq(
+      // every vertex has arcs in and out, all through non-vertices
+      (Seq(0L, 1L), Seq((0L, 5L), (5L, 0L), (1L, 6L), (6L, 1L))),
+      // 1 and 2 reach each other only through 5
+      (Seq(1L, 2L), Seq((1L, 5L), (5L, 2L), (2L, 1L))),
+      (nodes.collect().map(_.getLong(0)).filter(_ % 4 != 0).toSeq, arcs))
+    for ((v, e) <- cases) {
+      val inside = e.filter { case (a, b) => v.contains(a) && v.contains(b) }
+      for (f <- Seq[Op](Scc.exact(_, _), Scc.coloring(_, _))) {
+        val got = scc(f, v, e)
+        assert(got.keySet == v.toSet)
+        assert(got == scc(f, v, inside), v)
+      }
+    }
   }
 
   test("personalized PageRank: mass conserved, preference targets favored") {
