@@ -230,7 +230,7 @@ object SparkEntry {
     // F2: PageRank, 3 fixed power iterations (oracle = chained CTEs)
     "q_pagerank" -> ((s, dir) => {
       val (nodes, edges) = nationGraph(s, dir)
-      PageRank.runFixed(nodes, edges, iterations = 3)
+      PageRank.run(nodes, edges, maxIter = 3, tol = 0.0, redistributeDangling = false)
         .select(col("id"), round(col("pr_val"), 6).as("pr_val"))
         .orderBy("id")
     }),
@@ -569,8 +569,8 @@ object SparkEntry {
              sum(col("ok").cast("long")).as("n_within_10pct"))
     }),
     // F5: strongly connected components (5-cycles within nation groups) via
-    // the DISTRIBUTED trim+coloring path (O(V+E) state); Scc.exact remains
-    // the small-scale oracle (SccSpec pins equality on random graphs).
+    // the DISTRIBUTED trim+coloring path (O(V+E) state); Round2Spec pins it
+    // against a sequential Tarjan on random graphs.
     "q_scc" -> ((s, dir) => {
       val nation = s.read.parquet(t(dir, "nation"))
       val nodes = nation.select(col("n_nationkey").cast("long").as("id"))
@@ -587,8 +587,7 @@ object SparkEntry {
       val (nodes, edges) = nationGraph(s, dir)
       val pref = nodes.select(col("id"),
         when(col("id") < 5, lit(0.2)).otherwise(lit(0.0)).as("pref"))
-      PageRank.runFixed(nodes, edges, iterations = 3,
-          preference = Some(pref), redistributeDangling = true)
+      PageRank.run(nodes, edges, Some(pref), maxIter = 3, tol = 0.0)
         .select(col("id"), round(col("pr_val"), 6).as("pr_val"))
         .orderBy("id")
     }),
@@ -641,7 +640,8 @@ object SparkEntry {
     }),
     // H3: multi-crawl merge with stable vertex-id reuse
     "q_merged_ids" -> ((s, dir) => {
-      // BOTH parity crawls derive from ONE cached scan+distinct: a pair's
+      // BOTH parity crawls derive from ONE checkpointed scan+distinct (lazy:
+      // the ContextCleaner frees its blocks with the result): a pair's
       // parity is a pure function of its to_host (p<partkey>), so slicing
       // the distinct pair set by parity is exactly each crawl's distinct
       // link set — one lineitem scan and one distinct exchange instead of
@@ -652,7 +652,7 @@ object SparkEntry {
                 concat(lit("s"), col("l_suppkey")).as("from_host"),
                 concat(lit("p"), col("l_partkey")).as("to_host"))
         .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .localCheckpoint(eager = false)
       def crawl(parity: Int) =
         all.filter(col("__parity") === parity).drop("__parity")
       val c0 = crawl(0)
@@ -713,8 +713,8 @@ object SparkEntry {
 
   /** q_pagerank_pref oracle: 3 chained power-iteration CTEs with the
     * strongly-preferential update — teleport AND per-iteration dangling mass
-    * both distributed by the preference vector (mirrors PageRank.runFixed
-    * with redistributeDangling = true).
+    * both distributed by the preference vector (mirrors PageRank.run with
+    * maxIter = 3, tol = 0.0 and redistributeDangling = true).
     */
   private val pagerankPrefOracle: String = {
     val iters = (1 to 3).map { i =>

@@ -76,10 +76,10 @@ object TextQueries {
     // stage is oracle-checked alone above/below; this pins the COMPOSITION
     "q_clean_corpus" -> ((s, dir) => {
       // d feeds four consumers (exact-pair groupBy, exact-pair join, the
-      // minhash chain, and the final corpus anti-join) — cache the 500-doc
-      // slice so the scan+filter runs once, not once per consumer
-      val d = docs(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      // minhash chain, and the final corpus anti-join) — checkpoint the
+      // 500-doc slice so the scan+filter runs once, not once per consumer
+      // (lazily: the ContextCleaner frees its blocks with the result)
+      val d = docs(s, dir).localCheckpoint(eager = false)
       Dedup.dropDuplicates(d, "doc_id", Dedup.dupGroups(dupPairs(d)))
         .withColumn("score", TextQuality.qualityScore(col("text")))
         .filter(col("score") >= 0.5)

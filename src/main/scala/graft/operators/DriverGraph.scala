@@ -17,23 +17,24 @@ import graft.functions.Hll
   * loop over the same inputs.
   *
   * The HyperBall and PageRank kernels run the Spark loops' synchronous
-  * rounds with their exact semantics; the WCC kernel is union-find, which
-  * gives the Spark loop's labels without rounds. Arcs count as a multiset,
-  * and an arc with an endpoint that is not a vertex (or is null) is
-  * ignored.
+  * rounds with their exact semantics (PageRank in both dangling modes, and
+  * fixed-k with `tol = 0.0`); the WCC kernel is union-find, which gives the
+  * Spark loop's labels without rounds. Arcs count as a multiset, and an arc
+  * with an endpoint that is not a vertex (or is null), like a preference
+  * row for a non-vertex, is ignored.
   */
 private[graft] object DriverGraph {
 
-  /** Driver bytes per arc: its packed row (a length, a null bitmap and two
-    * longs), then two int vertex indices.
+  /** Bytes of a packed row of two 8-byte values, an arc or a preference
+    * row: its length, a null bitmap and the two values.
     */
-  val ArcBytes = 4L + 8 + 16 + 8
+  val PairRowBytes = 4L + 8 + 16
+  /** Driver bytes per arc: its packed row, then two int vertex indices. */
+  val ArcBytes = PairRowBytes + 8
   /** Driver bytes per vertex besides its kernel state: its packed row and
     * its id in [[Graph.ids]].
     */
   val VertexBytes = 4L + 8 + 8 + 8
-  /** Driver bytes per preference row: its packed row. */
-  val PrefBytes = 4L + 8 + 16
   /** Rows per slice of an operator's output RDD. */
   val RowsPerSlice = 1 << 20
 
@@ -66,7 +67,7 @@ private[graft] object DriverGraph {
     if (!typed(v, LongType) || !typed(e, LongType, LongType) ||
         !p.forall(typed(_, LongType, DoubleType))) return onSpark(v, e, p)
     val rowBytes = Seq[Int => Long](_ => VertexBytes + stateBytes, _ => ArcBytes) ++
-      p.map(_ => (_: Int) => PrefBytes)
+      p.map(_ => (_: Int) => PairRowBytes)
     DriverLoad.run(Seq(v, e) ++ p, rowBytes, budget)(read(_).map(kernel)) { loaded =>
       onSpark(loaded(0), loaded(1), loaded.lift(2))
     }
@@ -84,7 +85,8 @@ private[graft] object DriverGraph {
     java.util.Arrays.sort(ids)
     if ((1 until ids.length).exists(i => ids(i) == ids(i - 1))) return None
     val index = indexOf(ids)
-    val nArcs = DriverLoad.rows(packed(1), pair).size
+    // every packed arc has the same size, so its count needs no pass
+    val nArcs = (packed(1).map(_.length.toLong).sum / PairRowBytes).toInt
     val src = new Array[Int](nArcs)
     val dst = new Array[Int](nArcs)
     var m = 0
@@ -190,26 +192,26 @@ private[graft] object DriverGraph {
   val PageRankStateBytes = 40L
 
   /** PageRank's power iteration over `g`, as `PageRank.runSpark` runs it:
-    * dangling mass is redistributed by the preference (uniform when
-    * `g.pref` is null), and it stops after `maxIter` steps or when the L1
-    * change is at most `tol`. As in the Spark loop, each step keeps only
-    * the vertices the preference has a row for, so the output holds the
-    * preference's vertices (all of them after zero steps). Returns the
-    * ranks and which vertices they hold; sums run in arc order, so ranks
-    * may differ from the Spark loop's in the last bits only.
+    * it starts from the preference (1/n each when `g.pref` is null), keeps
+    * only the vertices the preference has a row for, redistributes dangling
+    * mass by the preference when `redistributeDangling` (else drops it), and
+    * stops after `maxIter` steps or when the L1 change is at most `tol`.
+    * Returns the ranks and which vertices they hold; sums run in arc order,
+    * so ranks may differ from the Spark loop's in the last bits only.
     */
-  def pageRank(g: Graph, alpha: Double, maxIter: Int, tol: Double): (Array[Double], Array[Boolean]) = {
+  def pageRank(g: Graph, alpha: Double, maxIter: Int, tol: Double,
+               redistributeDangling: Boolean): (Array[Double], Array[Boolean]) = {
     val n = g.n
     val pref = if (g.pref == null) Array.fill(n)(1.0 / n) else g.pref
     val outdeg = new Array[Int](n)
     g.src.foreach(u => outdeg(u) += 1)
-    var rank = Array.fill(n)(1.0 / n)
-    val live = Array.fill(n)(true)
+    val live = pref.map(!_.isNaN)
+    // a vertex without a preference row has rank 0, so it sends no mass
+    var rank = pref.map(p => if (p.isNaN) 0.0 else p)
     val inMass = new Array[Double](n)
     var iter = 0
     var delta = Double.MaxValue
     while (iter < maxIter && delta > tol) {
-      // a dropped vertex's rank is 0, so it sends no mass
       java.util.Arrays.fill(inMass, 0.0)
       var k = 0
       while (k < g.src.length) {
@@ -219,15 +221,16 @@ private[graft] object DriverGraph {
       }
       var dangling = 0.0
       var i = 0
-      while (i < n) { if (outdeg(i) == 0) dangling += rank(i); i += 1 }
+      if (redistributeDangling)
+        while (i < n) { if (outdeg(i) == 0) dangling += rank(i); i += 1 }
       val next = new Array[Double](n)
       delta = 0.0
       i = 0
       while (i < n) {
-        if (live(i) && !pref(i).isNaN) {
+        if (live(i)) {
           next(i) = ((1.0 - alpha) + alpha * dangling) * pref(i) + alpha * inMass(i)
           delta += math.abs(next(i) - rank(i))
-        } else live(i) = false
+        }
         i += 1
       }
       rank = next

@@ -10,7 +10,7 @@ import graft.functions.{Hll, HllMergeAgg}
   * computes with HyperBall on the transpose graph
   * (`process_webgraph.sh:255-257`) and uses as ranking/priority.
   *
-  * Two modes:
+  * Two modes, both over the arcs between vertices only:
   *  - [[exact]]: per-hop BFS frontier over (src, dst) pairs — O(n·reachable)
   *    state, the test-scale ground truth;
   *  - [[hyperball]]: HLL-register ball growth, O(n·2^log2m) state — the
@@ -19,8 +19,12 @@ import graft.functions.{Hll, HllMergeAgg}
   */
 object HarmonicCentrality {
 
-  /** Exact harmonic centrality. Pair-explosion: test/validation scale only. */
+  /** Exact harmonic centrality, (id, hc_val: double), one row per vertex;
+    * an arc with an endpoint outside `vertices` is ignored, so no path runs
+    * through a non-vertex. Pair-explosion: test/validation scale only.
+    */
   def exact(vertices: DataFrame, edges: DataFrame, maxHops: Int = 64): DataFrame = {
+    val arcs = ConnectedComponents.arcsWithin(vertices, edges).localCheckpoint(false)
     // frontier/seen hold pairs (src, dst): src reaches dst in d hops along arcs;
     // hc of the ORIGINAL graph needs distances d(u,v) along u→v arcs, summed
     // per TARGET v — so we accumulate 1/d grouped by dst.
@@ -37,7 +41,7 @@ object HarmonicCentrality {
     while (frontierSize > 0 && d < maxHops) {
       d += 1
       val expanded = frontier
-        .join(edges, frontier("dst") === edges("from_id"))
+        .join(arcs, frontier("dst") === arcs("from_id"))
         .select(col("src"), col("to_id").as("dst"))
         .distinct()
       val newFrontier = expanded.join(seen, Seq("src", "dst"), "left_anti")

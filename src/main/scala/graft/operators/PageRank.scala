@@ -14,21 +14,30 @@ import org.apache.spark.storage.StorageLevel
   * output contract — the fixed point is the same; we run Jacobi power
   * iteration, which is the distributable form.
   *
-  * Dangling-node mass is redistributed according to the preference vector
-  * (uniform when none), matching LAW's strongly-preferential semantics.
+  * The iteration starts from the preference vector (uniform when none).
+  * Teleport mass, and by default dangling-node mass, are distributed by it,
+  * matching LAW's strongly-preferential semantics.
   *
-  * [[run]] iterates a graph that fits the driver in driver memory
-  * ([[DriverGraph]]) with the same Jacobi steps.
+  * [[run]] is the one entry: it iterates a graph that fits the driver in
+  * driver memory ([[DriverGraph]]) with the same Jacobi steps, and a larger
+  * one with [[runSpark]]'s loop.
   */
 object PageRank {
 
   /** @param vertices (id)           — all node ids
     * @param edges    (from_id, to_id); an arc with an endpoint outside
     *                 `vertices` is ignored
-    * @param preference optional (id, pref) summing to 1; uniform when None
+    * @param preference optional (id, pref) summing to 1; uniform when None.
+    *                 It is the start vector too; a row for an id outside
+    *                 `vertices` is ignored
     * @param alpha    damping (reference default 0.85)
-    * @param tol      stop once the L1 change of one step is at most this
-    * @return (id, pr_val: double), one row per id of the preference. A
+    * @param tol      stop once the L1 change of one step is at most this;
+    *                 0.0 runs exactly `maxIter` steps (a step after a zero
+    *                 change would change nothing)
+    * @param redistributeDangling give the mass of vertices without out-arcs
+    *                 back by the preference (LAW's strongly-preferential
+    *                 PageRank); false drops it
+    * @return (id, pr_val: double), one row per vertex of the preference. A
     *         graph that fits the driver's budget is iterated in driver
     *         memory ([[DriverGraph]]) and the result is a small RDD of its
     *         rows; a larger one runs [[runSpark]]'s loop, whose result is
@@ -37,25 +46,24 @@ object PageRank {
     */
   def run(vertices: DataFrame, edges: DataFrame,
           preference: Option[DataFrame] = None,
-          alpha: Double = 0.85, maxIter: Int = 30, tol: Double = 1e-9): DataFrame = {
+          alpha: Double = 0.85, maxIter: Int = 30, tol: Double = 1e-9,
+          redistributeDangling: Boolean = true): DataFrame = {
     val spark = vertices.sparkSession
     DriverGraph.load(vertices, edges, preference, DriverGraph.PageRankStateBytes,
         DriverLoad.budget(spark)) { g =>
       if (g.n == 0) vertices.select(col("id"), lit(0.0).as("pr_val"))
       else {
-        // the Spark loop's schema: `id` and `pref` come from the preference
-        // (or the vertices with a literal 1/n); without a step the ranks are
-        // the literal start ranks
+        // the Spark loop's schema: `id` and `pr_val` come from the
+        // preference (or the vertices with a literal 1/n)
         val pref = preference.getOrElse(vertices.select(col("id"), lit(1.0).as("pref")))
         val schema = StructType(Seq(
-          StructField("id", LongType,
-            (if (maxIter > 0) pref else vertices).schema("id").nullable),
-          StructField("pr_val", DoubleType, maxIter > 0 && pref.schema("pref").nullable)))
-        val (rank, live) = DriverGraph.pageRank(g, alpha, maxIter, tol)
+          StructField("id", LongType, pref.schema("id").nullable),
+          StructField("pr_val", DoubleType, pref.schema("pref").nullable)))
+        val (rank, live) = DriverGraph.pageRank(g, alpha, maxIter, tol, redistributeDangling)
         val keep = g.ids.indices.filter(live(_))
         DriverGraph.frame(spark, schema, keep.map(g.ids(_)).toArray, keep.map(rank(_)).toArray)
       }
-    } { (v, e, p) => runSpark(v, e, p, alpha, maxIter, tol) }
+    } { (v, e, p) => runSpark(v, e, p, alpha, maxIter, tol, redistributeDangling) }
   }
 
   /** [[run]] as a Spark loop. Its result is backed by the final iteration's
@@ -66,22 +74,24 @@ object PageRank {
     */
   private[graft] def runSpark(vertices: DataFrame, edges: DataFrame,
                               preference: Option[DataFrame] = None, alpha: Double = 0.85,
-                              maxIter: Int = 30, tol: Double = 1e-9): DataFrame = {
+                              maxIter: Int = 30, tol: Double = 1e-9,
+                              redistributeDangling: Boolean = true): DataFrame = {
     val spark = vertices.sparkSession
     val n = vertices.count()
     if (n == 0) return vertices.select(col("id"), lit(0.0).as("pr_val"))
 
     // degree-annotated edges, reused every iteration: cache once. The
-    // semi-joins drop arcs with an endpoint outside `vertices` once, here:
-    // counted in `outdeg`, such an arc would send mass nowhere.
+    // semi-joins drop arcs and preference rows with an id outside
+    // `vertices` once, here: counted in `outdeg`, such an arc would send
+    // mass nowhere, and such a rank row would hold mass no arc reaches.
     val arcs = ConnectedComponents.arcsWithin(vertices, edges)
     val outDeg = arcs.groupBy("from_id").agg(count(lit(1)).as("outdeg"))
     val edgesDeg = arcs.join(outDeg, "from_id")
       .select(col("from_id"), col("to_id"), col("outdeg"))
 
     val pref = preference
+      .map(_.select(col("id"), col("pref")).join(vertices.select("id"), Seq("id"), "left_semi"))
       .getOrElse(vertices.select(col("id"), lit(1.0 / n).as("pref")))
-      .select(col("id"), col("pref"))
     val cached = Seq(edgesDeg, pref)
     cached.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
     try {
@@ -94,7 +104,7 @@ object PageRank {
       // materializes (ADVICE r5: the old Dataset-level checkpoint here was
       // never unpersisted, accumulating orphaned storage across repeated
       // runs in one session).
-      val init0 = vertices.select(col("id"), lit(1.0 / n).as("pr_val"))
+      val init0 = pref.select(col("id"), col("pref").as("pr_val"))
       val initRdd = init0.rdd
       initRdd.localCheckpoint()
       var ranks = spark.createDataFrame(initRdd, init0.schema)
@@ -122,7 +132,7 @@ object PageRank {
         // trade: losing an executor holding checkpoint blocks fails the job
         // instead of recomputing (truncated lineage) — acceptable for a
         // stateless batch algorithm the caller simply reruns.
-        val joined = step(ranks, edgesDeg, pref, alpha)
+        val joined = step(ranks, edgesDeg, pref, alpha, redistributeDangling)
           .join(ranks.select(col("id"), col("pr_val").as("__old")), Seq("id"))
         val rdd = joined.rdd
         rdd.localCheckpoint()
@@ -142,79 +152,33 @@ object PageRank {
     * driver-side `.first()` action). A rank row with no out-arcs routes its
     * whole mass to a `cid = -1` sentinel group (vertex ids are dense ≥ 0,
     * so the sentinel can't collide); the sentinel row is broadcast back as
-    * the scalar dangling mass. Catalyst reuses the aggregation's exchange
-    * between the sentinel branch and the contribution branch, and the
-    * arithmetic (`α·dangling` then `+`) is the same IEEE double sequence as
-    * the old driver-side scalar, so every oracle hash is unchanged.
+    * the scalar dangling mass, or dropped for a literal 0.0 when
+    * `redistributeDangling` is false. Catalyst reuses the aggregation's
+    * exchange between the sentinel branch and the contribution branch, and
+    * the arithmetic (`α·dangling` then `+`) is the same IEEE double
+    * sequence as the old driver-side scalar, so every oracle hash is
+    * unchanged.
     */
   private def step(ranks: DataFrame, edgesDeg: DataFrame, pref: DataFrame,
-                   alpha: Double): DataFrame = {
+                   alpha: Double, redistributeDangling: Boolean): DataFrame = {
     val contribAll = ranks
       .join(edgesDeg, ranks("id") === edgesDeg("from_id"), "left_outer")
       .select(coalesce(col("to_id"), lit(-1L)).as("cid"),
         when(col("to_id").isNotNull, col("pr_val") / col("outdeg"))
           .otherwise(col("pr_val")).as("mass"))
       .groupBy("cid").agg(sum("mass").as("in_mass"))
-    val dangling = contribAll.filter(col("cid") === -1L)
-      .agg(coalesce(sum("in_mass"), lit(0.0)).as("dmass"))
-    pref
+    val inMass = pref
       .join(contribAll.filter(col("cid") =!= -1L).withColumnRenamed("cid", "id"),
         Seq("id"), "left_outer")
-      .crossJoin(broadcast(dangling))
-      .select(col("id"),
-        ((lit(1.0 - alpha) + lit(alpha) * col("dmass")) * col("pref") +
-          lit(alpha) * coalesce(col("in_mass"), lit(0.0))).as("pr_val"))
-  }
-
-  /** Fixed-iteration variant with no convergence check — one job per
-    * iteration, no extra delta pass. Used by the oracle-checked queries (the
-    * DuckDB oracle chains the same k steps as CTEs).
-    *
-    * With `preference` (LAW strongly-preferential semantics,
-    * `CreatePreferenceVector.java:21-25`): teleport mass AND dangling-node
-    * mass are both distributed by the preference vector —
-    * pr' = (1-α)·pref + α·(dangling·pref + Σ in_mass).
-    */
-  def runFixed(vertices: DataFrame, edges: DataFrame, iterations: Int,
-               alpha: Double = 0.85,
-               preference: Option[DataFrame] = None,
-               redistributeDangling: Boolean = false): DataFrame = {
-    val n = vertices.count()
-    val outDeg = edges.groupBy("from_id").agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = edges.join(outDeg, "from_id")
-      .select(col("from_id"), col("to_id"), col("outdeg"))
-    val pref = preference
-      .getOrElse(vertices.select(col("id"), lit(1.0 / n).as("pref")))
-      .select(col("id"), col("pref"))
-    val cached = Seq(edgesDeg, pref)
-    cached.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
-    try {
-      // LAZY checkpoints: each iteration's plan is still truncated to a leaf
-      // (no plan growth), but nothing executes until the single materializing
-      // count below — k fixed iterations run as ONE job instead of k eager
-      // checkpoint jobs (no convergence checks exist here to force a
-      // per-iteration action). pr_val arithmetic is untouched.
-      var ranks = pref.select(col("id"), col("pref").as("pr_val")).localCheckpoint(false)
-      (1 to iterations).foreach { _ =>
-        ranks = (if (redistributeDangling) step(ranks, edgesDeg, pref, alpha)
-                 else {
-                   // dangling mass statically zero — keep the two-join shape
-                   // with no sentinel/broadcast work at all
-                   val contrib = edgesDeg
-                     .join(ranks, edgesDeg("from_id") === ranks("id"))
-                     .groupBy(col("to_id").as("id"))
-                     .agg(sum(col("pr_val") / col("outdeg")).as("in_mass"))
-                   pref
-                     .join(contrib, Seq("id"), "left_outer")
-                     .select(col("id"),
-                       (lit(1.0 - alpha) * col("pref") +
-                         lit(alpha) * coalesce(col("in_mass"), lit(0.0))).as("pr_val"))
-                 }).localCheckpoint(false)
+    val (withDangling, dmass) =
+      if (!redistributeDangling) (inMass, lit(0.0))
+      else {
+        val dangling = contribAll.filter(col("cid") === -1L)
+          .agg(coalesce(sum("in_mass"), lit(0.0)).as("dmass"))
+        (inMass.crossJoin(broadcast(dangling)), col("dmass"))
       }
-      // materialize the final checkpoint BEFORE releasing the caches it was
-      // computed from (with lazy checkpoints nothing has executed yet)
-      ranks.count()
-      ranks
-    } finally cached.foreach(_.unpersist())
+    withDangling.select(col("id"),
+      ((lit(1.0 - alpha) + lit(alpha) * dmass) * col("pref") +
+        lit(alpha) * coalesce(col("in_mass"), lit(0.0))).as("pr_val"))
   }
 }

@@ -2,56 +2,20 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Strongly connected components (F5 — the reference delegates to WebGraph's
   * `StronglyConnectedComponents --renumber --sizes`,
-  * `process_webgraph.sh:270-272`, consuming only the size distribution).
-  *
-  * Implementation: mutual-reachability closure — scc(v) = min{u : u ⇄ v} —
-  * computed from the forward BFS closure and its transpose. Pair-state is
-  * O(n·reachable): validation/report scale (the reference runs SCC on one
-  * big-memory node too). The distributed scale path is forward-backward
-  * coloring, which plugs into the same output contract.
+  * `process_webgraph.sh:270-272`, consuming only the size distribution,
+  * which [[ConnectedComponents.sizeDistribution]] reports for these
+  * components too).
   */
 object Scc {
-
-  /** (id, component) with component = smallest id in the SCC. An arc with
-    * an endpoint outside `vertices` is ignored.
-    */
-  def exact(vertices: DataFrame, edges: DataFrame, maxHops: Int = 64): DataFrame = {
-    val arcs = ConnectedComponents.arcsWithin(vertices, edges).localCheckpoint(false)
-    // forward closure: (src, dst) with src ⇝ dst
-    var frontier = vertices.select(col("id").as("src"), col("id").as("dst"))
-      .localCheckpoint(false)
-    var closure = frontier
-    var n = frontier.count()
-    var hops = 0
-    while (n > 0 && hops < maxHops) {
-      hops += 1
-      val expanded = frontier.join(arcs, frontier("dst") === arcs("from_id"))
-        .select(col("src"), col("to_id").as("dst"))
-        .distinct()
-      frontier = expanded.join(closure, Seq("src", "dst"), "left_anti").localCheckpoint(false)
-      n = frontier.count()
-      if (n > 0) closure = closure.union(frontier).localCheckpoint(false)
-    }
-    // mutual: (a ⇝ b) ∧ (b ⇝ a); component = min mutual partner
-    val back = closure.select(col("dst").as("src"), col("src").as("dst"))
-    closure.join(back, Seq("src", "dst"), "left_semi")
-      .groupBy(col("src").as("id"))
-      .agg(min("dst").as("component"))
-  }
-
-  /** Size distribution report, as consumed by `process_webgraph.sh:179-189`. */
-  def sizeDistribution(components: DataFrame): DataFrame =
-    ConnectedComponents.sizeDistribution(components)
 
   /** Distributed SCC: trimming + forward-max coloring (Orzan), the scale
     * path for the reference's `StronglyConnectedComponents` capability on
     * 100M+-node graphs (`process_webgraph.sh:270-272`). State is O(V+E) —
-    * no transitive-closure pair explosion (contrast [[exact]], kept as the
-    * small-scale oracle; SccSpec pins equality on seeded random graphs).
+    * no transitive-closure pair explosion. The specs pin it against a
+    * sequential Tarjan on seeded random graphs.
     *
     * Per sweep, ALL colors advance together in one DataFrame fixpoint:
     *  1. TRIM — nodes with no in- or out-arcs inside the active set are
@@ -61,8 +25,8 @@ object Scc {
     *  3. HARVEST — backward BFS from each color root within its own color:
     *     those nodes are exactly root's SCC; emit, deactivate, repeat.
     *
-    * Output: (id, component) with component = min id in the SCC — the same
-    * contract as [[exact]], which also ignores arcs to non-vertices.
+    * Output: (id, component) with component = min id in the SCC. An arc
+    * with an endpoint outside `vertices` is ignored.
     */
   def coloring(vertices: DataFrame, edges: DataFrame,
                maxSweeps: Int = 4096, maxHops: Int = 256): DataFrame = {

@@ -42,11 +42,12 @@ object Dedup {
 
   /** (doc, tid) pairs. */
   def docTokenIds(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // two consumers (the vocab build and the join's left side) — cache the
-    // tokenize+distinct pass over the corpus so it runs once, not twice
-    // (Spark evicts under pressure; serialized to bound the footprint)
-    val toks = docTokens(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // two consumers (the vocab build and the join's left side) — checkpoint
+    // the tokenize+distinct pass over the corpus so it runs once, not twice.
+    // A lazy local checkpoint is a lineage-free leaf whose blocks the
+    // ContextCleaner frees once the result is dropped; a persist here would
+    // stay in the cache manager, since nothing can unpersist it.
+    val toks = docTokens(docs, idCol, textCol).localCheckpoint(eager = false)
     toks.join(vocab(toks), "tok").select(col("doc"), col("tid"))
   }
 
@@ -129,10 +130,9 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol))
       .select(col(idCol), col(textCol))
     // tids feeds three consumers (signatures, both jaccardVerify sides) —
-    // persist it so the tokenize+vocab pass over the corpus runs once, not
-    // three times (Spark auto-evicts under pressure; serialized to bound it)
-    val tids = docTokenIds(survivors, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // checkpoint it so the tokenize+vocab pass over the corpus runs once,
+    // not three times (lazily, released as in [[docTokenIds]])
+    val tids = docTokenIds(survivors, idCol, textCol).localCheckpoint(eager = false)
     jaccardVerify(minhashCandidates(minhashSignatures(tids, k), k, rowsPerBand),
       tids, threshold)
   }
@@ -206,8 +206,7 @@ object Dedup {
     val survivors = docs.groupBy(col(textCol))
       .agg(min(col(idCol)).as(idCol))
       .select(col(idCol), col(textCol))
-    val tids = docTokenIdsHashed(survivors, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val tids = docTokenIdsHashed(survivors, idCol, textCol).localCheckpoint(eager = false)
     jaccardVerify(minhashCandidates(minhashSignatures61(tids, k), k, rowsPerBand),
       tids, threshold)
   }
@@ -258,11 +257,12 @@ object Dedup {
                         n: Int, threshold: Double,
                         maxShingleDf: Int = Int.MaxValue): DataFrame = {
     // five consumers (df pass, both candidate sides, both verify sides) —
-    // persist so the shingle explode over the corpus runs once
+    // checkpoint so the shingle explode over the corpus runs once (lazily,
+    // released as in [[docTokenIds]])
     val sh = docs.select(col(idCol).as("doc"),
         explode(shingles(col(textCol), n)).as("tok"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .localCheckpoint(eager = false)
     val rare =
       if (maxShingleDf == Int.MaxValue) sh // exact: skip the df pass entirely
       else sh.join(

@@ -85,13 +85,13 @@ object TextQuality {
 
   /** (doc, pos, tid) with pos = 1-based token position. */
   def docPosTokenIds(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // two consumers (vocab build + join) — cache the explode pass over the
-    // corpus so it runs once (same shape as Dedup.docTokenIds)
+    // two consumers (vocab build + join) — checkpoint the explode pass over
+    // the corpus so it runs once (same shape as Dedup.docTokenIds)
     val posTok = docs.select(col(idCol).as("doc"),
         posexplode(split(lower(trim(col(textCol))), " ")).as(Seq("pos0", "tok")))
       .filter(col("tok") =!= "")
       .select(col("doc"), (col("pos0") + 1).as("pos"), col("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .localCheckpoint(eager = false)
     val v = Dedup.vocab(posTok.select("tok"))
     posTok.join(v, "tok").select(col("doc"), col("pos"), col("tid"))
   }

@@ -43,7 +43,7 @@ class BinaryVectorsSpec extends AnyFunSuite {
     val e = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L)).toDF("from_id", "to_id")
     val pref = Seq((0L, 1.0), (1L, 0.0), (2L, 0.0), (3L, 0.0)).toDF("id", "pref")
     for (run <- Seq(PageRank.run _, PageRank.runSpark _)) {
-      val pr = run(v, e, Some(pref), 0.85, 60, 1e-12)
+      val pr = run(v, e, Some(pref), 0.85, 60, 1e-12, true)
         .orderBy("id").collect().map(_.getDouble(1))
       assert(math.abs(pr.sum - 1.0) < 1e-9)
       // teleport only to node 0: rank(0) > rank(1) > rank(2); node 3 gets

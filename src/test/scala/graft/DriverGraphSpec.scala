@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
 
-/** The in-driver path of HyperBall, WCC and PageRank against their Spark
-  * loops, and the size decision between the two ([[DriverLoad.run]]).
+/** The in-driver path of HyperBall, WCC and PageRank (both dangling modes)
+  * against their Spark loops, and the size decision between the two
+  * ([[DriverLoad.run]]).
   */
 class DriverGraphSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -44,15 +45,19 @@ class DriverGraphSpec extends AnyFunSuite {
     }
   }
 
-  private def samePageRank(v: DataFrame, e: DataFrame, pref: Option[DataFrame]): Unit = {
-    val (a, b) = (pairs(PageRank.run(v, e, pref, maxIter = 40, tol = 1e-14)),
-      pairs(PageRank.runSpark(v, e, pref, maxIter = 40, tol = 1e-14)))
-    assert(a.keySet == b.keySet)
-    a.foreach { case (id, x) =>
-      val (p, q) = (x.asInstanceOf[Double], b(id).asInstanceOf[Double])
-      assert(math.abs(p - q) <= 1e-12 * math.abs(q), s"id $id: $p vs $q")
+  /** Both PageRank paths, with and without dangling redistribution. */
+  private def samePageRank(v: DataFrame, e: DataFrame, pref: Option[DataFrame]): Unit =
+    for (redistribute <- Seq(true, false)) {
+      val (a, b) = (
+        pairs(PageRank.run(v, e, pref, maxIter = 40, tol = 1e-14, redistributeDangling = redistribute)),
+        pairs(PageRank.runSpark(v, e, pref, maxIter = 40, tol = 1e-14,
+          redistributeDangling = redistribute)))
+      assert(a.keySet == b.keySet)
+      a.foreach { case (id, x) =>
+        val (p, q) = (x.asInstanceOf[Double], b(id).asInstanceOf[Double])
+        assert(math.abs(p - q) <= 1e-12 * math.abs(q), s"id $id, redistribute $redistribute: $p vs $q")
+      }
     }
-  }
 
   test("both paths agree on seeded random graphs: labels, hc_val bits, ranks within 1e-12") {
     for ((n, isolated, m, seed) <- Seq((50, 40, 60, 3L), (80, 70, 200, 5L), (30, 30, 15, 9L))) {
@@ -86,6 +91,10 @@ class DriverGraphSpec extends AnyFunSuite {
     // no mass leaks out through arcs to non-vertices
     assert(math.abs(pr.agg(sum("pr_val")).first().getDouble(0) - 1.0) < 1e-9)
     samePageRank(v, e, None)
+    // a preference row for a non-vertex holds no rank on either path
+    val pref = Seq((0L, 0.25), (3L, 0.25), (12L, 0.5)).toDF("id", "pref")
+    samePageRank(v, e, Some(pref))
+    assert(pairs(PageRank.run(v, e, Some(pref))).keySet == Set(0L, 3L))
   }
 
   test("both paths return the same schema, nullability included") {
@@ -172,7 +181,7 @@ class DriverGraphSpec extends AnyFunSuite {
     val e = spark.range(0, 10).select(boom(col("id")).as("from_id"), (col("id") + 1).as("to_id"))
     intercept[Exception](PageRank.runSpark(v, e).collect())
     assert(spark.sharedState.cacheManager.isEmpty)
-    intercept[Exception](PageRank.runFixed(v, e, 3).collect())
+    intercept[Exception](PageRank.run(v, e, redistributeDangling = false).collect())
     assert(spark.sharedState.cacheManager.isEmpty)
     // the load persists inputs estimated over the budget, then throws
     intercept[Exception](loaded(v, e, 0L, 1L))
@@ -188,5 +197,31 @@ class DriverGraphSpec extends AnyFunSuite {
     assert(pairs(out) == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 3L, 5L -> 5L))
     // the Spark loop needs several per iteration
     assert(JobRecorder.during(spark) { ConnectedComponents.weakSpark(v, e) }.size > jobs.size)
+  }
+
+  test("fixed-k PageRank on the q_pagerank graph shape starts no job beyond the load") {
+    // 25 vertices; a chain within each group of 5 and a star to each
+    // group's head, as a union+distinct plan
+    val nation = (0L until 25L).map(n => (n, n * 3 % 5)).toDF("n", "group")
+    val v = nation.select(col("n").as("id"))
+    val chain = nation.filter(col("n") % 5 =!= 0).select(col("n").as("from_id"), (col("n") - 1).as("to_id"))
+    val star = nation.select(col("n").as("from_id"), (col("group") * 5).as("to_id"))
+      .filter(col("from_id") =!= col("to_id"))
+    val e = chain.union(star).distinct()
+    val pref = v.select(col("id"), when(col("id") < 5, lit(0.2)).otherwise(lit(0.0)).as("pref"))
+    for (p <- Seq(None, Some(pref)); redistribute <- Seq(true, false)) {
+      var out: DataFrame = null
+      val jobs = JobRecorder.during(spark) {
+        out = PageRank.run(v, e, p, maxIter = 3, tol = 0.0, redistributeDangling = redistribute)
+      }
+      assert(jobs.size <= 3, jobs)
+      val want = pairs(PageRank.runSpark(v, e, p, maxIter = 3, tol = 0.0,
+        redistributeDangling = redistribute))
+      val got = pairs(out)
+      assert(got.keySet == want.keySet)
+      got.foreach { case (id, x) =>
+        assert(math.abs(x.asInstanceOf[Double] - want(id).asInstanceOf[Double]) <= 1e-15, s"id $id")
+      }
+    }
   }
 }

@@ -71,13 +71,16 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(top.toSeq == Seq(0L, 1L))
   }
 
-  test("PageRank matches sequential reference implementation") {
-    val edges = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 0L), (3L, 2L))
-    val n = 4
-    // sequential power iteration with dangling redistribution (uniform pref)
-    var r = Array.fill(n)(1.0 / n)
+  /** Sequential power iteration: `iters` steps from the preference (1/n
+    * each when None); dangling mass goes back by the preference when
+    * `redistribute`, else it is dropped.
+    */
+  private def powerIteration(n: Int, edges: Seq[(Long, Long)], pref: Option[Array[Double]],
+                             redistribute: Boolean, iters: Int): Array[Double] = {
+    val p = pref.getOrElse(Array.fill(n)(1.0 / n))
+    var r = p.clone()
     val out = edges.groupBy(_._1).map { case (k, v) => (k, v.map(_._2)) }
-    (1 to 40).foreach { _ =>
+    (1 to iters).foreach { _ =>
       val nr = Array.fill(n)(0.0)
       var dangling = 0.0
       (0 until n).foreach { u =>
@@ -86,14 +89,30 @@ class GraphOpsSpec extends AnyFunSuite {
           case None => dangling += r(u)
         }
       }
-      (0 until n).foreach(v => nr(v) += (0.15 + 0.85 * dangling) / n)
+      if (!redistribute) dangling = 0.0
+      (0 until n).foreach(v => nr(v) += (0.15 + 0.85 * dangling) * p(v))
       r = nr
     }
-    for (run <- Seq(PageRank.run _, PageRank.runSpark _)) {
-      val got = run(vertsDf(n), edgesDf(edges: _*), None, 0.85, 40, 0.0)
-        .orderBy("id").collect().map(_.getAs[Double]("pr_val"))
-      got.zip(r).foreach { case (g, e) => assert(math.abs(g - e) < 1e-9, s"$g vs $e") }
-      assert(math.abs(got.sum - 1.0) < 1e-9) // stochastic
+    r
+  }
+
+  test("PageRank matches sequential reference implementation") {
+    val edges = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 0L), (3L, 2L), (1L, 4L))
+    val n = 5
+    val prefs = Seq(None, Some(Array(0.5, 0.0, 0.25, 0.25, 0.0)))
+    for (pref <- prefs; redistribute <- Seq(true, false); iters <- Seq(3, 40)) {
+      val want = powerIteration(n, edges, pref, redistribute, iters)
+      val prefDf = pref.map(p => p.indices.map(i => (i.toLong, p(i))).toDF("id", "pref"))
+      for (run <- Seq(PageRank.run _, PageRank.runSpark _)) {
+        val got = run(vertsDf(n), edgesDf(edges: _*), prefDf, 0.85, iters, 0.0, redistribute)
+          .orderBy("id").collect().map(_.getAs[Double]("pr_val"))
+        val at = s"pref ${pref.isDefined}, redistribute $redistribute, $iters steps"
+        assert(got.length == n, at)
+        got.zip(want).foreach { case (g, e) => assert(math.abs(g - e) < 1e-9, s"$at: $g vs $e") }
+        // stochastic only when the dangling mass (vertex 4's) goes back
+        if (redistribute) assert(math.abs(got.sum - 1.0) < 1e-9, at)
+        else assert(got.sum < 1.0 - 1e-3, at)
+      }
     }
   }
 
@@ -112,6 +131,25 @@ class GraphOpsSpec extends AnyFunSuite {
     val got = HarmonicCentrality.exact(vertsDf(n), edgesDf(edges: _*))
       .orderBy("id").collect().map(_.getAs[Double]("hc_val"))
     got.zip(expected).foreach { case (g, e) => assert(math.abs(g - e) < 1e-5, s"$g vs $e") }
+  }
+
+  test("harmonic centrality: exact on a vertex subset equals exact on the arcs inside it") {
+    def hc(v: Seq[Long], e: Seq[(Long, Long)]) =
+      HarmonicCentrality.exact(v.toDF("id"), edgesDf(e: _*)).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val rnd = new scala.util.Random(11)
+    val arcs = Seq.fill(80)((rnd.nextInt(20).toLong, rnd.nextInt(20).toLong))
+    val cases = Seq(
+      // 2 is reached from 1 only through the non-vertex 5
+      (Seq(1L, 2L), Seq((1L, 5L), (5L, 2L))),
+      ((0L until 20L).filter(_ % 3 != 0), arcs))
+    for ((v, e) <- cases) {
+      val inside = e.filter { case (a, b) => v.contains(a) && v.contains(b) }
+      val got = hc(v, e)
+      assert(got.keySet == v.toSet)
+      assert(got == hc(v, inside), v)
+    }
+    assert(hc(Seq(1L, 2L), Seq((1L, 5L), (5L, 2L))) == Map(1L -> 0.0, 2L -> 0.0))
   }
 
   test("harmonic centrality: hyperball approximates exact on a small graph") {

@@ -27,12 +27,12 @@ class MergeSccExploreSpec extends AnyFunSuite {
     assert(edges == Set((0L, 1L), (1L, 2L), (0L, 3L), (4L, 1L)))
   }
 
-  test("SCC exact: cycles found, DAG parts singleton (F5)") {
+  test("SCC: cycles found, DAG parts singleton (F5)") {
     // cycle {0,1,2}; 3→4 chain; 2→3 bridge; 5 isolated
     val e = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 4L))
       .toDF("from_id", "to_id")
     val v = (0L to 5L).toDF("id")
-    val scc = Scc.exact(v, e).orderBy("id").collect()
+    val scc = Scc.coloring(v, e).orderBy("id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(scc == Seq((0L, 0L), (1L, 0L), (2L, 0L), (3L, 3L), (4L, 4L), (5L, 5L)))
   }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,14 +29,47 @@ class Round2Spec extends AnyFunSuite {
     (nodes, edges)
   }
 
-  test("SCC coloring == exact closure on seeded random graphs") {
+  /** Sequential Tarjan over the arcs between `ids`: (id → least id of its
+    * SCC), the output contract of [[Scc.coloring]].
+    */
+  private def tarjan(ids: Seq[Long], arcs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val vertex = ids.toSet
+    val adj = arcs.filter { case (a, b) => vertex(a) && vertex(b) }.groupMap(_._1)(_._2)
+    val index = mutable.Map.empty[Long, Int]
+    val low = mutable.Map.empty[Long, Int]
+    val stack = mutable.Stack.empty[Long]
+    val onStack = mutable.Set.empty[Long]
+    val comp = mutable.Map.empty[Long, Long]
+    def visit(v: Long): Unit = {
+      index(v) = index.size
+      low(v) = index(v)
+      stack.push(v); onStack += v
+      for (w <- adj.getOrElse(v, Nil)) {
+        if (!index.contains(w)) { visit(w); low(v) = math.min(low(v), low(w)) }
+        else if (onStack(w)) low(v) = math.min(low(v), index(w))
+      }
+      if (low(v) == index(v)) {
+        val members = mutable.ListBuffer.empty[Long]
+        var w = -1L
+        while (w != v) { w = stack.pop(); onStack -= w; members += w }
+        val least = members.min
+        members.foreach(comp(_) = least)
+      }
+    }
+    ids.foreach(v => if (!index.contains(v)) visit(v))
+    comp.toMap
+  }
+
+  private def pairs(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  test("SCC coloring == sequential Tarjan on seeded random graphs") {
     for ((n, d, seed) <- Seq((40, 2, 1L), (60, 1, 2L), (50, 3, 3L))) {
       val (nodes, edges) = randomGraph(n, d, seed)
-      val exact = Scc.exact(nodes, edges).collect()
+      val want = tarjan(nodes.collect().map(_.getLong(0)).toSeq, pairs(edges))
+      val got = Scc.coloring(nodes, edges).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val col = Scc.coloring(nodes, edges).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(col == exact, s"mismatch on graph(n=$n,d=$d,seed=$seed)")
+      assert(got == want, s"mismatch on graph(n=$n,d=$d,seed=$seed)")
     }
   }
 
@@ -70,13 +105,12 @@ class Round2Spec extends AnyFunSuite {
       3L -> 3L, 4L -> 3L, 5L -> 3L, 6L -> 6L, 7L -> 7L))
   }
 
-  test("SCC on a vertex-subset input equals SCC on the arcs inside it, exact and coloring") {
-    type Op = (DataFrame, DataFrame) => DataFrame
-    def scc(f: Op, v: Seq[Long], e: Seq[(Long, Long)]) =
-      f(v.toDF("id"), e.toDF("from_id", "to_id")).collect()
+  test("SCC on a vertex-subset input equals Tarjan on the arcs inside it") {
+    def scc(v: Seq[Long], e: Seq[(Long, Long)]) =
+      Scc.coloring(v.toDF("id"), e.toDF("from_id", "to_id")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val (nodes, edges) = randomGraph(40, 3, 4L)
-    val arcs = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val arcs = pairs(edges)
     val cases = Seq(
       // every vertex has arcs in and out, all through non-vertices
       (Seq(0L, 1L), Seq((0L, 5L), (5L, 0L), (1L, 6L), (6L, 1L))),
@@ -85,11 +119,10 @@ class Round2Spec extends AnyFunSuite {
       (nodes.collect().map(_.getLong(0)).filter(_ % 4 != 0).toSeq, arcs))
     for ((v, e) <- cases) {
       val inside = e.filter { case (a, b) => v.contains(a) && v.contains(b) }
-      for (f <- Seq[Op](Scc.exact(_, _), Scc.coloring(_, _))) {
-        val got = scc(f, v, e)
-        assert(got.keySet == v.toSet)
-        assert(got == scc(f, v, inside), v)
-      }
+      val got = scc(v, e)
+      assert(got.keySet == v.toSet)
+      assert(got == scc(v, inside), v)
+      assert(got == tarjan(v, inside), v)
     }
   }
 
@@ -99,8 +132,7 @@ class Round2Spec extends AnyFunSuite {
     val edges = spark.range(1, 10).select($"id".as("from_id"), ($"id" - 1).as("to_id"))
     val pref = nodes.select($"id",
       when($"id" === 7, lit(1.0)).otherwise(lit(0.0)).as("pref"))
-    val pr = PageRank.runFixed(nodes, edges, iterations = 20,
-        preference = Some(pref), redistributeDangling = true)
+    val pr = PageRank.run(nodes, edges, Some(pref), maxIter = 20, tol = 0.0)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(math.abs(pr.values.sum - 1.0) < 1e-9, s"mass=${pr.values.sum}")
     assert(pr(7L) > pr(9L)) // teleport target beats upstream node

@@ -315,4 +315,22 @@ class TextOpsSpec extends AnyFunSuite {
     assert(row.getDouble(4) == rms) // integral sums → bit-exact, no epsilon
     assert(row.getLong(5) == samples.map(math.abs).max)
   }
+
+  test("the text queries leave nothing in the cache manager") {
+    // a corpus with exact and near duplicates, and a lineitem-shaped link
+    // table, in the tables' parquet layout
+    val dir = java.nio.file.Files.createTempDirectory("graft_text_cache").toString
+    (0L until 60L).map { i =>
+      val words = (0 until 60).map(j => s"w${i % 20}x$j")
+      (i, (if (i % 7 == 0) words.init :+ "tail" else words).mkString(" "))
+    }.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    (0L until 40L).map(i => (i % 13, i % 7)).toDF("l_partkey", "l_suppkey")
+      .write.parquet(s"$dir/lineitem.parquet")
+    spark.catalog.clearCache()
+    for (q <- Seq("q_minhash", "q_minhash_hashed", "q_dup_groups", "q_clean_corpus",
+        "q_simhash", "q_ngram_jaccard", "q_fingerprint", "q_merged_ids")) {
+      assert(SparkEntry.queries(q)(spark, dir).collect().nonEmpty, q)
+      assert(spark.sharedState.cacheManager.isEmpty, q)
+    }
+  }
 }
