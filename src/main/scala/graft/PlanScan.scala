@@ -4,11 +4,11 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** One AQE-aware traversal for everything that reads file-scan SQL metrics
-  * (FetchProbe, ClusteredAdjSpec, the benchmark's trace): scans live INSIDE
+  * (ClusteredAdjSpec, the benchmark's trace): scans live INSIDE
   * materialized query stages, not as leaves of the top-level adaptive plan,
   * so a plain `plan.collect` misses them — and a future Spark version that
-  * adds another wrapper node should be fixed here once, not in three
-  * hand-rolled walkers.
+  * adds another wrapper node should be fixed here once, not in each
+  * hand-rolled walker.
   */
 object PlanScan {
 

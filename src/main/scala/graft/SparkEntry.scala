@@ -82,15 +82,15 @@ object SparkEntry {
     * targets — no engine hashes), so the ENTIRE stateful crawl is
     * replicated in DuckDB as an unrolled 3-round CTE and hash-checked.
     *
-    * @param mkFetcher  fetcher over the interleaved docs (corpus / adjacency
-    *                   layout — both must produce byte-identical logs)
+    * @param mkFetcher  fetcher over the interleaved docs (unclustered or
+    *                   clustered — both must produce byte-identical logs)
     * @param budgetsOverride politeness budgets; default = (h%3)+1 tokens
     * @param robotsOverride  robots rule table; default = host 14's
     *                        Disallow /page/1 + longer Allow /page/12 (both
     *                        RFC 9309 directives bite in the schedule)
     */
   private def frontierCrawl(s: SparkSession, dir: String,
-      mkFetcher: DataFrame => graft.frontier.Fetcher,
+      mkFetcher: DataFrame => graft.frontier.AdjacencyFetcher,
       budgetsOverride: Option[DataFrame] = None,
       robotsOverride: Option[DataFrame] = None): DataFrame = {
     import graft.frontier.{Frontier, UrlSeen}
@@ -469,7 +469,7 @@ object SparkEntry {
     // harmonic-priority wiring stays covered by FrontierSpec/ScalingBench.
     "q_frontier_log" -> ((s, dir) => {
       import graft.frontier.CorpusFetcher
-      frontierCrawl(s, dir, docs => new CorpusFetcher(docs))
+      frontierCrawl(s, dir, CorpusFetcher(_))
     }),
     // A7 adjacency layout INSIDE the hash-checked crawl (VERDICT r4 item
     // 2, upgraded r6 per VERDICT r5 item 1): the identical 3-round crawl
@@ -482,7 +482,7 @@ object SparkEntry {
     // q_frontier_log: a pruned row group that actually held a batch key, a
     // mis-ordered interval, or any row AdjacencyFetcher drops/duplicates
     // breaks this hash. FrontierSpec additionally pins byte-identical logs
-    // + seen sets across all four fetcher layouts.
+    // + seen sets across the corpus, unclustered and clustered fetchers.
     "q_frontier_adj" -> ((s, dir) => {
       import graft.frontier.{AdjacencyFetcher, CorpusFetcher}
       val path = java.nio.file.Files.createTempDirectory("graft_cadj").toString
@@ -527,7 +527,7 @@ object SparkEntry {
       val explicit = s.range(0, 30, 1, 1).filter(col("id") === 4)
         .select(concat(lit("com.site"), col("id")).as("rev_host"),
           lit(1).cast("int").as("tokens_per_round"))
-      frontierCrawl(s, dir, docs => new CorpusFetcher(docs),
+      frontierCrawl(s, dir, CorpusFetcher(_),
         budgetsOverride = Some(Frontier.budgetsWithRobots(explicit, rules)),
         robotsOverride = Some(rules))
     }),

@@ -20,28 +20,10 @@ import graft.sources.TableIO
 
 import scala.jdk.CollectionConverters._
 
-/** How fetched URLs yield outlinks. Production would be an HTTP fetch stage;
-  * the sandbox resolves against the docs corpus (doc_id IS the doc's URL).
+/** The docs corpus as the crawl's link table: the sandbox resolves a fetch
+  * against it (doc_id IS the doc's URL) where production would run an HTTP
+  * fetch stage.
   */
-trait Fetcher extends Serializable {
-  /** @param selected (key, url, …) — the fetch batch
-    * @return (key, outlink) — raw outlink URLs of each fetched page
-    */
-  def fetch(selected: DataFrame): DataFrame
-
-  /** Fetch with the batch size already known (the frontier counts the batch
-    * when it checkpoints it) — lets a pruning fetcher decide dense-vs-sparse
-    * without spending a job on it. Default ignores the hint.
-    */
-  def fetch(selected: DataFrame, nSelected: Long): DataFrame = fetch(selected)
-}
-
-/** Closed-world fetcher over the interleaved-docs table: a [[TableFetcher]]
-  * over its (key = surt(doc url), outlink) pairs, precomputed once.
-  */
-class CorpusFetcher(docs: DataFrame)
-    extends TableFetcher(CorpusFetcher.pairsOf(docs).persist())
-
 object CorpusFetcher {
   /** The (key = surt(doc url), outlink) link-pair plan over the interleaved
     * docs table — text spans yield extracted URLs, media spans their
@@ -58,21 +40,17 @@ object CorpusFetcher {
       .filter(col("key").isNotNull && col("outlink").isNotNull)
       .distinct()
   }
+
+  /** An unclustered fetcher over `docs`' adjacency table. The table is a
+    * lazy local checkpoint: extracted once per crawl and held as executor
+    * blocks, never registered in the cache manager.
+    */
+  def apply(docs: DataFrame): AdjacencyFetcher =
+    new AdjacencyFetcher(AdjacencyFetcher.groupPairs(pairsOf(docs)).localCheckpoint(eager = false))
 }
 
-/** Fetcher over a PRE-MATERIALIZED (key, outlink) pairs table (e.g. parquet
-  * on disk) — the 100 TB shape: the link table is a scanned source, never an
-  * executor-cached DataFrame, so no cluster size has to hold it on-heap.
-  */
-class TableFetcher(val pairs: DataFrame) extends Fetcher {
-  // no distinct(): a left-semi join is duplicate-insensitive on its right side
-  override def fetch(selected: DataFrame): DataFrame =
-    pairs.join(selected.select("key"), Seq("key"), "left_semi")
-}
-
-/** Fetcher over a pre-grouped ADJACENCY-layout link table
-  * `(key, outlinks array<string>)` — the 100 TB shape refined (VERDICT r3
-  * item 1a, extract-phase scan volume): the source key is stored and
+/** The crawl's fetcher: resolves a fetch batch against an ADJACENCY-layout
+  * link table `(key, outlinks array<string>)`. The source key is stored and
   * decoded once per SOURCE instead of once per link (~fan-out× fewer bytes
   * through the per-round corpus scan and fan-out× fewer semi-join probes),
   * and the explode runs only on rows matching the budget-bounded fetch
@@ -93,11 +71,16 @@ class TableFetcher(val pairs: DataFrame) extends Fetcher {
   * entirely rather than pay its per-row evaluation for nothing.
   */
 class AdjacencyFetcher(adj: DataFrame,
-                       clustering: Option[AdjacencyFetcher.Clustering] = None)
-    extends Fetcher {
-  override def fetch(selected: DataFrame): DataFrame = fetch(selected, -1L)
+                       clustering: Option[AdjacencyFetcher.Clustering] = None) {
+  import AdjacencyFetcher._
 
-  override def fetch(selected: DataFrame, nSelected: Long): DataFrame = {
+  /** @param selected  (key, url, …) — the fetch batch
+    * @param nSelected the batch's row count (the frontier counts the batch
+    *                  when it checkpoints it): a dense batch skips the key
+    *                  collect and the predicate without spending a job
+    * @return (key, outlink) — raw outlink URLs of each fetched page
+    */
+  def fetch(selected: DataFrame, nSelected: Long): DataFrame = {
     // a null key can never match the equality semi-join below — drop it up
     // front so the driver-side interval derivation (getString,
     // host split) never see one. No distinct(): the semi-join is
@@ -105,7 +88,7 @@ class AdjacencyFetcher(adj: DataFrame,
     val sel = selected.select("key").where(col("key").isNotNull)
     val pruned = clustering match {
       case None => adj
-      case Some(cl) if nSelected >= 0 && nSelected > cl.maxPruneKeys =>
+      case Some(_) if nSelected > MaxPruneKeys =>
         // batch known dense up front — no static layout can prune it, so
         // skip even the interval derivation
         adj
@@ -116,34 +99,26 @@ class AdjacencyFetcher(adj: DataFrame,
         // inside its own host's [min, max] under the SAME binary ordering
         // parquet stats use (utf8Lt, not Java String order).
         // Pruning is applied only when the batch touches FEW host clusters
-        // (≤ maxPredicateBuckets): the retained per-row re-evaluation of
+        // (≤ MaxPredicateBuckets): the retained per-row re-evaluation of
         // the pushed OR costs (terms × surviving rows), so a wide OR over a
         // batch spanning ~as many clusters as the table has row groups
         // reads everything anyway and pays the filter on every row
         // (measured 10× SLOWER than the plain scan at 200 clusters on the
         // 96M bench table) — exactly the regime the guard excludes.
-        // clamp before toInt: a caller "disabling" the cap with a huge Long
-        // (e.g. Long.MaxValue) must degrade to no-limit semantics, not
-        // overflow into limit(negative) and fail every fetch
-        val cap = math.min(cl.maxPruneKeys, (Int.MaxValue - 1).toLong).toInt
-        // the cap counts rows, not distinct keys: a duplicate can only
-        // tip the fetch into the unpruned scan, never drop a key
-        val rows = sel.limit(cap + 1).collect()
-        if (rows.isEmpty) adj.filter(lit(false))
-        else if (rows.length > cap) adj
+        val keys = sel.collect().map(_.getString(0)).distinct
+        if (keys.isEmpty) adj.filter(lit(false))
         else {
-          val keys = rows.map(_.getString(0)).distinct
           val byHost = keys.groupBy { k =>
             val i = k.indexOf(')'); if (i < 0) k else k.substring(0, i)
           }
-          if (byHost.size > cl.maxPredicateBuckets) adj
+          if (byHost.size > MaxPredicateBuckets) adj
           else {
             val intervals = byHost.valuesIterator.map { ks =>
               var lo = ks.head
               var hi = ks.head
               ks.foreach { k =>
-                if (AdjacencyFetcher.utf8Lt(k, lo)) lo = k
-                if (AdjacencyFetcher.utf8Lt(hi, k)) hi = k
+                if (utf8Lt(k, lo)) lo = k
+                if (utf8Lt(hi, k)) hi = k
               }
               (lo, hi)
             }.toSeq
@@ -154,8 +129,7 @@ class AdjacencyFetcher(adj: DataFrame,
             // span comes from the table's parquet footers (openClustered);
             // without it the count-only guard applies.
             val wide = cl.keySpan.exists(sp =>
-              AdjacencyFetcher.intervalCoverage(intervals, sp)
-                .exists(_ > cl.maxCoverage))
+              intervalCoverage(intervals, sp).exists(_ > MaxCoverage))
             if (wide) adj
             else adj.filter(intervals.map { case (lo, hi) =>
               col("key") >= lo && col("key") <= hi
@@ -170,60 +144,66 @@ class AdjacencyFetcher(adj: DataFrame,
 
 object AdjacencyFetcher {
 
-  /** Clustering contract + adaptive-pruning thresholds of a key-clustered
-    * adjacency table.
+  /** Clustering contract of a key-clustered adjacency table.
     *
     * The layout is range-partitioned (`buckets` partitions) and sorted by
     * `key` alone — globally key-sorted. SURT keys sort host-first, so a
     * host's rows are CONTIGUOUS, and a politeness-bounded fetch batch (k
     * URLs from each of H hosts) covers H narrow key intervals. `fetch`
-    * collects the batch's keys (bounded by `maxPruneKeys`), builds ONE
+    * collects the batch's keys (at most [[MaxPruneKeys]]), builds ONE
     * interval per SURT host in UTF8-binary order (the ordering Spark and
     * parquet stats use — Java String ordering differs beyond ASCII and would
     * break the superset guarantee) and pushes the OR of `key BETWEEN lo AND
     * hi` terms — row groups outside every interval are skipped. Applied
-    * only while the batch touches ≤ `maxPredicateBuckets` host clusters:
-    * beyond that the intervals rival the table's row-group count, so nothing
-    * skips and the retained per-row OR evaluation only adds cost.
+    * only while the batch touches ≤ [[MaxPredicateBuckets]] host clusters
+    * and its intervals cover ≤ [[MaxCoverage]] of `keySpan`.
     *
     * The pushed predicate references only `key`, so it is a superset filter
     * ahead of the exact semi-join on ANY physical layout: a reader whose
     * `buckets` differs from the writer's, or a table that is not key-sorted
     * at all, loses pruning, never rows.
     *
-    * The thresholds encode when pruning can possibly pay: a batch of m
-    * uniformly-spread keys over G row groups touches ~G·(1−e^(−m/G)) of
-    * them, so once m is corpus-dense the predicate reads everything anyway
-    * and only adds a per-row OR evaluation above the scan — skip it.
-    * `maxPruneKeys` bounds m (default 64k: far above any interactive batch,
-    * below the corpus-dense bench batches; also the cap on the driver-side
-    * key collect, ~3 MB); `maxPredicateBuckets` bounds the pushed OR tree —
-    * both the number of intervals that must stay well under the table's
-    * row-group count for skipping to win, and the per-surviving-row cost of
-    * the retained filter re-evaluation.
-    *
-    * `maxCoverage` guards the OTHER degenerate shape (VERDICT r6 item 6): a
-    * batch touching FEW host clusters whose intervals are individually WIDE
-    * — together covering most of the key space — prunes nothing while still
-    * paying the per-row OR evaluation on every surviving row. Interval
-    * coverage is estimated against the table's key span (`keySpan`, read
-    * from the parquet footers by [[openClustered]]) via an 8-byte UTF8
-    * prefix proxy; above the fraction the fetch takes the plain scan.
-    * Heuristic only — the pushed predicate is a superset of the batch either
-    * way, so a mis-estimate costs performance, never rows.
+    * `keySpan` is the table's [min, max] key, read from the parquet footers
+    * by [[openClustered]]; None turns the coverage guard off.
     *
     * `byRange` is kept only so existing callers that pass `byRange = true`
     * still compile; range is the only layout and `false` is rejected. The
     * parameter goes away with the next change to the benchmark sources.
     */
   final case class Clustering(buckets: Int = 64,
-                              maxPruneKeys: Long = 1L << 16,
-                              maxPredicateBuckets: Int = 64,
                               byRange: Boolean = true,
-                              maxCoverage: Double = 0.5,
                               keySpan: Option[(String, String)] = None) {
     require(byRange, "byRange = false is not supported: range is the only adjacency layout")
   }
+
+  // The pruning thresholds encode when pruning can possibly pay: a batch of
+  // m uniformly-spread keys over G row groups touches ~G·(1−e^(−m/G)) of
+  // them, so once m is corpus-dense the predicate reads everything anyway
+  // and only adds a per-row OR evaluation above the scan — skip it.
+
+  /** Bound on the batch size m that is pruned: far above any interactive
+    * batch, below the corpus-dense bench batches; also the bound on the
+    * driver-side key collect (~3 MB).
+    */
+  val MaxPruneKeys: Long = 1L << 16
+
+  /** Bound on the pushed OR tree: the number of intervals must stay well
+    * under the table's row-group count for skipping to win, and each
+    * surviving row pays the retained filter's re-evaluation per term.
+    */
+  val MaxPredicateBuckets: Int = 64
+
+  /** Guard against the OTHER degenerate shape (VERDICT r6 item 6): a batch
+    * touching FEW host clusters whose intervals are individually WIDE —
+    * together covering most of the key space — prunes nothing while still
+    * paying the per-row OR evaluation on every surviving row. Interval
+    * coverage is estimated against the table's key span via an 8-byte UTF8
+    * prefix proxy ([[intervalCoverage]]); above this fraction the fetch
+    * takes the plain scan. Heuristic only — the pushed predicate is a
+    * superset of the batch either way, so a mis-estimate costs performance,
+    * never rows.
+    */
+  val MaxCoverage: Double = 0.5
 
   /** Group a flat (key, outlink) pairs table into adjacency layout. */
   def groupPairs(pairs: DataFrame): DataFrame =
@@ -310,7 +290,7 @@ object AdjacencyFetcher {
       .parquet(path)
 
   /** Open a table written by [[writeClustered]] as a pruning fetcher, with
-    * the caller's thresholds and the table's key span taken from its
+    * the caller's clustering and the table's key span taken from its
     * parquet footers. Any other (key, outlinks) parquet table opens too: the
     * pushed intervals are a superset filter on every layout, so an unsorted
     * table fetches exactly, only without skipping.
@@ -397,7 +377,6 @@ object Frontier {
       defaultTokens: Int = 2,
       saltBuckets: Int = 16,
       seenCfg: UrlSeen.Config = UrlSeen.Config(buckets = 16, bitsPerBucket = 1 << 16),
-      useBloom: Boolean = true,
       /** Broadcast the selected fetch batch into downstream joins while it
         * has at most this many rows. The batch is bounded by the politeness
         * budget (hosts × tokens), so broadcasting makes the per-round fetch
@@ -726,7 +705,7 @@ object Frontier {
     * the next round's corpus scan (the round's one O(corpus) stage) under
     * the current round's commit phase.
     */
-  private def extractCandidates(c: Config, fetcher: Fetcher, selected: DataFrame,
+  private def extractCandidates(c: Config, fetcher: AdjacencyFetcher, selected: DataFrame,
                                 nSelected: Long, priorities: DataFrame,
                                 robots: DataFrame): (DataFrame, Long, Boolean) = {
     // budget-bounded batch → broadcast it into the fetch semi-join: the
@@ -831,7 +810,7 @@ object Frontier {
     * loop so steady-state rounds never re-read the sidecar nor pay the
     * selection job on the round's critical path.
     */
-  def run(spark: SparkSession, c: Config, fetcher: Fetcher, rounds: Int,
+  def run(spark: SparkSession, c: Config, fetcher: AdjacencyFetcher, rounds: Int,
           budgets: DataFrame, robots: DataFrame, priorities: DataFrame): State = {
     var st = lastCommitted(spark, c)
       .getOrElse(throw new IllegalStateException("frontier not initialized"))
@@ -863,7 +842,7 @@ object Frontier {
     } finally cachedInputs.foreach(_.unpersist(blocking = false))
   }
 
-  private def runRound(spark: SparkSession, c: Config, st: State, fetcher: Fetcher,
+  private def runRound(spark: SparkSession, c: Config, st: State, fetcher: AdjacencyFetcher,
                        budgets: DataFrame, robots: DataFrame,
                        priorities: DataFrame,
                        bloomCache: Option[Map[Int, Array[Byte]]] = None,
@@ -935,7 +914,7 @@ object Frontier {
     // blooms) — one fewer blocking job per round; the post-cache work the
     // commit futures race on (bloom probe + anti-join over the warm
     // candidates cache) is cheap
-    val newRows = UrlSeen.unseen(spark, seenDir(c), candidates, c.seenCfg, c.useBloom,
+    val newRows = UrlSeen.unseen(spark, seenDir(c), candidates, c.seenCfg,
         atSnapshot = Some(st.seen), blooms = blooms0)
       .select("key", "url", "rev_host", "priority")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)

@@ -263,7 +263,7 @@ object UrlSeen {
     *                   from disk when omitted (broadcast path only)
     */
   def unseen(spark: SparkSession, dir: String, candidates: DataFrame,
-             cfg: Config = Config(), useBloom: Boolean = true,
+             cfg: Config = Config(),
              atSnapshot: Option[Long] = None,
              blooms: Option[Map[Int, Array[Byte]]] = None): DataFrame = {
     // exact layer pinned to the marker's snapshot (crash-replay correctness);
@@ -278,8 +278,7 @@ object UrlSeen {
       .withColumn("__h", xxhash64(col("key")))
     val k = cfg.numHashes
     val pruned =
-      if (!useBloom) withBucket.withColumn("__maybe", lit(true))
-      else if (sidecarFitsDriver(cfg)) {
+      if (sidecarFitsDriver(cfg)) {
         val bloomMap: Map[Int, Array[Byte]] =
           blooms.getOrElse(readBloomMap(spark, dir))
         val bc = spark.sparkContext.broadcast(bloomMap)

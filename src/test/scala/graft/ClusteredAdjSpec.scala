@@ -43,10 +43,17 @@ class ClusteredAdjSpec extends AnyFunSuite {
       lit("u").as("url"))
 
   private def fetched(f: AdjacencyFetcher, batch: DataFrame,
-                      hint: Long = -1L): Set[(String, String)] = {
-    f.fetch(batch, hint).collect()
+                      hint: Option[Long] = None): Set[(String, String)] = {
+    fetch(f, batch, hint).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
   }
+
+  /** `f.fetch` with the batch's count, as the frontier passes it, unless a
+    * hint overrides it.
+    */
+  private def fetch(f: AdjacencyFetcher, batch: DataFrame,
+                    hint: Option[Long] = None): DataFrame =
+    f.fetch(batch, hint.getOrElse(batch.count()))
 
   /** Rows the file scan EMITTED (post row-group/page pruning) while
     * computing `df` — SQL accumulator metrics of the final adaptive plan,
@@ -111,7 +118,7 @@ class ClusteredAdjSpec extends AnyFunSuite {
     val batch = batchOf(5L, 77777L, 123456L)
     assert(fetched(clustered, batch) ==
       fetched(new AdjacencyFetcher(adjFlat), batch))
-    val tight = scanOutputRows(clustered.fetch(batchOf(100000L to 100004L: _*)))
+    val tight = scanOutputRows(fetch(clustered, batchOf(100000L to 100004L: _*)))
     assert(tight < n / 40, s"snappy-arm tight scan emitted $tight of $n rows")
   }
 
@@ -143,7 +150,7 @@ class ClusteredAdjSpec extends AnyFunSuite {
     // one NARROW interval (adjacent keys): predicate pushed, rows pruned
     assert(pushedIntervalFilters(keysOf(100L, 101L)),
       "narrow interval lost its pushed predicate")
-    val tight = scanOutputRows(f.fetch(keysOf(100L, 101L)))
+    val tight = scanOutputRows(fetch(f, keysOf(100L, 101L)))
     assert(tight < m / 10, s"narrow interval scan emitted $tight of $m rows")
     // one WIDE interval (the two extreme keys of the single host cluster):
     // same count cap, ~full-span coverage — the guard must take the plain
@@ -180,16 +187,8 @@ class ClusteredAdjSpec extends AnyFunSuite {
       "https://example.org/k00000005", "https://example.org/k00077777",
       "https://example.org/k00123456"))
     assert(fetched(clustered, batch) == exp)
-    // dense fallback (hint above maxPruneKeys) and forced-skip config: same rows
-    assert(fetched(clustered, batch, hint = cl.maxPruneKeys + 1) == exp)
-    val noPrune = AdjacencyFetcher.openClustered(spark, path,
-      cl.copy(maxPruneKeys = 0))
-    assert(fetched(noPrune, batch) == exp)
-    // "disable the cap" the natural way: a Long threshold past Int range
-    // must degrade to unlimited-collect semantics, not limit(negative)
-    val uncapped = AdjacencyFetcher.openClustered(spark, path,
-      cl.copy(maxPruneKeys = Long.MaxValue))
-    assert(fetched(uncapped, batch) == exp)
+    // dense fallback (count above MaxPruneKeys): same rows
+    assert(fetched(clustered, batch, hint = Some(AdjacencyFetcher.MaxPruneKeys + 1)) == exp)
     // a fetcher constructed directly over the table (no footer key span)
     val explicit = new AdjacencyFetcher(spark.read.parquet(path), Some(cl))
     assert(fetched(explicit, batch) == exp)
@@ -207,14 +206,14 @@ class ClusteredAdjSpec extends AnyFunSuite {
   test("[range] pushed predicate physically skips row groups") {
     val clustered = AdjacencyFetcher.openClustered(spark, path, cl)
     val full = scanOutputRows(
-      new AdjacencyFetcher(spark.read.parquet(path)).fetch(batchOf(1L)))
+      fetch(new AdjacencyFetcher(spark.read.parquet(path)), batchOf(1L)))
     assert(full == n) // unpruned semi-join scans every row
     // adjacent keys collapse to ONE pushed interval (~1-2 surviving row
     // groups)
-    val tight = scanOutputRows(clustered.fetch(batchOf(100000L to 100004L: _*)))
+    val tight = scanOutputRows(fetch(clustered, batchOf(100000L to 100004L: _*)))
     assert(tight < n / 40, s"tight scan emitted $tight of $n rows")
     // scattered keys across the key space: still a clear skip vs full
-    val scattered = scanOutputRows(clustered.fetch(batchOf(3L, 50000L, 199999L)))
+    val scattered = scanOutputRows(fetch(clustered, batchOf(3L, 50000L, 199999L)))
     assert(scattered < n / 2, s"scattered scan emitted $scattered of $n rows")
   }
 }

@@ -24,7 +24,7 @@ class FrontierSpec extends AnyFunSuite {
   val nDocs = 400L
   val nHosts = 30
   lazy val docs = SynthDocs.docs(spark, nDocs, nHosts, seed = 42).toDF()
-  lazy val fetcher = new CorpusFetcher(docs)
+  lazy val fetcher = CorpusFetcher(docs)
   lazy val priorities = Frontier.hostPriorities(docs).localCheckpoint()
   // extra columns (fetched_round metadata of a robots CACHE, budget notes)
   // must NOT leak into frontier state — Frontier selects what it needs
@@ -40,13 +40,12 @@ class FrontierSpec extends AnyFunSuite {
     .localCheckpoint()
   lazy val seeds = SynthDocs.seeds(spark, 8, nHosts)
 
-  def cfg(dir: String, bloom: Boolean = true) = Frontier.Config(
+  def cfg(dir: String) = Frontier.Config(
     rootDir = dir, defaultTokens = 2, saltBuckets = 4,
-    seenCfg = UrlSeen.Config(buckets = 4, bitsPerBucket = 1 << 14, numHashes = 5),
-    useBloom = bloom)
+    seenCfg = UrlSeen.Config(buckets = 4, bitsPerBucket = 1 << 14, numHashes = 5))
 
-  def runAll(dir: String, rounds: Int, bloom: Boolean = true): Frontier.State = {
-    val c = cfg(dir, bloom)
+  def runAll(dir: String, rounds: Int): Frontier.State = {
+    val c = cfg(dir)
     Frontier.init(spark, c, seeds, priorities, robots)
     Frontier.run(spark, c, fetcher, rounds, budgets, robots, priorities)
   }
@@ -62,7 +61,7 @@ class FrontierSpec extends AnyFunSuite {
   case class ORow(key: String, url: String, revHost: String, priority: Double)
 
   def oracle(rounds: Int): (Seq[(Int, Long, String)], Set[String]) = {
-    val pairs: Map[String, Seq[String]] = fetcher.pairs.collect()
+    val pairs: Map[String, Seq[String]] = CorpusFetcher.pairsOf(docs).collect()
       .map(r => (r.getString(0), r.getString(1))).groupBy(_._1)
       .map { case (k, g) => k -> g.map(_._2).toSeq }
     val prio: Map[String, Double] = priorities.collect()
@@ -136,15 +135,6 @@ class FrontierSpec extends AnyFunSuite {
     assert(keys(c.seenCfg.copy(sidecarDriverMaxBytes = 0L)) == keys(c.seenCfg))
   }
 
-  test("bloom pruning does not change results") {
-    val dirA = Files.createTempDirectory("frontierA").toString
-    val dirB = Files.createTempDirectory("frontierB").toString
-    runAll(dirA, rounds = 3, bloom = true)
-    runAll(dirB, rounds = 3, bloom = false)
-    assert(logOf(dirA) == logOf(dirB))
-    assert(seenOf(dirA) == seenOf(dirB))
-  }
-
   test("resume after kill reproduces the uninterrupted run byte-identically") {
     val full = Files.createTempDirectory("frontierFull").toString
     runAll(full, rounds = 4)
@@ -192,6 +182,16 @@ class FrontierSpec extends AnyFunSuite {
     assert(runJobs.nonEmpty &&
       runJobs.forall(d => d.startsWith("frontier:r0:") || d.startsWith("frontier:r1:")), runJobs)
     assert(runJobs.exists(_.startsWith("frontier:r1:")))
+  }
+
+  test("a crawl over a fresh corpus fetcher leaves nothing in the cache manager") {
+    // the corpus link table is extracted once per crawl; a persisted copy
+    // would stay cached after the crawl, since nothing owns its release
+    spark.catalog.clearCache()
+    val c = cfg(Files.createTempDirectory("f_leak").toString)
+    Frontier.init(spark, c, seeds, priorities, robots)
+    Frontier.run(spark, c, CorpusFetcher(docs), 2, budgets, robots, priorities)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("a mid-crawl commit failure surfaces, drains all caches, resumes byte-identically") {
@@ -327,14 +327,14 @@ class FrontierSpec extends AnyFunSuite {
     assert(tableBloom == base)
   }
 
-  test("fetcher parity: Corpus, Table and Adjacency layouts crawl byte-identically") {
+  test("fetcher parity: the corpus, plain and clustered fetchers crawl byte-identically") {
     // the adjacency layout `(key, outlinks array)` is the shape the 100 TB
     // design and ScalingBench actually scan (Graph.java:160-166 successor
     // lists) — a row-dropping or duplicating bug in groupPairs/explode must
     // break THIS pinned contract, not only cross-size agreement in the
     // bench (VERDICT r4 item 2)
-    import graft.frontier.{AdjacencyFetcher, Fetcher, TableFetcher}
-    def runWith(name: String, f: Fetcher): (Seq[(Int, Long, String)], Set[String]) = {
+    import graft.frontier.AdjacencyFetcher
+    def runWith(name: String, f: AdjacencyFetcher): (Seq[(Int, Long, String)], Set[String]) = {
       val c0 = cfg(Files.createTempDirectory(name).toString)
       Frontier.init(spark, c0, seeds, priorities, robots)
       Frontier.run(spark, c0, f, 3, budgets, robots, priorities)
@@ -342,11 +342,10 @@ class FrontierSpec extends AnyFunSuite {
          .map(r => (r.getAs[Int]("round"), r.getAs[Long]("seq"), r.getAs[String]("url"))).toSeq,
        Frontier.seenKeys(spark, c0).collect().map(_.getString(0)).toSet)
     }
+    val pairs = CorpusFetcher.pairsOf(docs)
     val corpus = runWith("f_fcorpus", fetcher)
-    val table = runWith("f_ftable", new TableFetcher(fetcher.pairs))
     val adjacency = runWith("f_fadj",
-      new AdjacencyFetcher(AdjacencyFetcher.groupPairs(fetcher.pairs)))
-    assert(table == corpus)
+      new AdjacencyFetcher(AdjacencyFetcher.groupPairs(pairs)))
     assert(adjacency == corpus)
     assert(corpus._1.nonEmpty)
     // KEY-CLUSTERED adjacency (VERDICT r5 item 1): written range-clustered,
@@ -357,7 +356,7 @@ class FrontierSpec extends AnyFunSuite {
     val cl = AdjacencyFetcher.Clustering(buckets = 8)
     val cadjPath = Files.createTempDirectory("f_fcadj_tbl").toString
     AdjacencyFetcher.writeClustered(
-      AdjacencyFetcher.groupPairs(fetcher.pairs), cadjPath, cl)
+      AdjacencyFetcher.groupPairs(pairs), cadjPath, cl)
     val clustered = runWith("f_fcadj",
       AdjacencyFetcher.openClustered(spark, cadjPath, cl))
     assert(clustered == corpus, "clustered crawl diverged")
@@ -441,7 +440,7 @@ class FrontierSpec extends AnyFunSuite {
     val c = cfg(dir)
     Frontier.init(spark, c, seeds2, prio2, rules,
       sitemaps = Some(Robots.sitemapUrls(rules)))
-    Frontier.run(spark, c, new CorpusFetcher(emptyDocs), 1,
+    Frontier.run(spark, c, CorpusFetcher(emptyDocs), 1,
       Seq(("com.sm", 10)).toDF("rev_host", "tokens_per_round"), rules, prio2)
     val urls = Frontier.fetchLog(spark, c).collect().map(_.getAs[String]("url")).toSet
     assert(urls == Set("https://sm.com/seed", "https://sm.com/from-sitemap/only"))
@@ -474,7 +473,7 @@ class FrontierSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("frontier_delay").toString
     val c = cfg(dir)
     Frontier.init(spark, c, seeds3, prio3, rules)
-    Frontier.run(spark, c, new CorpusFetcher(emptyDocs), 1, merged, rules, prio3)
+    Frontier.run(spark, c, CorpusFetcher(emptyDocs), 1, merged, rules, prio3)
     val perHost = Frontier.fetchLog(spark, c).collect()
       .map(_.getAs[String]("url"))
       .groupBy(u => "^https://([^/]+)/".r.findFirstMatchIn(u).get.group(1))

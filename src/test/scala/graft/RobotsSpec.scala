@@ -121,7 +121,7 @@ class RobotsSpec extends AnyFunSuite {
       Seq(("text", "nothing here", null: String, 0)))).toDF("doc_id", "spans")
       .select(col("doc_id"), expr(
         "transform(spans, s -> named_struct('kind', s._1, 'text', s._2, 'media_ref', s._3, 'offset', s._4))").as("spans"))
-    Frontier.run(spark, c, new CorpusFetcher(docs), 1,
+    Frontier.run(spark, c, CorpusFetcher(docs), 1,
       Seq(("com.x", 10)).toDF("rev_host", "tokens_per_round"), rules, priorities)
     val urls = Frontier.fetchLog(spark, c).collect().map(_.getAs[String]("url")).toSet
     assert(urls == Set("https://x.com/public/a", "https://x.com/public/b"))
@@ -150,7 +150,7 @@ class RobotsSpec extends AnyFunSuite {
       .toDF("doc_id", "spans")
       .select(col("doc_id"), expr(
         "transform(spans, s -> named_struct('kind', s._1, 'text', s._2, 'media_ref', s._3, 'offset', s._4))").as("spans"))
-    Frontier.run(spark, c, new CorpusFetcher(emptyDocs), 1,
+    Frontier.run(spark, c, CorpusFetcher(emptyDocs), 1,
       Seq(("com.w", 10)).toDF("rev_host", "tokens_per_round"), rules, prio)
     val urls = Frontier.fetchLog(spark, c).collect().map(_.getAs[String]("url")).toSet
     assert(urls == Set("https://w.com/doc.pdfx", "https://w.com/files/pub/x",
@@ -237,7 +237,7 @@ class RobotsSpec extends AnyFunSuite {
     val c = Frontier.Config(dir, defaultTokens = 2, saltBuckets = 4,
       seenCfg = UrlSeen.Config(buckets = 4, bitsPerBucket = 1 << 14, numHashes = 5))
     Frontier.init(spark, c, SynthDocs.seeds(spark, 8, nHosts), priorities, robots)
-    Frontier.run(spark, c, new CorpusFetcher(docs), 2, budgets, robots, priorities)
+    Frontier.run(spark, c, CorpusFetcher(docs), 2, budgets, robots, priorities)
     val urls = Frontier.fetchLog(spark, c).collect().map(_.getAs[String]("url"))
     assert(urls.nonEmpty)
     assert(!urls.exists(u => u.contains("/page/1")))
