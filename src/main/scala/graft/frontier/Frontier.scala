@@ -30,7 +30,12 @@ object CorpusFetcher {
     * media_ref (north_star "extracts ... outlinks from text spans and
     * media_refs").
     */
-  def pairsOf(docs: DataFrame): DataFrame = {
+  def pairsOf(docs: DataFrame): DataFrame = linkPairs(docs).distinct()
+
+  /** [[pairsOf]] before its `distinct()`: a pair repeats once per span
+    * that links it.
+    */
+  private def linkPairs(docs: DataFrame): DataFrame = {
     val spans = docs.select(col("doc_id"), explode(col("spans")).as("span"))
     spans.select(
         gf.surt(col("doc_id")).as("key"),
@@ -38,15 +43,16 @@ object CorpusFetcher {
           when(col("span.kind") === "text", gf.extract_urls(col("span.text")))
             .otherwise(array(col("span.media_ref")))).as("outlink"))
       .filter(col("key").isNotNull && col("outlink").isNotNull)
-      .distinct()
   }
 
-  /** An unclustered fetcher over `docs`' adjacency table. The table is a
-    * lazy local checkpoint: extracted once per crawl and held as executor
-    * blocks, never registered in the cache manager.
+  /** An unclustered fetcher over `docs`' adjacency table, built by one
+    * aggregation: a set per key both deduplicates and groups the pairs.
+    * The table is a lazy local checkpoint: extracted once per crawl and
+    * held as executor blocks, never registered in the cache manager.
     */
   def apply(docs: DataFrame): AdjacencyFetcher =
-    new AdjacencyFetcher(AdjacencyFetcher.groupPairs(pairsOf(docs)).localCheckpoint(eager = false))
+    new AdjacencyFetcher(linkPairs(docs).groupBy("key")
+      .agg(collect_set(col("outlink")).as("outlinks")).localCheckpoint(eager = false))
 }
 
 /** The crawl's fetcher: resolves a fetch batch against an ADJACENCY-layout

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -52,23 +53,26 @@ object ConnectedComponents {
     * Fixpoint: the edge set is a star forest rooted at component minima.
     */
   private[graft] def weakSpark(vertices: DataFrame, edges: DataFrame): DataFrame = {
-    def largeStar(e: DataFrame): DataFrame = {
-      val nbrs = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = nbrs.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      nbrs.join(mins, "u")
+    // Each star takes m per node as a window over its neighbors, not as an
+    // aggregate joined back: near convergence the aggregate has as many
+    // rows as the edges, and AQE then picks the join's build side from
+    // shuffle sizes that vary run to run, so a repeated run planned (and
+    // compiled) other join code.
+    val byU = Window.partitionBy("u")
+    def largeStar(e: DataFrame): DataFrame =
+      e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
+        .withColumn("m", least(min("v").over(byU), col("u")))
         .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .distinct()
-    }
     def smallStar(e: DataFrame): DataFrame = {
       // e is (u > v) canonical, so N(u) = {v : (u,v) ∈ e} are the smaller
       // neighbors and m = min(N(u)) < u
-      val mins = e.groupBy("u").agg(min("v").as("m"))
-      val rePointed = e.join(mins, "u")
+      val withMin = e.withColumn("m", min("v").over(byU))
+      val rePointed = withMin
         .filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
-      rePointed.unionByName(mins.select(col("u"), col("m").as("v"))).distinct()
+      rePointed.unionByName(withMin.select(col("u"), col("m").as("v"))).distinct()
     }
     // arcs with an endpoint outside `vertices` (or null) are dropped once,
     // here. Lazy checkpoints: the count that follows each one materializes

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{gf, PublicSuffixList}
 
@@ -53,31 +56,117 @@ object DomainGraph {
           psl = opts.psl))
     }
 
+  /** Driver bytes per packed host row `(host_id, domain_rev)` of `size`
+    * bytes: the packed row, the host's id, label and domain id, and the
+    * output rows of a new domain (its name copied as a `String`) and of
+    * the host's mapping.
+    */
+  private def hostRowBytes(size: Int): Long = 4L * size + 128
+  /** Driver bytes per packed arc: its packed row and endpoint indices, the
+    * arc packed and as two output ids.
+    */
+  private val ArcRowBytes: Long = DriverGraph.ArcBytes + 24
+
   /** Fold a host graph into a domain graph.
+    *
+    * [[DriverLoad.run]] chooses the plan from the inputs' size. When the
+    * hosts with their domains (the PSL lookup runs as a Spark expression in
+    * the load job) and the arcs fit the driver's budget, one job collects
+    * them and the driver folds them ([[Relabel]]): the domain vertices are
+    * a one-partition local relation, the edges and the mapping a few slices
+    * of primitive arrays. Larger inputs, ids of another type than long, a
+    * null or repeated host id run [[foldSpark]]. Both return the same rows,
+    * schema and nullability.
     *
     * @param vertices (id: long, rev_name: string) — ids dense in rev_name order
     * @param edges    (from_id: long, to_id: long)
     * @return domain vertices (id, rev_name[, num_hosts]) dense-sorted, domain
-    *         edges (from_id, to_id) deduplicated + self-loop-free, and the
-    *         host→domain id mapping (host_id, domain_id).
+    *         edges (from_id, to_id) deduplicated + self-loop-free and sorted
+    *         (within each partition on the Spark plan), and the host→domain
+    *         id mapping (host_id, domain_id).
     */
   def fold(vertices: DataFrame, edges: DataFrame, opts: Options = Options()): Result = {
     if (opts.validateSortedInput) validateSorted(vertices)
+    val hosts = hostDomains(vertices, opts)
+    val arcs = edges.select("from_id", "to_id")
+    if (!DriverLoad.hasTypes(hosts, LongType, StringType) ||
+        !DriverLoad.hasTypes(arcs, LongType, LongType)) return foldHosts(hosts, arcs, opts)
+    DriverLoad.run(Seq(hosts, arcs), Seq(hostRowBytes(_), _ => ArcRowBytes),
+        DriverLoad.budget(vertices.sparkSession))(
+        packed => inDriver(hosts, packed, opts))(
+        loaded => foldHosts(loaded(0), loaded(1), opts))
+  }
 
-    val hostDomain = vertices
+  /** [[fold]]'s Spark plan, for inputs over the driver's budget. */
+  private[graft] def foldSpark(vertices: DataFrame, edges: DataFrame,
+                               opts: Options = Options()): Result = {
+    if (opts.validateSortedInput) validateSorted(vertices)
+    foldHosts(hostDomains(vertices, opts), edges, opts)
+  }
+
+  /** (host_id, domain_rev) of the hosts that have a domain. */
+  private def hostDomains(vertices: DataFrame, opts: Options): DataFrame =
+    vertices
       .select(col("id").as("host_id"),
               domainOfRevHost(col("rev_name"), opts).as("domain_rev"))
       .filter(col("domain_rev").isNotNull)
 
+  /** Hosts per domain: (domain_rev, num_hosts). */
+  private def domainCounts(hosts: DataFrame): DataFrame =
     // partial aggregation (map-side combine) replaces the reference's
     // same-domain run shortcut (`HostToDomainGraph.java:379-386`)
-    val domainsAgg = hostDomain.groupBy("domain_rev")
-      .agg(count(lit(1)).as("num_hosts"))
+    hosts.groupBy("domain_rev").agg(count(lit(1)).as("num_hosts"))
 
-    val domainVerts = DenseIds.assign(domainsAgg, "domain_rev")
+  private def folded(vertices: DataFrame, edges: DataFrame, mapping: DataFrame,
+                     opts: Options): Result =
+    Result(if (opts.countHosts) vertices else vertices.drop("num_hosts"), edges, mapping)
+
+  /** [[fold]] over the packed rows of `hosts` and the arcs: hosts are
+    * indexed in id order, [[Relabel]] numbers their domains and maps the
+    * arcs, and arcs with an endpoint that is no host with a domain (or
+    * null) are dropped, as the Spark plan's inner joins drop them. None
+    * for a null or repeated host id.
+    */
+  private def inDriver(hosts: DataFrame, packed: Seq[Seq[Array[Byte]]],
+                       opts: Options): Option[Result] = {
+    val pair = new UnsafeRow(2)
+    val rows = DriverLoad.rows(packed(0), pair).map { r =>
+      if (r.isNullAt(0)) return None
+      (r.getLong(0), r.getUTF8String(1))
+    }.toArray
+    val ids = rows.map(_._1)
+    java.util.Arrays.sort(ids)
+    if ((1 until ids.length).exists(i => ids(i) == ids(i - 1))) return None
+    val index = DriverGraph.indexOf(ids)
+    val labels = new Array[UTF8String](ids.length)
+    rows.foreach { case (id, domain) => labels(index(id)) = domain }
+    val (src, dst) = (Array.newBuilder[Int], Array.newBuilder[Int])
+    for (r <- DriverLoad.rows(packed(1), pair)) {
+      src += (if (r.isNullAt(0)) -1 else index(r.getLong(0)))
+      dst += (if (r.isNullAt(1)) -1 else index(r.getLong(1)))
+    }
+    val g = Relabel(labels, src.result(), dst.result())
+
+    val spark = hosts.sparkSession
+    val numHosts = new Array[Long](g.labels.length)
+    g.idOf.foreach(d => if (d >= 0) numHosts(d) += 1)
+    val counts = domainCounts(hosts).schema
+    val vertexSchema = StructType(Seq(StructField("id", LongType, nullable = false),
+      counts("domain_rev").copy(name = "rev_name"), counts("num_hosts")))
+    val vertices = g.labels.indices.map(d => Row(d.toLong, g.labels(d).toString, numHosts(d)))
+    val mappingSchema = StructType(Seq(hosts.schema("host_id"),
+      StructField("domain_id", LongType, nullable = false)))
+    Some(folded(Relabel.vertexFrame(spark, vertexSchema, vertices),
+      DriverGraph.frame(spark, Relabel.EdgeSchema, g.from, g.to),
+      DriverGraph.frame(spark, mappingSchema, ids, g.idOf.map(_.toLong)), opts))
+  }
+
+  /** [[foldSpark]] over the hosts with their domains. */
+  private def foldHosts(hosts: DataFrame, edges: DataFrame, opts: Options): Result = {
+    val domainVerts = DenseIds.assign(domainCounts(hosts), "domain_rev")
       .select(col("id"), col("domain_rev").as("rev_name"), col("num_hosts"))
 
-    val mapping = hostDomain
+    val mapping = hosts
       .join(domainVerts.select(col("rev_name").as("domain_rev"), col("id").as("domain_id")),
             Seq("domain_rev"))
       .select(col("host_id"), col("domain_id"))
@@ -96,11 +185,7 @@ object DomainGraph {
       // within partitions makes the written bytes repeatable run to run
       .sortWithinPartitions("from_id", "to_id")
 
-    val outVerts =
-      if (opts.countHosts) domainVerts
-      else domainVerts.drop("num_hosts")
-
-    Result(outVerts, domainEdges, mapping)
+    folded(domainVerts, domainEdges, mapping, opts)
   }
 
   /** Validate the reference's input invariants A+B: reversed names strictly

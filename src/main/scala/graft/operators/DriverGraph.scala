@@ -4,7 +4,7 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 import graft.functions.Hll
 
@@ -63,9 +63,8 @@ private[graft] object DriverGraph {
     val v = vertices.select("id")
     val e = edges.select("from_id", "to_id")
     val p = preference.map(_.select("id", "pref"))
-    def typed(df: DataFrame, types: DataType*) = df.schema.fields.map(_.dataType).toSeq == types
-    if (!typed(v, LongType) || !typed(e, LongType, LongType) ||
-        !p.forall(typed(_, LongType, DoubleType))) return onSpark(v, e, p)
+    if (!DriverLoad.hasTypes(v, LongType) || !DriverLoad.hasTypes(e, LongType, LongType) ||
+        !p.forall(DriverLoad.hasTypes(_, LongType, DoubleType))) return onSpark(v, e, p)
     val rowBytes = Seq[Int => Long](_ => VertexBytes + stateBytes, _ => ArcBytes) ++
       p.map(_ => (_: Int) => PairRowBytes)
     DriverLoad.run(Seq(v, e) ++ p, rowBytes, budget)(read(_).map(kernel)) { loaded =>
@@ -109,7 +108,7 @@ private[graft] object DriverGraph {
   /** Id → index into the ascending `ids`, -1 for an id that is not there:
     * arithmetic when the ids are one contiguous range, else binary search.
     */
-  private def indexOf(ids: Array[Long]): Long => Int =
+  def indexOf(ids: Array[Long]): Long => Int =
     if (ids.isEmpty) _ => -1
     else if (ids.last - ids.head == ids.length - 1L) { id =>
       val k = id - ids.head

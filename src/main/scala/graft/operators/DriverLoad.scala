@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.Platform
 
@@ -65,6 +65,13 @@ private[graft] object DriverLoad {
     try collect(inputs, rowBytes, budget).flatMap(inDriver).getOrElse(onSpark(inputs))
     finally own.foreach(_.unpersist(blocking = false))
   }
+
+  /** Whether `df`'s columns have exactly `types`: a kernel reads its
+    * inputs' packed rows by position and type, so a caller runs its Spark
+    * plan for other types.
+    */
+  def hasTypes(df: DataFrame, types: DataType*): Boolean =
+    df.schema.fields.map(_.dataType).toSeq == types
 
   /** The load of [[run]]: one job over all inputs. */
   private def collect(inputs: Seq[DataFrame], rowBytes: Seq[Int => Long],

@@ -44,16 +44,16 @@ class CodegenReuseSpec extends AnyFunSuite {
   test("a repeated graph chain compiles no class twice") {
     val docs = SynthDocs.docs(spark, 400L, 40, seed = 5).toDF()
     // at this size the public operators run in driver memory, so the chain
-    // also runs with their Spark loops
+    // also runs with their Spark plans
     def chain(out: String, onSpark: Boolean): Unit = {
       def wr(df: DataFrame, step: String) = {
         df.write.parquet(s"$out/$step")
         spark.read.parquet(s"$out/$step")
       }
       val links = wr(HostGraph.hostLinks(docs), "links")
-      val (v0, e0) = HostGraph.build(links)
+      val (v0, e0) = if (onSpark) HostGraph.buildSpark(links) else HostGraph.build(links)
       val (v, e) = (wr(v0, "vertices"), wr(e0, "edges"))
-      val folded = DomainGraph.fold(v, e)
+      val folded = if (onSpark) DomainGraph.foldSpark(v, e) else DomainGraph.fold(v, e)
       wr(folded.vertices, "domain_vertices")
       wr(folded.edges, "domain_edges")
       val hc = wr(if (onSpark) HarmonicCentrality.hyperballSpark(v, e)

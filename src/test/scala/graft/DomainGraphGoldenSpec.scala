@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.DomainGraph
@@ -8,20 +9,28 @@ import graft.sources.TextGraphIO
 
 /** Every golden fixture from the reference's `TestHostToDomainGraph.java`
   * (file:line cited per case), asserting exact line-for-line equality of the
-  * folded domain graph: fold membership, host counts, lexicographic order of
-  * reversed names, dense id assignment.
+  * folded domain graph on both of the fold's paths: fold membership, host
+  * counts, lexicographic order of reversed names, dense id assignment.
   */
 class DomainGraphGoldenSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** The public fold (in driver memory at these sizes) and its Spark plan. */
+  private val paths: Seq[(DataFrame, DataFrame, Options) => DomainGraph.Result] =
+    Seq(DomainGraph.fold(_, _, _), DomainGraph.foldSpark(_, _, _))
+
+  /** The folded vertices as lines, equal on both paths. */
   private def fold(hostLines: Seq[String], opts: Options): Seq[String] = {
     val v = TextGraphIO.verticesFromLines(spark, hostLines)
     val e = TextGraphIO.edgesFromLines(spark, Seq.empty)
-    val r = DomainGraph.fold(v, e, opts.copy(validateSortedInput = true))
-    r.vertices.orderBy("id").collect().map { row =>
-      val base = s"${row.getLong(0)}\t${row.getString(1)}"
-      if (opts.countHosts) s"$base\t${row.getLong(2)}" else base
-    }.toSeq
+    val Seq(a, b) = paths.map { path =>
+      path(v, e, opts.copy(validateSortedInput = true)).vertices.orderBy("id").collect().map { row =>
+        val base = s"${row.getLong(0)}\t${row.getString(1)}"
+        if (opts.countHosts) s"$base\t${row.getLong(2)}" else base
+      }.toSeq
+    }
+    assert(a == b)
+    a
   }
 
   // --- fixtures ported verbatim from TestHostToDomainGraph.java ---
@@ -42,7 +51,9 @@ class DomainGraphGoldenSpec extends AnyFunSuite {
   test("unsorted input throws (TestHostToDomainGraph.java:266-274)") {
     val notSorted = Seq(
       "0\tcom.example", "1\tcom.example.xyz,", "2\tcom.example.www,", "3\torg.example")
-    intercept[Exception] { fold(notSorted, Options()) }
+    val v = TextGraphIO.verticesFromLines(spark, notSorted)
+    val e = TextGraphIO.edgesFromLines(spark, Seq.empty)
+    for (path <- paths) intercept[Exception] { path(v, e, Options(validateSortedInput = true)) }
   }
 
   val hostGraphHyphenated = Seq(
@@ -135,11 +146,12 @@ class DomainGraphGoldenSpec extends AnyFunSuite {
   test("edge remap: self-loops dropped, duplicates collapsed (HostToDomainGraph.java:471-487)") {
     val v = TextGraphIO.verticesFromLines(spark, hostGraphSimple)
     val e = TextGraphIO.edgesFromLines(spark, Seq("0\t3", "1\t3", "3\t0", "0\t1", "2\t1"))
-    val r = DomainGraph.fold(v, e, Options())
-    val edges = r.edges.orderBy("from_id", "to_id").collect()
-      .map(x => (x.getLong(0), x.getLong(1))).toSeq
-    // hosts 0,1,2 → domain 0 (com.example); host 3 → domain 1 (org.example)
-    // (0,3)+(1,3) → (0,1); (3,0) → (1,0); (0,1)+(2,1) → self-loops dropped
-    assert(edges == Seq((0L, 1L), (1L, 0L)))
+    for (path <- paths) {
+      val edges = path(v, e, Options()).edges.orderBy("from_id", "to_id").collect()
+        .map(x => (x.getLong(0), x.getLong(1))).toSeq
+      // hosts 0,1,2 → domain 0 (com.example); host 3 → domain 1 (org.example)
+      // (0,3)+(1,3) → (0,1); (3,0) → (1,0); (0,1)+(2,1) → self-loops dropped
+      assert(edges == Seq((0L, 1L), (1L, 0L)))
+    }
   }
 }
