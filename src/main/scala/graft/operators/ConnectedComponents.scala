@@ -36,7 +36,7 @@ object ConnectedComponents {
       // `component` = coalesce(component, id) is nullable where `id` is
       val id = vertices.schema("id")
       val schema = StructType(Seq(id, StructField("component", LongType, id.nullable)))
-      DriverGraph.frame(spark, schema, g.ids, DriverGraph.weak(g).map(g.ids(_)))
+      Some(DriverGraph.frame(spark, schema, g.ids, DriverGraph.weak(g).map(g.ids(_))))
     } { (v, e, _) => weakSpark(v, e) }
   }
 

@@ -55,10 +55,11 @@ private[graft] object DriverGraph {
     * the budget ([[DriverLoad.run]]). Also runs `onSpark` for ids or
     * preference columns of another type than long/double, a null vertex
     * id, a repeated vertex or preference id and a null or NaN preference:
-    * the Spark loop keeps whatever it does with those.
+    * the Spark loop keeps whatever it does with those. A kernel that
+    * declines the loaded graph (None) runs `onSpark` too.
     */
   def load[T](vertices: DataFrame, edges: DataFrame, preference: Option[DataFrame],
-              stateBytes: Long, budget: Long)(kernel: Graph => T)(
+              stateBytes: Long, budget: Long)(kernel: Graph => Option[T])(
       onSpark: (DataFrame, DataFrame, Option[DataFrame]) => T): T = {
     val v = vertices.select("id")
     val e = edges.select("from_id", "to_id")
@@ -67,7 +68,7 @@ private[graft] object DriverGraph {
         !p.forall(DriverLoad.hasTypes(_, LongType, DoubleType))) return onSpark(v, e, p)
     val rowBytes = Seq[Int => Long](_ => VertexBytes + stateBytes, _ => ArcBytes) ++
       p.map(_ => (_: Int) => PairRowBytes)
-    DriverLoad.run(Seq(v, e) ++ p, rowBytes, budget)(read(_).map(kernel)) { loaded =>
+    DriverLoad.run(Seq(v, e) ++ p, rowBytes, budget)(read(_).flatMap(kernel)) { loaded =>
       onSpark(loaded(0), loaded(1), loaded.lift(2))
     }
   }
@@ -125,36 +126,65 @@ private[graft] object DriverGraph {
     * runs them: each hop merges every in-neighbor's registers of the
     * previous hop (register max), then `hc += max(Δball, 0) / hop`; it
     * stops after `maxHops` or when no ball moved by more than 1e-9.
-    * Returns hc per vertex.
+    * Returns hc per vertex, or None when the registers would not fit two
+    * arrays.
+    *
+    * The registers of all vertices are two flat arrays of packed words
+    * ([[Hll.packedWords]] per vertex, this hop's and the next), merged a
+    * word at a time with [[Hll.maxBytes]]. After the first hop only the
+    * vertices whose registers moved in the last hop are merged from and
+    * estimated, as HyperBall's systolic rounds do: a vertex that did not
+    * move adds nothing its out-neighbors do not hold, and its ball stays,
+    * so the result is the same to the bit.
     */
-  def hyperball(g: Graph, log2m: Int, maxHops: Int): Array[Double] = {
-    val m = 1 << log2m
-    var regs = g.ids.map(Hll.singleton(_, log2m))
-    var next = Array.fill(g.n)(new Array[Byte](m))
+  def hyperball(g: Graph, log2m: Int, maxHops: Int): Option[Array[Double]] = {
+    val w = Hll.packedWords(log2m)
+    if (g.n.toLong * w > Int.MaxValue) return None
+    var regs = new Array[Long](g.n * w)
+    var next = new Array[Long](g.n * w)
+    var i = 0
+    while (i < g.n) { Hll.addPacked(regs, i * w, g.ids(i), log2m); i += 1 }
     val ball = Array.fill(g.n)(1.0)
     val hc = new Array[Double](g.n)
+    var moved = Array.fill(g.n)(true)
+    var nextMoved = new Array[Boolean](g.n)
     var hop = 0.0
     var r = 0
     var changed = 1L
     while (r < maxHops && changed > 0) {
       r += 1
       hop += 1.0
-      var i = 0
-      while (i < g.n) { System.arraycopy(regs(i), 0, next(i), 0, m); i += 1 }
+      System.arraycopy(regs, 0, next, 0, regs.length)
       var k = 0
-      while (k < g.src.length) { Hll.merge(next(g.dst(k)), regs(g.src(k))); k += 1 }
+      while (k < g.src.length) {
+        if (moved(g.src(k))) {
+          val to = g.dst(k) * w
+          val from = g.src(k) * w
+          var j = 0
+          while (j < w) { next(to + j) = Hll.maxBytes(next(to + j), regs(from + j)); j += 1 }
+        }
+        k += 1
+      }
       changed = 0L
       i = 0
       while (i < g.n) {
-        val nb = Hll.estimate(next(i))
-        hc(i) = hc(i) + math.max(nb - ball(i), 0.0) / hop
-        if (math.abs(nb - ball(i)) > 1e-9) changed += 1
-        ball(i) = nb
+        val at = i * w
+        var j = 0
+        while (j < w && next(at + j) == regs(at + j)) j += 1
+        nextMoved(i) = j < w
+        // the first hop estimates every ball: each starts at exactly 1.0
+        if (nextMoved(i) || r == 1) {
+          val nb = Hll.estimatePacked(next, at, log2m)
+          hc(i) = hc(i) + math.max(nb - ball(i), 0.0) / hop
+          if (math.abs(nb - ball(i)) > 1e-9) changed += 1
+          ball(i) = nb
+        }
         i += 1
       }
       val t = regs; regs = next; next = t
+      val u = moved; moved = nextMoved; nextMoved = u
     }
-    hc
+    Some(hc)
   }
 
   /** Kernel state bytes per vertex of [[weak]]: one int parent array. */

@@ -49,22 +49,31 @@ private[graft] object DriverLoad {
     * than `budget`; `inDriver` gets each input's packed partitions in
     * order and may decline too (None).
     *
-    * When the optimized plans' size estimate is over `budget`, each input
-    * not already cached is persisted first: without CBO a join is
-    * estimated as the product of its sides, so rows that fit are often
-    * estimated far over, and the persisted input serves the collect and,
-    * if that declines, `onSpark` without running twice. What this call
-    * persisted is released when it returns or throws; a cache the caller
-    * made stays.
+    * When the inputs' sources ([[sourceBytes]]) are estimated over
+    * `budget`, each input not already cached is persisted first: the
+    * persisted input serves the collect and, if that declines, `onSpark`
+    * without running twice. What this call persisted is released when it
+    * returns or throws; a cache the caller made stays.
     */
   def run[T](inputs: Seq[DataFrame], rowBytes: Seq[Int => Long], budget: Long)(
       inDriver: Seq[Seq[Array[Byte]]] => Option[T])(onSpark: Seq[DataFrame] => T): T = {
-    val over = inputs.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum > budget
+    val over = inputs.map(sourceBytes).sum > budget
     val own = if (over) inputs.filter(_.storageLevel == StorageLevel.NONE) else Nil
     own.foreach(_.persist(StorageLevel.MEMORY_AND_DISK_SER))
     try collect(inputs, rowBytes, budget).flatMap(inDriver).getOrElse(onSpark(inputs))
     finally own.foreach(_.unpersist(blocking = false))
   }
+
+  /** The bytes `df` reads: the size estimates of its optimized plan's
+    * leaves, not of the plan. Without CBO a join is estimated as the
+    * product of its sides, so a join of small tables whose rows fit reads
+    * far over the budget, and persisting it costs a job and a columnar
+    * cache for nothing; over sources within the budget, a load that
+    * declines reruns only a plan that reads that little. An RDD-backed
+    * frame is estimated at `spark.sql.defaultSizeInBytes`.
+    */
+  private[graft] def sourceBytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
 
   /** Whether `df`'s columns have exactly `types`: a kernel reads its
     * inputs' packed rows by position and type, so a caller runs its Spark

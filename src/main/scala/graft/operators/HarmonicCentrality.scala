@@ -83,8 +83,8 @@ object HarmonicCentrality {
         StructField("id", LongType,
           vertices.schema("id").nullable || hopped && edges.schema("to_id").nullable),
         StructField("hc_val", FloatType, hopped)))
-      DriverGraph.frame(spark, schema, g.ids,
-        DriverGraph.hyperball(g, log2m, maxHops).map(_.toFloat))
+      DriverGraph.hyperball(g, log2m, maxHops)
+        .map(hc => DriverGraph.frame(spark, schema, g.ids, hc.map(_.toFloat)))
     } { (v, e, _) => hyperballSpark(v, e, log2m, maxHops) }
   }
 

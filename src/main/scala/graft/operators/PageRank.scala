@@ -51,7 +51,7 @@ object PageRank {
     val spark = vertices.sparkSession
     DriverGraph.load(vertices, edges, preference, DriverGraph.PageRankStateBytes,
         DriverLoad.budget(spark)) { g =>
-      if (g.n == 0) vertices.select(col("id"), lit(0.0).as("pr_val"))
+      if (g.n == 0) Some(vertices.select(col("id"), lit(0.0).as("pr_val")))
       else {
         // the Spark loop's schema: `id` and `pr_val` come from the
         // preference (or the vertices with a literal 1/n)
@@ -61,7 +61,7 @@ object PageRank {
           StructField("pr_val", DoubleType, pref.schema("pref").nullable)))
         val (rank, live) = DriverGraph.pageRank(g, alpha, maxIter, tol, redistributeDangling)
         val keep = g.ids.indices.filter(live(_))
-        DriverGraph.frame(spark, schema, keep.map(g.ids(_)).toArray, keep.map(rank(_)).toArray)
+        Some(DriverGraph.frame(spark, schema, keep.map(g.ids(_)).toArray, keep.map(rank(_)).toArray))
       }
     } { (v, e, p) => runSpark(v, e, p, alpha, maxIter, tol, redistributeDangling) }
   }

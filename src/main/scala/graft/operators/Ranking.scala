@@ -1,7 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Degrees, rank assignment and the rank join — the Spark re-expression of
   * `JoinSortRanks` (`JoinSortRanks.java`) and the degree reports
@@ -50,6 +56,16 @@ object Ranking {
   /** Rank assignment + join, reproducing `JoinSortRanks`
     * (`JoinSortRanks.java:57-161`): rank = row position under
     * (value DESC, id ASC) — row_number, NOT rank(); ties broken by id.
+    * Every score row is ranked, so a score row whose id is null or not a
+    * vertex leaves a gap in both ranks; a vertex without a score row is
+    * dropped.
+    *
+    * Scores and vertices that fit the driver's budget are ranked and
+    * joined there, after one load ([[DriverLoad.run]]), as the reference
+    * ranks in one JVM; the result is a one-partition local relation in
+    * `hc_rank` order. Larger inputs, ids of another type than long, and a
+    * null or repeated vertex id run [[joinRanksSpark]]. Both give the same
+    * rows, row order and schema.
     *
     * @param vertices (id, rev_name[, extra…])
     * @param scores   (id, hc_val: float, pr_val: double)
@@ -57,15 +73,75 @@ object Ranking {
     *         by hc_rank (`process_webgraph.sh:141-143` re-sort)
     */
   def joinRanks(vertices: DataFrame, scores: DataFrame): DataFrame = {
-    val hcRanked = Ranks.rowNumber(
+    val s = scores.select(col("id"), col("hc_val"), col("pr_val"))
+    val v = vertices.select((Seq("id", "rev_name") ++ extraColumns(vertices)).map(col): _*)
+    if (s.schema("id").dataType != LongType || v.schema("id").dataType != LongType)
+      return joinRanksSpark(v, s)
+    DriverLoad.run(Seq(s, v), Seq(Ranks.rowBytes(_), Ranks.rowBytes(_)),
+        DriverLoad.budget(s.sparkSession))(
+        packed => inDriver(s, v, packed(0), packed(1)))(
+        loaded => joinRanksSpark(loaded(1), loaded(0)))
+  }
+
+  /** The vertex columns [[joinRanks]] carries after `rev_name`. */
+  private def extraColumns(vertices: DataFrame): Seq[String] =
+    vertices.columns.toSeq.filter(c => c != "id" && c != "rev_name")
+
+  /** [[joinRanks]] over the packed rows of `s` (id, hc_val, pr_val) and `v`
+    * (id, rev_name, extra…): the score rows are sorted twice with Spark's
+    * own ordering ([[Ranks.ordering]]) and numbered, then joined to the
+    * vertex rows by id in `hc_rank` order. None for a null or repeated
+    * vertex id.
+    */
+  private def inDriver(s: DataFrame, v: DataFrame, scores: Seq[Array[Byte]],
+                       vertices: Seq[Array[Byte]]): Option[DataFrame] = {
+    val byId = mutable.LongMap.empty[UnsafeRow]
+    val vs = DriverLoad.rows(vertices, new UnsafeRow(v.schema.length))
+    while (vs.hasNext) {
+      val r = vs.next()
+      if (r.isNullAt(0) || byId.put(r.getLong(0), r).isDefined) return None
+    }
+    val hcOrder = Ranks.ordering(s, Seq(col("hc_val").desc, col("id").asc)).getOrElse(return None)
+    val prOrder = Ranks.ordering(s, Seq(col("pr_val").desc, col("id").asc)).getOrElse(return None)
+    val rows = DriverLoad.rows(scores, new UnsafeRow(3)).toArray[InternalRow]
+    java.util.Arrays.sort(rows, hcOrder)
+    val byPr = Array.tabulate[Integer](rows.length)(Int.box)
+    java.util.Arrays.sort(byPr, (a: Integer, b: Integer) => prOrder.compare(rows(a), rows(b)))
+    val prRank = new Array[Long](rows.length)
+    for (j <- byPr.indices) prRank(byPr(j)) = j + 1L
+
+    // the Spark path's schema: the ranks are non-null longs, the inner
+    // join keeps every other column's type and nullability
+    val out = StructType(Seq(StructField("hc_rank", LongType, nullable = false), s.schema("hc_val"),
+      StructField("pr_rank", LongType, nullable = false), s.schema("pr_val")) ++ v.schema.tail)
+    val (score, vertex) = (CatalystTypeConverters.createToScalaConverter(s.schema),
+      CatalystTypeConverters.createToScalaConverter(v.schema))
+    val joined = for {
+      i <- rows.indices
+      if !rows(i).isNullAt(0)
+      vr <- byId.get(rows(i).getLong(0))
+    } yield {
+      val sc = score(rows(i)).asInstanceOf[Row]
+      val vx = vertex(vr).asInstanceOf[Row]
+      Row.fromSeq(Seq(i + 1L, sc.get(1), prRank(i), sc.get(2)) ++ vx.toSeq.tail)
+    }
+    // one partition, so a written result is one file, as the Spark path's
+    // AQE-coalesced sort writes for an input this small
+    Some(s.sparkSession.createDataFrame(joined.asJava, out).coalesce(1))
+  }
+
+  /** [[joinRanks]] as a Spark plan: two range-path ranks
+    * ([[Ranks.rowNumberSpark]]), an inner join by id and a sort.
+    */
+  private[graft] def joinRanksSpark(vertices: DataFrame, scores: DataFrame): DataFrame = {
+    val hcRanked = Ranks.rowNumberSpark(
       scores.select(col("id"), col("hc_val"), col("pr_val")),
       Seq(col("hc_val").desc, col("id").asc), "hc_rank")
-    val ranked = Ranks.rowNumber(
+    val ranked = Ranks.rowNumberSpark(
       hcRanked, Seq(col("pr_val").desc, col("id").asc), "pr_rank")
-    val extra = vertices.columns.filter(c => c != "id" && c != "rev_name")
-    val cols = Seq("hc_rank", "hc_val", "pr_rank", "pr_val", "rev_name") ++ extra
     ranked.join(vertices, Seq("id"))
-      .select(cols.map(col): _*)
+      .select((Seq("hc_rank", "hc_val", "pr_rank", "pr_val", "rev_name") ++
+        extraColumns(vertices)).map(col): _*)
       .orderBy("hc_rank")
   }
 }

@@ -18,7 +18,8 @@ import org.apache.spark.storage.StorageLevel
   * broadcast it. A larger input runs [[rowNumberSpark]], which avoids the
   * single-partition window that is the scalability cliff at scale
   * (SURVEY.md §4): range-partition on the sort key, rank within partitions,
-  * add broadcast per-partition offsets.
+  * add broadcast per-partition offsets. [[Ranking.joinRanks]] sorts its
+  * rows in the driver with the same [[ordering]].
   */
 object Ranks {
 
@@ -39,7 +40,7 @@ object Ranks {
 
   /** [[rowNumber]] with the driver's byte budget given: [[DriverLoad.run]]
     * chooses between [[inDriver]] and [[rowNumberSpark]], and persists an
-    * input estimated over the budget for both.
+    * input whose sources are estimated over the budget for both.
     */
   private[graft] def rowNumber(df: DataFrame, sortCols: Seq[Column], rankCol: String,
                                budget: Long): DataFrame =
@@ -48,17 +49,12 @@ object Ranks {
         loaded => rowNumberSpark(loaded.head, sortCols, rankCol))
 
   /** The in-driver path over `df`'s packed rows: the driver sorts them with
-    * Spark's own ordering of `sortCols` (NaN, -0.0, nulls and the UTF-8
-    * byte order of strings compare as in Spark's sort). None when a sort
-    * column is not a column of `df`.
+    * Spark's own [[ordering]] of `sortCols`. None when a sort column is not
+    * a column of `df`.
     */
   private def inDriver(df: DataFrame, sortCols: Seq[Column], rankCol: String,
                        packed: Seq[Array[Byte]]): Option[DataFrame] = {
-    val ordering = df.sort(sortCols: _*).queryExecution.analyzed match {
-      case Sort(order, true, child, _) if child.output == df.queryExecution.analyzed.output =>
-        new InterpretedOrdering(order, child.output)
-      case _ => return None
-    }
+    val ordering = this.ordering(df, sortCols).getOrElse(return None)
     val schema = df.schema
     val rows = DriverLoad.rows(packed, new UnsafeRow(schema.length)).toArray[InternalRow]
     java.util.Arrays.sort(rows, ordering)
@@ -74,6 +70,17 @@ object Ranks {
     // AQE-coalesced exchange writes for an input this small
     Some(df.sparkSession.createDataFrame(ranked.asJava, out).coalesce(1))
   }
+
+  /** Spark's own ordering of `sortCols` over rows of `df`, as its sort
+    * binds it: NaN, -0.0, nulls and the UTF-8 byte order of strings compare
+    * as in a Spark sort. None when a sort column is not a column of `df`.
+    */
+  private[graft] def ordering(df: DataFrame, sortCols: Seq[Column]): Option[InterpretedOrdering] =
+    df.sort(sortCols: _*).queryExecution.analyzed match {
+      case Sort(order, true, child, _) if child.output == df.queryExecution.analyzed.output =>
+        Some(new InterpretedOrdering(order, child.output))
+      case _ => None
+    }
 
   /** The range path: range-partition the input on `sortCols`, sort within
     * partitions, count the rows of each partition, and add the broadcast

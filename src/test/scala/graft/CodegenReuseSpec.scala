@@ -60,7 +60,8 @@ class CodegenReuseSpec extends AnyFunSuite {
                   else HarmonicCentrality.hyperball(v, e), "harmonic")
       val pr = wr(if (onSpark) PageRank.runSpark(v, e, maxIter = 3)
                   else PageRank.run(v, e, maxIter = 3), "pagerank")
-      wr(Ranking.joinRanks(v, hc.join(pr, "id")), "ranks")
+      wr(if (onSpark) Ranking.joinRanksSpark(v, hc.join(pr, "id"))
+         else Ranking.joinRanks(v, hc.join(pr, "id")), "ranks")
       wr(if (onSpark) ConnectedComponents.weakSpark(v, e) else ConnectedComponents.weak(v, e), "wcc")
     }
     for (onSpark <- Seq(true, false)) {

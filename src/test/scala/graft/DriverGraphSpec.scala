@@ -34,14 +34,14 @@ class DriverGraphSpec extends AnyFunSuite {
   private def pairs(df: DataFrame): Map[Long, Any] =
     df.collect().map(r => r.getLong(0) -> r.get(1)).toMap
 
-  private def sameHyperball(v: DataFrame, e: DataFrame): Unit = {
-    val (a, b) = (pairs(HarmonicCentrality.hyperball(v, e)),
-      pairs(HarmonicCentrality.hyperballSpark(v, e)))
+  private def sameHyperball(v: DataFrame, e: DataFrame, log2m: Int = 8, hops: Int = 32): Unit = {
+    val (a, b) = (pairs(HarmonicCentrality.hyperball(v, e, log2m, hops)),
+      pairs(HarmonicCentrality.hyperballSpark(v, e, log2m, hops)))
     assert(a.keySet == b.keySet)
     a.foreach { case (id, x) =>
       val y = b(id)
       assert(java.lang.Float.floatToRawIntBits(x.asInstanceOf[Float]) ==
-        java.lang.Float.floatToRawIntBits(y.asInstanceOf[Float]), s"id $id: $x vs $y")
+        java.lang.Float.floatToRawIntBits(y.asInstanceOf[Float]), s"id $id, log2m $log2m: $x vs $y")
     }
   }
 
@@ -70,6 +70,42 @@ class DriverGraphSpec extends AnyFunSuite {
       // preference on the even ids; the odd ids drop out of the ranks
       val pref = (0L until n.toLong).filter(_ % 2 == 0).map(i => (i, 2.0 / n)).toDF("id", "pref")
       samePageRank(v, e, Some(pref))
+    }
+  }
+
+  test("hyperball: hc_val bits equal the Spark loop's at every register width, and with 0 hops") {
+    val v = (0L until 60L).toDF("id")
+    val e = randomArcs(60, 50, 150, 11L).toDF("from_id", "to_id")
+    // log2m 2 packs 4 registers into a padded word
+    for (log2m <- Seq(2, 4, 6, 8, 10)) sameHyperball(v, e, log2m)
+    sameHyperball(v, e, hops = 0)
+    assert(pairs(HarmonicCentrality.hyperball(v, e, maxHops = 0)).values.forall(_ == 0.0f))
+  }
+
+  test("hyperball: within the HLL error of exact harmonic centrality on seeded random graphs") {
+    // HLL's relative standard error is 1.04/sqrt(m) for m = 2^log2m
+    // registers. hc is a weighted mean of the balls (Abel summation:
+    // hc = Σ_{r<R} |B(v,r)| (1/r - 1/(r+1)) + |B(v,R)|/R - 1, the weights
+    // summing to 1), so an error within 3 standard errors on every ball
+    // keeps |hc_est - hc| <= 3 · 1.04/sqrt(m) · |B(v,∞)|, where B(v,∞) is
+    // every vertex that reaches v
+    for ((n, isolated, m, seed) <- Seq((60, 50, 120, 13L), (120, 100, 300, 17L)); log2m <- Seq(6, 10)) {
+      val arcs = randomArcs(n, isolated, m, seed)
+      val (v, e) = ((0L until n.toLong).toDF("id"), arcs.toDF("from_id", "to_id"))
+      val est = pairs(HarmonicCentrality.hyperball(v, e, log2m))
+      val exact = pairs(HarmonicCentrality.exact(v, e))
+      val into = arcs.groupBy(_._2).map { case (to, as) => to -> as.map(_._1).distinct }
+      val tolerance = 3 * 1.04 / math.sqrt((1 << log2m).toDouble)
+      for (id <- 0L until n.toLong) {
+        // B(v,∞) by a backward BFS over the arcs
+        var (seen, frontier) = (Set(id), Set(id))
+        while (frontier.nonEmpty) {
+          frontier = frontier.flatMap(into.getOrElse(_, Nil)) -- seen
+          seen ++= frontier
+        }
+        val err = math.abs(est(id).asInstanceOf[Float] - exact(id).asInstanceOf[Double])
+        assert(err <= tolerance * seen.size, s"id $id, seed $seed, log2m $log2m: ${est(id)} vs ${exact(id)}")
+      }
     }
   }
 
@@ -118,7 +154,7 @@ class DriverGraphSpec extends AnyFunSuite {
 
   /** The graph `DriverGraph.load` gives a kernel, None when it declines. */
   private def loaded(v: DataFrame, e: DataFrame, state: Long, budget: Long) =
-    DriverGraph.load(v, e, None, state, budget)(Option(_))((_, _, _) => None)
+    DriverGraph.load(v, e, None, state, budget)(g => Some(Option(g)))((_, _, _) => None)
 
   test("decision: a budget of exactly the packed rows loads the graph, one byte less declines") {
     // 4 vertices and 3 arcs cost exactly this many bytes
@@ -163,7 +199,7 @@ class DriverGraphSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     val (v, e) = unwrittenHostGraph()
     val want = pairs(ConnectedComponents.weak(v, e))
-    val got = DriverGraph.load(v, e, None, DriverGraph.WeakStateBytes, 1000L)(_ => Map.empty[Long, Any]) {
+    val got = DriverGraph.load(v, e, None, DriverGraph.WeakStateBytes, 1000L)(_ => Some(Map.empty[Long, Any])) {
       (v1, e1, _) =>
         assert(Seq(v1, e1).forall(_.storageLevel == StorageLevel.MEMORY_AND_DISK_SER))
         val wcc = ConnectedComponents.weakSpark(v1, e1)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Ranks
+import graft.operators.{DriverLoad, Ranks}
 
 /** `Ranks.rowNumber`'s in-driver path against its range path
   * (`rowNumberSpark`) and a sequential oracle, and the size decision between
@@ -170,8 +170,22 @@ class RanksSpec extends AnyFunSuite {
     val out = Ranks.rowNumber(df, Seq(col("id").desc), "r", budget)
     assert(inDriver(out))
     assert(ranks(out) == (0L until 60L).map(i => i -> (60 - i)).toMap)
-    // the persist the decision made is released
+    // its sources (two 480 B ranges) fit, so it was not persisted
     assert(df.storageLevel == StorageLevel.NONE)
+  }
+
+  test("decision: an input is persisted for its load only when the sources it reads are over the budget") {
+    def persistedDuringLoad(df: DataFrame, budget: Long): StorageLevel =
+      DriverLoad.run(Seq(df), Seq(Ranks.rowBytes(_)), budget)(_ => Some(df.storageLevel))(_ => null)
+    // a join estimated at 480 B × 480 B over two ranges of 480 B
+    val join = spark.range(0, 60, 1, 2).join(spark.range(0, 60, 1, 2), "id")
+    // 60 rows out of a range of 24,000 B
+    val filtered = spark.range(0, 3000, 1, 2).filter(col("id") < 60).toDF()
+    val budget = 20000L
+    assert(Seq(join, filtered).forall(_.queryExecution.optimizedPlan.stats.sizeInBytes > budget))
+    assert(persistedDuringLoad(join, budget) == StorageLevel.NONE)
+    assert(persistedDuringLoad(filtered, budget) == StorageLevel.MEMORY_AND_DISK_SER)
+    assert(filtered.storageLevel == StorageLevel.NONE)
   }
 
   test("a rank over a cached input keeps the caller's cache, on both paths") {
