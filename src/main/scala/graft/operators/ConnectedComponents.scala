@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -36,7 +37,8 @@ object ConnectedComponents {
       // `component` = coalesce(component, id) is nullable where `id` is
       val id = vertices.schema("id")
       val schema = StructType(Seq(id, StructField("component", LongType, id.nullable)))
-      Some(DriverGraph.frame(spark, schema, g.ids, DriverGraph.weak(g).map(g.ids(_))))
+      Some(DriverLoad.result(spark, schema, g.ids.iterator.zip(DriverGraph.weak(g).iterator)
+        .map { case (v, c) => InternalRow(v, g.ids(c)) }))
     } { (v, e, _) => weakSpark(v, e) }
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -58,25 +59,26 @@ object DomainGraph {
 
   /** Driver bytes per packed host row `(host_id, domain_rev)` of `size`
     * bytes: the packed row, the host's id, label and domain id, and the
-    * output rows of a new domain (its name copied as a `String`) and of
-    * the host's mapping.
+    * result rows of a new domain and of the host's mapping, each packed
+    * and again in its result's broadcast (the domain's name is shorter
+    * than the row, so 2× the row covers its copies).
     */
-  private def hostRowBytes(size: Int): Long = 4L * size + 128
+  private def hostRowBytes(size: Int): Long = 3L * size + 192
   /** Driver bytes per packed arc: its packed row and endpoint indices, the
-    * arc packed and as two output ids.
+    * arc packed, and its result row packed and again in the broadcast.
     */
-  private val ArcRowBytes: Long = DriverGraph.ArcBytes + 24
+  private val ArcRowBytes: Long = DriverGraph.ArcBytes + 8 + 2 * DriverGraph.PairRowBytes
 
   /** Fold a host graph into a domain graph.
     *
     * [[DriverLoad.run]] chooses the plan from the inputs' size. When the
     * hosts with their domains (the PSL lookup runs as a Spark expression in
     * the load job) and the arcs fit the driver's budget, one job collects
-    * them and the driver folds them ([[Relabel]]): the domain vertices are
-    * a one-partition local relation, the edges and the mapping a few slices
-    * of primitive arrays. Larger inputs, ids of another type than long, a
-    * null or repeated host id run [[foldSpark]]. Both return the same rows,
-    * schema and nullability.
+    * them and the driver folds them ([[Relabel]]); the domain vertices,
+    * the edges and the mapping come back through [[DriverLoad.result]],
+    * sized at their packed bytes. Larger inputs, ids of another type than
+    * long, a null or repeated host id run [[foldSpark]]. Both return the
+    * same rows, schema and nullability.
     *
     * @param vertices (id: long, rev_name: string) — ids dense in rev_name order
     * @param edges    (from_id: long, to_id: long)
@@ -135,9 +137,7 @@ object DomainGraph {
       (r.getLong(0), r.getUTF8String(1))
     }.toArray
     val ids = rows.map(_._1)
-    java.util.Arrays.sort(ids)
-    if ((1 until ids.length).exists(i => ids(i) == ids(i - 1))) return None
-    val index = DriverGraph.indexOf(ids)
+    val index = DriverGraph.sortedIndex(ids).getOrElse(return None)
     val labels = new Array[UTF8String](ids.length)
     rows.foreach { case (id, domain) => labels(index(id)) = domain }
     val (src, dst) = (Array.newBuilder[Int], Array.newBuilder[Int])
@@ -153,12 +153,14 @@ object DomainGraph {
     val counts = domainCounts(hosts).schema
     val vertexSchema = StructType(Seq(StructField("id", LongType, nullable = false),
       counts("domain_rev").copy(name = "rev_name"), counts("num_hosts")))
-    val vertices = g.labels.indices.map(d => Row(d.toLong, g.labels(d).toString, numHosts(d)))
     val mappingSchema = StructType(Seq(hosts.schema("host_id"),
       StructField("domain_id", LongType, nullable = false)))
-    Some(folded(Relabel.vertexFrame(spark, vertexSchema, vertices),
-      DriverGraph.frame(spark, Relabel.EdgeSchema, g.from, g.to),
-      DriverGraph.frame(spark, mappingSchema, ids, g.idOf.map(_.toLong)), opts))
+    Some(folded(
+      DriverLoad.result(spark, vertexSchema,
+        g.labels.indices.iterator.map(d => InternalRow(d.toLong, g.labels(d), numHosts(d)))),
+      g.edges(spark),
+      DriverLoad.result(spark, mappingSchema,
+        ids.indices.iterator.map(i => InternalRow(ids(i), g.idOf(i).toLong))), opts))
   }
 
   /** [[foldSpark]] over the hosts with their domains. */

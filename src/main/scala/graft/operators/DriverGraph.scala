@@ -1,10 +1,8 @@
 package graft.operators
 
-import scala.reflect.ClassTag
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.functions.Hll
 
@@ -31,12 +29,11 @@ private[graft] object DriverGraph {
   val PairRowBytes = 4L + 8 + 16
   /** Driver bytes per arc: its packed row, then two int vertex indices. */
   val ArcBytes = PairRowBytes + 8
-  /** Driver bytes per vertex besides its kernel state: its packed row and
-    * its id in [[Graph.ids]].
+  /** Driver bytes per vertex besides its kernel state: its packed row, its
+    * id in [[Graph.ids]], and its (id, value) result row packed and again
+    * in the result's broadcast ([[DriverLoad.result]]).
     */
-  val VertexBytes = 4L + 8 + 8 + 8
-  /** Rows per slice of an operator's output RDD. */
-  val RowsPerSlice = 1 << 20
+  val VertexBytes = 4L + 8 + 8 + 8 + 2 * PairRowBytes
 
   /** A graph in driver memory. `ids` are the vertex ids, ascending; arc k
     * runs from `ids(src(k))` to `ids(dst(k))`. `pref(i)` is vertex i's
@@ -82,9 +79,7 @@ private[graft] object DriverGraph {
     val (vertex, pair) = (new UnsafeRow(1), new UnsafeRow(2))
     val ids = DriverLoad.rows(packed(0), vertex)
       .map(r => if (r.isNullAt(0)) return None else r.getLong(0)).toArray
-    java.util.Arrays.sort(ids)
-    if ((1 until ids.length).exists(i => ids(i) == ids(i - 1))) return None
-    val index = indexOf(ids)
+    val index = sortedIndex(ids).getOrElse(return None)
     // every packed arc has the same size, so its count needs no pass
     val nArcs = (packed(1).map(_.length.toLong).sum / PairRowBytes).toInt
     val src = new Array[Int](nArcs)
@@ -106,18 +101,22 @@ private[graft] object DriverGraph {
     Some(new Graph(ids, java.util.Arrays.copyOf(src, m), java.util.Arrays.copyOf(dst, m), pref))
   }
 
-  /** Id → index into the ascending `ids`, -1 for an id that is not there:
-    * arithmetic when the ids are one contiguous range, else binary search.
+  /** Sorts `ids` in place and returns id → index into them, -1 for an id
+    * that is not there: arithmetic when the ids are one contiguous range,
+    * else binary search. None when an id repeats.
     */
-  def indexOf(ids: Array[Long]): Long => Int =
-    if (ids.isEmpty) _ => -1
-    else if (ids.last - ids.head == ids.length - 1L) { id =>
+  def sortedIndex(ids: Array[Long]): Option[Long => Int] = {
+    java.util.Arrays.sort(ids)
+    if ((1 until ids.length).exists(i => ids(i) == ids(i - 1))) None
+    else if (ids.isEmpty) Some(_ => -1)
+    else if (ids.last - ids.head == ids.length - 1L) Some { id =>
       val k = id - ids.head
       if (k >= 0 && k < ids.length) k.toInt else -1
-    } else { id =>
+    } else Some { id =>
       val k = java.util.Arrays.binarySearch(ids, id)
       if (k >= 0) k else -1
     }
+  }
 
   /** Kernel state bytes per vertex of [[hyperball]]: two register arrays. */
   def hyperballStateBytes(log2m: Int): Long = 2L * ((1L << log2m) + 16) + 16
@@ -266,22 +265,5 @@ private[graft] object DriverGraph {
       iter += 1
     }
     (rank, live)
-  }
-
-  /** An operator's result as (id, value) rows in `schema`, ids ascending.
-    * It is an RDD of a few slices of primitive arrays, so the plan does not
-    * embed the rows as a `LocalRelation` would.
-    */
-  def frame[V: ClassTag](spark: SparkSession, schema: StructType, ids: Array[Long],
-                         values: Array[V]): DataFrame = {
-    val slices = math.max(1, (ids.length + RowsPerSlice - 1) / RowsPerSlice)
-    val chunks = (0 until slices).map { s =>
-      val (a, b) = (s * RowsPerSlice, math.min(ids.length, (s + 1) * RowsPerSlice))
-      (ids.slice(a, b), values.slice(a, b))
-    }
-    val rows = spark.sparkContext.parallelize(chunks, slices).flatMap { case (is, vs) =>
-      is.indices.iterator.map(j => Row(is(j), vs(j)))
-    }
-    spark.createDataFrame(rows, schema)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -12,7 +12,8 @@ import org.apache.spark.unsafe.Platform
   * that collects the operator's inputs when their rows fit it. Whether an
   * input fits is decided from its size alone, as "To Partition, or Not to
   * Partition" (SIGMOD 2021) chooses a join strategy. [[run]] is the entry;
-  * the caller keeps only its kernel and its Spark plan.
+  * the caller keeps only its kernel and its Spark plan; [[result]] is the
+  * kernel's way out.
   */
 private[graft] object DriverLoad {
 
@@ -28,6 +29,10 @@ private[graft] object DriverLoad {
     * results of one load stay within this many budgets.
     */
   val PartitionSkew = 4L
+  /** Rows per slice of a [[result]]: up to this many are one partition, so
+    * a written result is one file.
+    */
+  val RowsPerSlice = 1 << 20
 
   /** Bytes a load may take, from the driver's max heap and
     * `spark.driver.maxResultSize`.
@@ -69,8 +74,9 @@ private[graft] object DriverLoad {
     * product of its sides, so a join of small tables whose rows fit reads
     * far over the budget, and persisting it costs a job and a columnar
     * cache for nothing; over sources within the budget, a load that
-    * declines reruns only a plan that reads that little. An RDD-backed
-    * frame is estimated at `spark.sql.defaultSizeInBytes`.
+    * declines reruns only a plan that reads that little. A [[result]] is
+    * sized at its packed bytes; any other RDD-backed frame is estimated at
+    * `spark.sql.defaultSizeInBytes`.
     */
   private[graft] def sourceBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
@@ -94,7 +100,7 @@ private[graft] object DriverLoad {
     val cap = math.min(budget, budget * PartitionSkew / math.max(1, parts.sum))
     val packed = rdds.indices.map { i =>
       val (schema, cost) = (inputs(i).schema, rowBytes(i))
-      rdds(i).mapPartitions(it => Iterator.single(pack(it, schema, cost, cap)))
+      rdds(i).mapPartitions(it => Iterator.single(pack(it, schema, cost, cap, Int.MaxValue)))
     }
     val got = rdds.head.sparkContext.union(packed).collect()
     if (got.contains(null) || got.map(_._2).sum > budget) return None
@@ -102,16 +108,34 @@ private[graft] object DriverLoad {
     Some(parts.map { p => val (a, b) = rest.splitAt(p); rest = b; a })
   }
 
-  /** Packs a partition's rows, each after its length, with the driver bytes
-    * they cost; null when that is more than `cap`.
+  /** An in-driver result: `rows` in `schema`, in order, packed as a load
+    * packs its inputs, [[RowsPerSlice]] to a slice. The slices ship in one
+    * broadcast, not inside tasks, and partition i reads slice i. The plan's
+    * leaf is sized at the packed bytes ([[sourceBytes]]).
+    */
+  def result(spark: SparkSession, schema: StructType, rows: Iterator[InternalRow]): DataFrame = {
+    val slices = Array.newBuilder[Array[Byte]]
+    do slices += pack(rows, schema, _ => 0L, 0L, RowsPerSlice)._1 while (rows.hasNext)
+    val packed = slices.result()
+    val shipped = spark.sparkContext.broadcast(packed)
+    val rdd = spark.sparkContext.parallelize(packed.indices, packed.length).mapPartitions { it =>
+      val row = new UnsafeRow(schema.length)
+      it.flatMap[InternalRow](i => DriverLoad.rows(Seq(shipped.value(i)), row))
+    }
+    GraftBridge.sizedFrame(spark, schema, rdd, packed.map(_.length.toLong).sum)
+  }
+
+  /** Packs up to `maxRows` of `it`'s rows, each after its length, with the
+    * driver bytes they cost; null when that is more than `cap`.
     */
   private def pack(it: Iterator[InternalRow], schema: StructType, rowBytes: Int => Long,
-                   cap: Long): (Array[Byte], Long) = {
+                   cap: Long, maxRows: Int): (Array[Byte], Long) = {
     lazy val toUnsafe = UnsafeProjection.create(schema)
     var buf = new Array[Byte](1 << 16)
     var at = 0
     var bytes = 0L
-    while (bytes <= cap && it.hasNext) {
+    var n = 0
+    while (bytes <= cap && n < maxRows && it.hasNext) {
       val r = it.next() match {
         case u: UnsafeRow => u
         case other => toUnsafe(other)
@@ -123,6 +147,7 @@ private[graft] object DriverLoad {
       r.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + at + 4)
       at += 4 + size
       bytes += rowBytes(size)
+      n += 1
     }
     if (bytes <= cap) (java.util.Arrays.copyOf(buf, at), bytes) else null
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{FloatType, LongType, StructField, StructType}
 
@@ -84,7 +85,8 @@ object HarmonicCentrality {
           vertices.schema("id").nullable || hopped && edges.schema("to_id").nullable),
         StructField("hc_val", FloatType, hopped)))
       DriverGraph.hyperball(g, log2m, maxHops)
-        .map(hc => DriverGraph.frame(spark, schema, g.ids, hc.map(_.toFloat)))
+        .map(hc => DriverLoad.result(spark, schema,
+          g.ids.indices.iterator.map(i => InternalRow(g.ids(i), hc(i).toFloat))))
     } { (v, e, _) => hyperballSpark(v, e, log2m, maxHops) }
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -85,21 +86,21 @@ object HostGraph {
     edges.select(col("to_id").as("from_id"), col("from_id").as("to_id"))
 
   /** Driver bytes per packed link row of `size` bytes: the packed row, its
-    * endpoints' indices, its arc packed and as two output ids (32 bytes),
-    * and at most two new names, each kept as a view of the packed row, in
-    * the name index and as an output row with a `String` copy (a name's
-    * bytes are fewer than the row's, so 3× the row covers the copies).
+    * endpoints' indices, its arc, its result row packed and in the result's
+    * broadcast, and at most two new names, each a view of the packed row in
+    * the name index and in a result row packed and in the broadcast (the
+    * names' bytes are fewer than the row's, so 2× the row covers them).
     */
-  private def linkRowBytes(size: Int): Long = 4L * size + 256
+  private def linkRowBytes(size: Int): Long = 3L * size + 384
 
   /** Build the numeric host graph from link tuples `(from_host, to_host)`.
     *
     * [[DriverLoad.run]] chooses the plan from the links' size. Links that
     * fit the driver's budget are collected by one job and numbered in the
-    * driver ([[Relabel]]): the vertices are a one-partition local relation,
-    * the edges a few slices of primitive arrays. Larger links, string
-    * columns of another type and a null name run [[buildSpark]]. Both
-    * return the same rows, schema and nullability, and edges in
+    * driver ([[Relabel]]); the vertices and edges come back through
+    * [[DriverLoad.result]], sized at their packed bytes. Larger links,
+    * string columns of another type and a null name run [[buildSpark]].
+    * Both return the same rows, schema and nullability, and edges in
     * (from_id, to_id) order.
     */
   def build(links: DataFrame): (DataFrame, DataFrame) = {
@@ -138,9 +139,9 @@ object HostGraph {
     val spark = links.sparkSession
     val vertexSchema = StructType(Seq(StructField("id", LongType, nullable = false),
       names(links).schema("rev_name")))
-    val vertices = g.labels.indices.map(i => Row(i.toLong, g.labels(i).toString))
-    Some((Relabel.vertexFrame(spark, vertexSchema, vertices),
-      DriverGraph.frame(spark, Relabel.EdgeSchema, g.from, g.to)))
+    Some((DriverLoad.result(spark, vertexSchema,
+        g.labels.indices.iterator.map(i => InternalRow(i.toLong, g.labels(i)))),
+      g.edges(spark)))
   }
 
   /** [[build]]'s Spark plan, for links over the driver's budget. The two

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -37,12 +38,13 @@ object PageRank {
     * @param redistributeDangling give the mass of vertices without out-arcs
     *                 back by the preference (LAW's strongly-preferential
     *                 PageRank); false drops it
-    * @return (id, pr_val: double), one row per vertex of the preference. A
-    *         graph that fits the driver's budget is iterated in driver
-    *         memory ([[DriverGraph]]) and the result is a small RDD of its
-    *         rows; a larger one runs [[runSpark]]'s loop, whose result is
-    *         backed by checkpoint blocks. The two agree to within summation
-    *         order.
+    * @return (id, pr_val: double), one row per vertex of the preference,
+    *         none for an empty graph; `id` and `pr_val` are nullable where
+    *         the preference's `id` and `pref` are. A graph that fits the
+    *         driver's budget is iterated in driver memory ([[DriverGraph]])
+    *         and its rows come back through [[DriverLoad.result]]; a larger
+    *         one runs [[runSpark]]'s loop, whose result is backed by
+    *         checkpoint blocks. The two agree to within summation order.
     */
   def run(vertices: DataFrame, edges: DataFrame,
           preference: Option[DataFrame] = None,
@@ -51,18 +53,15 @@ object PageRank {
     val spark = vertices.sparkSession
     DriverGraph.load(vertices, edges, preference, DriverGraph.PageRankStateBytes,
         DriverLoad.budget(spark)) { g =>
-      if (g.n == 0) Some(vertices.select(col("id"), lit(0.0).as("pr_val")))
-      else {
-        // the Spark loop's schema: `id` and `pr_val` come from the
-        // preference (or the vertices with a literal 1/n)
-        val pref = preference.getOrElse(vertices.select(col("id"), lit(1.0).as("pref")))
-        val schema = StructType(Seq(
-          StructField("id", LongType, pref.schema("id").nullable),
-          StructField("pr_val", DoubleType, pref.schema("pref").nullable)))
-        val (rank, live) = DriverGraph.pageRank(g, alpha, maxIter, tol, redistributeDangling)
-        val keep = g.ids.indices.filter(live(_))
-        Some(DriverGraph.frame(spark, schema, keep.map(g.ids(_)).toArray, keep.map(rank(_)).toArray))
-      }
+      // the Spark loop's schema: `id` and `pr_val` come from the
+      // preference (or the vertices with a literal 1/n)
+      val pref = preference.getOrElse(vertices.select(col("id"), lit(1.0).as("pref")))
+      val schema = StructType(Seq(
+        StructField("id", LongType, pref.schema("id").nullable),
+        StructField("pr_val", DoubleType, pref.schema("pref").nullable)))
+      val (rank, live) = DriverGraph.pageRank(g, alpha, maxIter, tol, redistributeDangling)
+      Some(DriverLoad.result(spark, schema,
+        g.ids.indices.iterator.filter(live(_)).map(i => InternalRow(g.ids(i), rank(i)))))
     } { (v, e, p) => runSpark(v, e, p, alpha, maxIter, tol, redistributeDangling) }
   }
 
@@ -78,32 +77,28 @@ object PageRank {
                               redistributeDangling: Boolean = true): DataFrame = {
     val spark = vertices.sparkSession
     val n = vertices.count()
-    if (n == 0) return vertices.select(col("id"), lit(0.0).as("pr_val"))
-
-    // degree-annotated edges, reused every iteration: cache once. The
-    // semi-joins drop arcs and preference rows with an id outside
+    // the semi-joins drop arcs and preference rows with an id outside
     // `vertices` once, here: counted in `outdeg`, such an arc would send
-    // mass nowhere, and such a rank row would hold mass no arc reaches.
+    // mass nowhere, and such a rank row would hold mass no arc reaches
+    val pref = preference
+      .map(_.select(col("id"), col("pref")).join(vertices.select("id"), Seq("id"), "left_semi"))
+      .getOrElse(vertices.select(col("id"), lit(1.0 / n).as("pref")))
+    if (n == 0) return pref.select(col("id"), col("pref").as("pr_val"))
+
+    // degree-annotated edges, reused every iteration: cache once
     val arcs = ConnectedComponents.arcsWithin(vertices, edges)
     val outDeg = arcs.groupBy("from_id").agg(count(lit(1)).as("outdeg"))
     val edgesDeg = arcs.join(outDeg, "from_id")
       .select(col("from_id"), col("to_id"), col("outdeg"))
-
-    val pref = preference
-      .map(_.select(col("id"), col("pref")).join(vertices.select("id"), Seq("id"), "left_semi"))
-      .getOrElse(vertices.select(col("id"), lit(1.0 / n).as("pref")))
     val cached = Seq(edgesDeg, pref)
     cached.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
     try {
       cached.foreach(_.count())
 
-      // localCheckpoint truncates lineage each iteration — without it the
-      // logical plan grows linearly and explain/AQE replanning OOMs. The
-      // initial ranks use the same RDD-level checkpoint as the loop so their
-      // blocks are TRACKED and released after the first iteration
-      // materializes (ADVICE r5: the old Dataset-level checkpoint here was
-      // never unpersisted, accumulating orphaned storage across repeated
-      // runs in one session).
+      // localCheckpoint truncates lineage each iteration: without it the
+      // plan grows linearly and AQE replanning runs out of memory. The
+      // initial ranks take the loop's RDD-level checkpoint, so their blocks
+      // are tracked and released once the first iteration is materialized.
       val init0 = pref.select(col("id"), col("pref").as("pr_val"))
       val initRdd = init0.rdd
       initRdd.localCheckpoint()
@@ -113,25 +108,16 @@ object PageRank {
       var delta = Double.MaxValue
       var prevRdd: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = Some(initRdd)
       while (iter < maxIter && delta > tol) {
-        // convergence fused into the iteration (VERDICT r4 item 7): the OLD
-        // rank is joined into the step plan itself, so ONE action per
-        // iteration — the L1-delta aggregate — materializes new and old rank
-        // side by side (persisted for the next iteration's scan), instead of
-        // the old separate eager checkpoint + newRanks ⋈ ranks delta job.
-        // The iteration boundary is an RDD-level localCheckpoint, NOT the
-        // Dataset-level one: checkpointing a plan that references the
-        // previous checkpoint twice (step + the __old branch) makes Spark's
-        // Dataset-checkpoint stats/constraints rewrite grow superlinearly
-        // across iterations (measured: flat 0.3 s/iter through iteration
-        // ~18, then 2.4 s at 21 and 110 s at 25 on a 4-node graph);
-        // rdd.localCheckpoint() still truncates lineage at materialization
-        // (a plain persist stack-overflows task serialization by iteration
-        // ~60), and createDataFrame(rdd, schema) rebuilds a leaf with no
-        // inherited stats, keeping every iteration O(step). pr_val
-        // arithmetic is untouched, so results are unchanged. Durability
-        // trade: losing an executor holding checkpoint blocks fails the job
-        // instead of recomputing (truncated lineage) — acceptable for a
-        // stateless batch algorithm the caller simply reruns.
+        // the old rank is joined into the step, so one action per iteration,
+        // the L1-delta aggregate, materializes the new and the old rank. The
+        // boundary is an RDD-level localCheckpoint: the Dataset-level one
+        // rewrites the stats and constraints of a plan that reads the last
+        // checkpoint twice, which grew superlinearly (0.3 s per iteration up
+        // to ~18, 110 s at 25 on a 4-node graph); a plain persist overflows
+        // task serialization by ~60 iterations; and createDataFrame(rdd,
+        // schema) makes a leaf with no inherited stats, so an iteration costs
+        // one step. Losing an executor that holds checkpoint blocks fails the
+        // job rather than recomputing it; the caller reruns.
         val joined = step(ranks, edgesDeg, pref, alpha, redistributeDangling)
           .join(ranks.select(col("id"), col("pr_val").as("__old")), Seq("id"))
         val rdd = joined.rdd
@@ -148,8 +134,8 @@ object PageRank {
   }
 
   /** One fused power-iteration step: arc contributions AND dangling mass in
-    * a single aggregation pass (VERDICT r3 item 6 — no per-iteration
-    * driver-side `.first()` action). A rank row with no out-arcs routes its
+    * a single aggregation pass (no per-iteration driver-side `.first()`
+    * action). A rank row with no out-arcs routes its
     * whole mass to a `cid = -1` sentinel group (vertex ids are dense ≥ 0,
     * so the sentinel can't collide); the sentinel row is broadcast back as
     * the scalar dangling mass, or dropped for a literal 0.0 when

@@ -1,11 +1,10 @@
 package graft.operators
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -62,10 +61,10 @@ object Ranking {
     *
     * Scores and vertices that fit the driver's budget are ranked and
     * joined there, after one load ([[DriverLoad.run]]), as the reference
-    * ranks in one JVM; the result is a one-partition local relation in
-    * `hc_rank` order. Larger inputs, ids of another type than long, and a
-    * null or repeated vertex id run [[joinRanksSpark]]. Both give the same
-    * rows, row order and schema.
+    * ranks in one JVM; the result ([[DriverLoad.result]]) is in `hc_rank`
+    * order. Larger inputs, ids of another type than long, and a null or
+    * repeated vertex id run [[joinRanksSpark]]. Both give the same rows,
+    * row order and schema.
     *
     * @param vertices (id, rev_name[, extra…])
     * @param scores   (id, hc_val: float, pr_val: double)
@@ -114,20 +113,13 @@ object Ranking {
     // join keeps every other column's type and nullability
     val out = StructType(Seq(StructField("hc_rank", LongType, nullable = false), s.schema("hc_val"),
       StructField("pr_rank", LongType, nullable = false), s.schema("pr_val")) ++ v.schema.tail)
-    val (score, vertex) = (CatalystTypeConverters.createToScalaConverter(s.schema),
-      CatalystTypeConverters.createToScalaConverter(v.schema))
     val joined = for {
-      i <- rows.indices
+      i <- rows.indices.iterator
       if !rows(i).isNullAt(0)
       vr <- byId.get(rows(i).getLong(0))
-    } yield {
-      val sc = score(rows(i)).asInstanceOf[Row]
-      val vx = vertex(vr).asInstanceOf[Row]
-      Row.fromSeq(Seq(i + 1L, sc.get(1), prRank(i), sc.get(2)) ++ vx.toSeq.tail)
-    }
-    // one partition, so a written result is one file, as the Spark path's
-    // AQE-coalesced sort writes for an input this small
-    Some(s.sparkSession.createDataFrame(joined.asJava, out).coalesce(1))
+      Seq(_, hc, pr) = rows(i).toSeq(s.schema)
+    } yield new GenericInternalRow((Seq(i + 1L, hc, prRank(i), pr) ++ vr.toSeq(v.schema).tail).toArray)
+    Some(DriverLoad.result(s.sparkSession, out, joined))
   }
 
   /** [[joinRanks]] as a Spark plan: two range-path ranks

@@ -1,10 +1,8 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, UnsafeRow}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, InterpretedOrdering, JoinedRow, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,10 +11,10 @@ import org.apache.spark.storage.StorageLevel
 /** Global ranking: `row_number()` in a total order, with two plans chosen
   * from the input's size. An input that fits the driver's budget
   * ([[DriverLoad]]) is collected by one job and sorted in the driver, as the
-  * reference sorts in one JVM (`JoinSortRanks.java:57-161`); the result is a
-  * one-partition local relation, whose exact size lets its consumers
-  * broadcast it. A larger input runs [[rowNumberSpark]], which avoids the
-  * single-partition window that is the scalability cliff at scale
+  * reference sorts in one JVM (`JoinSortRanks.java:57-161`); the result
+  * ([[DriverLoad.result]]) is sized at its packed bytes, so its consumers
+  * can broadcast it. A larger input runs [[rowNumberSpark]], which avoids
+  * the single-partition window that is the scalability cliff at scale
   * (SURVEY.md §4): range-partition on the sort key, rank within partitions,
   * add broadcast per-partition offsets. [[Ranking.joinRanks]] sorts its
   * rows in the driver with the same [[ordering]].
@@ -24,10 +22,11 @@ import org.apache.spark.storage.StorageLevel
 object Ranks {
 
   /** Driver bytes per collected row of `size` bytes in Spark's binary row
-    * format: its packed copy, the external row it is converted to and the
-    * local relation's row, each about the size again plus object headers.
+    * format: its packed copy and the `UnsafeRow` that points at it, and the
+    * result row it becomes (the row and a rank, or in [[Ranking]] a share
+    * of a joined row), packed and again in the result's broadcast.
     */
-  private[graft] def rowBytes(size: Int): Long = 4L * size + 64
+  private[graft] def rowBytes(size: Int): Long = 3L * size + 128
 
   /** Add `rankCol` = 1..n following the total order given by `sortCols`
     * (which must be a total order — include a unique tie-break column, as the
@@ -61,14 +60,13 @@ object Ranks {
 
     val out = df.withColumn(rankCol, lit(0L)).schema
     val k = out.fieldIndex(rankCol)
-    val toScala = CatalystTypeConverters.createToScalaConverter(schema)
-    val ranked = rows.indices.map { i =>
-      val values = toScala(rows(i)).asInstanceOf[Row].toSeq
-      Row.fromSeq(if (out.length > values.length) values :+ (i + 1L) else values.updated(k, i + 1L))
+    // the rank follows the row, or replaces its column of that name
+    val (rank, joined) = (new GenericInternalRow(1), new JoinedRow)
+    val ranked = rows.indices.iterator.map { i =>
+      if (k == schema.length) { rank.setLong(0, i + 1L); joined(rows(i), rank) }
+      else new GenericInternalRow(rows(i).toSeq(schema).toArray.updated(k, i + 1L))
     }
-    // one partition, so a written result is one file, as the range path's
-    // AQE-coalesced exchange writes for an input this small
-    Some(df.sparkSession.createDataFrame(ranked.asJava, out).coalesce(1))
+    Some(DriverLoad.result(df.sparkSession, out, ranked))
   }
 
   /** Spark's own ordering of `sortCols` over rows of `df`, as its sort

@@ -1,8 +1,7 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -10,17 +9,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * dense ids for labels in their sort order, and arcs carried over to them.
   * The reference folds hosts into domains in one JVM the same way, mapping
   * arc endpoints through an in-memory array (`HostToDomainGraph.java:
-  * 330-336,471-487`).
+  * 330-336,471-487`). Both operators return their rows through
+  * [[DriverLoad.result]], names as the `UTF8String`s they were read as.
   */
 private[graft] object Relabel {
 
   /** `labels` are the distinct labels in UTF-8 byte order, label i having
     * id i; `idOf(j)` is item j's label id, -1 for an item without a label;
-    * arc k runs from `from(k)` to `to(k)`, the arcs sorted by (from, to),
-    * with no repeat and no self-loop.
+    * `arcs(k)` is arc k as `from << 32 | to`, the arcs sorted by (from,
+    * to), with no repeat and no self-loop.
     */
-  final class Result(val labels: Array[UTF8String], val idOf: Array[Int],
-                     val from: Array[Long], val to: Array[Long])
+  final class Result(val labels: Array[UTF8String], val idOf: Array[Int], arcs: Array[Long]) {
+    /** The arcs as (from_id, to_id) rows in [[EdgeSchema]], in order. */
+    def edges(spark: SparkSession): DataFrame =
+      DriverLoad.result(spark, EdgeSchema,
+        arcs.iterator.map(a => InternalRow(a >>> 32, a & 0xffffffffL)))
+  }
 
   /** Spark's string order: the UTF-8 bytes, unsigned ([[Ranks]]' sort
     * compares them so too); Java's `String` order differs on supplementary
@@ -64,19 +68,11 @@ private[graft] object Relabel {
       if (k == 0 || arcs(k) != arcs(k - 1)) { arcs(u) = arcs(k); u += 1 }
       k += 1
     }
-    new Result(distinct.result(), idOf,
-      Array.tabulate(u)(k => arcs(k) >>> 32), Array.tabulate(u)(k => arcs(k) & 0xffffffffL))
+    new Result(distinct.result(), idOf, java.util.Arrays.copyOf(arcs, u))
   }
 
   /** The edges both Spark plans return: two non-null long ids. */
   val EdgeSchema: StructType = StructType(Seq(
     StructField("from_id", LongType, nullable = false),
     StructField("to_id", LongType, nullable = false)))
-
-  /** Vertex rows as a one-partition local relation, as [[Ranks]] returns
-    * them: its exact size lets consumers broadcast it, and a written
-    * result is one file.
-    */
-  def vertexFrame(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
-    spark.createDataFrame(rows.asJava, schema).coalesce(1)
 }

@@ -1,16 +1,20 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
 
 /** The in-driver path of HyperBall, WCC and PageRank (both dangling modes)
-  * against their Spark loops, and the size decision between the two
-  * ([[DriverLoad.run]]).
+  * against their Spark loops, the size decision between the two
+  * ([[DriverLoad.run]]), and the one form of every in-driver result
+  * ([[DriverLoad.result]]).
   */
 class DriverGraphSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -140,7 +144,9 @@ class DriverGraphSpec extends AnyFunSuite {
     val arcsNonNull = arcs.toDF("from_id", "to_id")
     val arcsNullable = arcs.map { case (a, b) => (Option(a), Option(b)) }.toDF("from_id", "to_id")
     val prefNullable = (0L until 6L).map(i => (i, Option(1.0 / 6))).toDF("id", "pref")
-    for (v <- Seq(nonNull, nullable); e <- Seq(arcsNonNull, arcsNullable)) {
+    val (emptyNonNull, emptyNullable) = (nonNull.limit(0), nullable.limit(0))
+    for (v <- Seq(nonNull, nullable, emptyNonNull, emptyNullable);
+         e <- Seq(arcsNonNull, arcsNullable)) {
       assert(ConnectedComponents.weak(v, e).schema ==
         ConnectedComponents.weakSpark(v, e).schema)
       for (hops <- Seq(0, 32))
@@ -166,11 +172,14 @@ class DriverGraphSpec extends AnyFunSuite {
     assert(loaded(v, arcs, state, fits - 1).isEmpty)
   }
 
-  /** The host graph of a small SynthDocs corpus, not written: its edges are
-    * a join plan, estimated as the product of its sides.
+  private def hostLinks(): DataFrame =
+    HostGraph.hostLinks(graft.sources.SynthDocs.docs(spark, 400L, 40, 7L).toDF())
+
+  /** The host graph of a small SynthDocs corpus on the Spark plan, not
+    * written: its edges are a join plan, estimated as the product of its
+    * sides.
     */
-  private def unwrittenHostGraph(): (DataFrame, DataFrame) =
-    HostGraph.build(HostGraph.hostLinks(graft.sources.SynthDocs.docs(spark, 400L, 40, 7L).toDF()))
+  private def unwrittenHostGraph(): (DataFrame, DataFrame) = HostGraph.buildSpark(hostLinks())
 
   test("an unwritten host graph estimated over the budget loads in the driver, and equals the Spark loops") {
     spark.catalog.clearCache()
@@ -259,5 +268,68 @@ class DriverGraphSpec extends AnyFunSuite {
         assert(math.abs(x.asInstanceOf[Double] - want(id).asInstanceOf[Double]) <= 1e-15, s"id $id")
       }
     }
+  }
+
+  /** `df`'s rows as [[DriverLoad.result]] packs them: each binary row after
+    * its length.
+    */
+  private def packedBytes(df: DataFrame): BigInt =
+    df.queryExecution.executedPlan.executeCollect()
+      .map(r => r.asInstanceOf[UnsafeRow].getSizeInBytes + 4L).sum
+
+  test("every in-driver result is one leaf sized at its packed bytes, within the budget") {
+    spark.catalog.clearCache()
+    val (v, e) = HostGraph.build(hostLinks())
+    val domains = DomainGraph.fold(v, e)
+    val hc = HarmonicCentrality.hyperball(v, e)
+    val pr = PageRank.run(v, e, maxIter = 3)
+    val results = Seq("build vertices" -> v, "build edges" -> e,
+      "fold vertices" -> domains.vertices, "fold edges" -> domains.edges,
+      "fold mapping" -> domains.hostToDomain, "hyperball" -> hc,
+      "weak" -> ConnectedComponents.weak(v, e), "pagerank" -> pr,
+      "rowNumber" -> Ranks.rowNumber(v, Seq(col("rev_name").desc), "r"),
+      "joinRanks" -> Ranking.joinRanks(v, hc.join(pr, "id")))
+    val budget = DriverLoad.budget(spark)
+    for ((name, df) <- results) {
+      val leaves = df.queryExecution.optimizedPlan.collectLeaves()
+      assert(leaves.size == 1, name)
+      val bytes = packedBytes(df)
+      assert(bytes > 0, name)
+      assert(leaves.head.stats.sizeInBytes == bytes, name)
+      assert(DriverLoad.sourceBytes(df) <= budget, name)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("WCC over the build's unwritten host graph starts one load job and caches nothing") {
+    spark.catalog.clearCache()
+    val (v, e) = HostGraph.build(hostLinks())
+    var out: DataFrame = null
+    // from a job log: the build's results are sized within the budget, so
+    // the load persists neither and collects both in one job
+    val jobs = JobRecorder.during(spark) { out = ConnectedComponents.weak(v, e) }
+    assert(jobs.size == 1, jobs)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(pairs(out) == pairs(ConnectedComponents.weakSpark(v, e)))
+  }
+
+  test("a result over RowsPerSlice rows is two partitions and keeps its row order") {
+    val n = DriverLoad.RowsPerSlice + 5
+    val schema = StructType(Seq(StructField("i", LongType, nullable = false)))
+    val df = DriverLoad.result(spark, schema, Iterator.range(0, n).map(i => InternalRow(i.toLong)))
+    // per partition: its index, first and last value, row count, and
+    // whether each value follows the one before
+    val slices = df.queryExecution.toRdd.mapPartitionsWithIndex { (p, it) =>
+      var (first, last, count, ordered) = (-1L, -1L, 0L, true)
+      it.foreach { r =>
+        val x = r.getLong(0)
+        if (count == 0) first = x else ordered &&= x == last + 1
+        last = x
+        count += 1
+      }
+      Iterator.single((p, first, last, count, ordered))
+    }.collect().toSeq
+    val full = DriverLoad.RowsPerSlice.toLong
+    assert(slices == Seq((0, 0L, full - 1, full, true), (1, full, n - 1L, 5L, true)))
   }
 }
